@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from omim_spark.omim_types import PREFIX_CHAR_TO_TYPE
-from omim_spark.titles import cleanup_title_udf
+from omim_spark.titles import cleanup_title
 
 
 def _omim_type_from_char(col):
@@ -36,7 +36,7 @@ def entry_core(entries: DataFrame) -> DataFrame:
         F.lpad(e["mimNumber"].cast("string"), 6, "0").alias("mim_number"),
         _omim_type_from_char(e["prefix"]).alias("omim_type"),
         pref.alias("preferred_title"),
-        cleanup_title_udf()(F.substring_index(pref, ";", 1)).alias("label"),
+        cleanup_title(F.substring_index(pref, ";", 1)).alias("label"),
         F.when(
             pref.contains(";"), F.trim(F.substring_index(pref, ";", -1))
         ).alias("abbrev"),

@@ -2,10 +2,9 @@
 title/symbol columns ready for triple emission (reference
 main.py:288-307 orchestrating omim_entry_parser.py:316-385).
 
-Plan shape: one narrow DataFrame, five array columns, two pandas-UDF
-stages (cleanup, recapitalize) — everything else is Column
-expressions, so at scale this is a single map stage over the
-mimTitles scan (no shuffle at all).
+Plan shape: one narrow DataFrame, five array columns, all Column
+expressions (no Python), so at scale this is a single map stage over
+the mimTitles scan (no shuffle at all).
 """
 
 from __future__ import annotations
@@ -14,13 +13,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from omim_spark.titles import (
-    cleanup_title_udf,
-    cleanup_titles_array_udf,
+    cleanup_title,
     partition_former,
-    recapitalize_acronyms_array_udf,
-    recapitalize_acronyms_udf,
+    recapitalize_acronyms,
     strip_suffix_markers,
     title_symbol_pairs,
+)
+
+# (titles, symbols) array pairs besides the preferred title's
+_ARRAY_PAIRS = (
+    ("alt_titles", "alt_symbols"),
+    ("former_alt_titles", "former_alt_symbols"),
+    ("included_titles", "included_symbols"),
+    ("former_included_titles", "former_included_symbols"),
 )
 
 
@@ -34,9 +39,6 @@ def transform_entries(
     included_titles, included_symbols, former_included_titles,
     former_included_symbols.
     """
-    cleanup = cleanup_title_udf(known_capitalizations)
-    cleanup_arr = cleanup_titles_array_udf(known_capitalizations)
-
     pref_parts = F.transform(
         F.split(F.col("preferred_title"), ";"), lambda x: F.trim(x)
     )
@@ -69,55 +71,21 @@ def transform_entries(
             .withColumn(f"former_{prefix}_symbols", strip(for_s))
         )
 
-    # cleanup_title over pref + the four title arrays
-    df = (
-        df.withColumn("pref_title_clean", cleanup(F.col("pref_title_raw")))
-        .withColumn("alt_titles_clean", cleanup_arr(F.col("alt_titles_stripped")))
-        .withColumn(
-            "former_alt_titles_clean",
-            cleanup_arr(F.col("former_alt_titles_stripped")),
-        )
-        .withColumn(
-            "included_titles_clean", cleanup_arr(F.col("included_titles_stripped"))
-        )
-        .withColumn(
-            "former_included_titles_clean",
-            cleanup_arr(F.col("former_included_titles_stripped")),
-        )
-    )
+    # cleanup_title over pref + the four title arrays, then recapitalize
+    # acronyms using the union of all symbol lists (reference
+    # main.py:299-307)
+    def cleanup(col):
+        return cleanup_title(col, known_capitalizations)
 
-    # Recapitalize acronyms using the union of all symbol lists
-    # (reference main.py:299-307)
-    all_abbrevs = F.concat(
-        F.col("pref_symbols"),
-        F.col("alt_symbols"),
-        F.col("former_alt_symbols"),
-        F.col("included_symbols"),
-        F.col("former_included_symbols"),
+    def recapitalize(col):
+        return recapitalize_acronyms(col, F.col("all_abbrevs"))
+
+    df = df.withColumn("pref_title", cleanup(F.col("pref_title_raw"))).withColumn(
+        "all_abbrevs", F.concat("pref_symbols", *(s for _, s in _ARRAY_PAIRS))
     )
-    df = df.withColumn("all_abbrevs", all_abbrevs)
-    return df.select(
-        "mim_number",
-        "omim_type",
-        "replaced_by",
-        recapitalize_acronyms_udf(F.col("pref_title_clean"), F.col("all_abbrevs")).alias(
-            "pref_title"
-        ),
-        "pref_symbols",
-        recapitalize_acronyms_array_udf(
-            F.col("alt_titles_clean"), F.col("all_abbrevs")
-        ).alias("alt_titles"),
-        "alt_symbols",
-        recapitalize_acronyms_array_udf(
-            F.col("former_alt_titles_clean"), F.col("all_abbrevs")
-        ).alias("former_alt_titles"),
-        "former_alt_symbols",
-        recapitalize_acronyms_array_udf(
-            F.col("included_titles_clean"), F.col("all_abbrevs")
-        ).alias("included_titles"),
-        "included_symbols",
-        recapitalize_acronyms_array_udf(
-            F.col("former_included_titles_clean"), F.col("all_abbrevs")
-        ).alias("former_included_titles"),
-        "former_included_symbols",
-    )
+    out = ["mim_number", "omim_type", "replaced_by"]
+    out += [recapitalize(F.col("pref_title")).alias("pref_title"), "pref_symbols"]
+    for titles, symbols in _ARRAY_PAIRS:
+        df = df.withColumn(titles, F.transform(f"{titles}_stripped", cleanup))
+        out += [F.transform(titles, recapitalize).alias(titles), symbols]
+    return df.select(*out)

@@ -29,6 +29,7 @@ from omim_spark.queries import (
     pmid_mentions,
 )
 from omim_spark.operators.checkpoint import cut_lineage
+from omim_spark.session import parallelism
 
 
 @dataclass
@@ -92,26 +93,14 @@ def build_graph(
     p = lambda name: os.path.join(data_dir, name)  # noqa: E731
 
     # --- Parse sources -----------------------------------------------------
-    # The multiply-consumed parsed bases are materialized ONCE via
-    # cut_lineage (r13 optimization round): the triple emission below
-    # is a ~20-leg union, and every leg that referenced mim_titles /
-    # entries / assocs re-ran the text scan AND the parse projections
-    # per leg — the build's dominant stage re-read mimTitles.txt in
-    # FULL 17 times (event-log task census at 2000 replicas; that one
-    # stage was 526 of 614 executor-seconds).  These tables are
-    # source-proportional metadata (bounded by the OMIM entry count,
-    # never corpus-scale), so materializing them is safe at any SF,
-    # and the cut routes through the same deployment-tiered
-    # cut_lineage as every other operator.
-    # NOTE (r14, measured and rejected): hash-repartitioning mim_titles
-    # here to parallelize the single-task entries leg (§2.5 input skew)
-    # made the build ~7x SLOWER at 2000 replicas — the repartition
-    # pushes the two ArrowEvalPython title-cleanup stages onto 32
-    # concurrent tasks, and the Python-worker cold-start storm (32+
-    # fresh workers importing pandas at once in the fresh-JVM bench
-    # regime) costs 82 s cold / 13 s warm vs 2.1 s serial.  The Arrow
-    # UDF stage must stay coarse; only post-checkpoint JVM work may
-    # spread.
+    # The parsed bases are materialized ONCE via cut_lineage (r13): a
+    # base referenced by several triple-emission legs otherwise re-ran
+    # the text scan AND the parse per leg (mimTitles.txt read 17 times,
+    # 526 of 614 executor-seconds at 2000 replicas).  They are bounded
+    # by the OMIM entry count, so the cut is safe at any SF.  entries
+    # has one consumer since r14's emitter fusion, but dropping its cut
+    # measured slower (build_graph wall of fresh 200-replica builds on
+    # a 4-core host, median of 5: 20.4 s without, 19.0 s with).
     mim_titles = parse.parse_mim_titles(
         readers.read_mim_titles(spark, p("mimTitles.txt"))
     ).transform(cut_lineage, eager=False)
@@ -168,22 +157,17 @@ def build_graph(
 
     # --- Triple emission ---------------------------------------------------
     # The entries checkpoint is single-partition (the mimTitles text
-    # source reads as one split, and the Arrow-UDF cleanup must stay
-    # coarse — see the parse-section note), so the fused entry-classes
-    # explode, the heaviest emission leg, ran as ONE 3.2 s straggler
-    # task that set the 4.3 s emission-stage wall (r14 event-log
-    # census, 2000 replicas).  Repartition AFTER the checkpoint so
-    # only the JVM-side explode spreads: the exchange moves a few MB
-    # of OMIM-bounded rows, the Python boundary stays one task, and
-    # the target derives from the session's parallelism.  Interleaved
-    # full-build A/B (two rounds of 6 pairs, warm JVM): min 15.6/16.7
-    # → 13.4/15.1 s.
+    # source reads as one split), so the fused entry-classes explode,
+    # the heaviest emission leg, ran as ONE 3.2 s straggler task that
+    # set the 4.3 s emission-stage wall (r14 event-log census, 2000
+    # replicas).  Repartition AFTER the checkpoint: the exchange moves a
+    # few MB of OMIM-bounded rows and the target follows the session's
+    # parallelism.  Interleaved full-build A/B (two rounds of 6
+    # pairs, warm JVM): min 15.6/16.7 → 13.4/15.1 s.
     parts: list[DataFrame] = [
         T.ontology_header(spark, version_date),
         T.emit_entry_classes(
-            entries.repartition(
-                spark.sparkContext.defaultParallelism, "mim_number"
-            )
+            entries.repartition(parallelism(spark), "mim_number")
         ),
     ]
 
@@ -322,20 +306,16 @@ def build_graph(
         .distinct()
         .transform(cut_lineage, eager=False)
     )
-    # r14: the two INSERT rewrites are applied to the SAME base layer
-    # and unioned in one pass instead of sequentially (each former
-    # layer carried its own checkpoint materialization + a second
-    # full-graph distinct).  Equivalent by construction:
-    # add_flipped_mondo_mappings emits only skos:exactMatch triples
-    # whose object starts with "MONDO:" (the flip swaps a subject that
-    # passed a startswith("MONDO:") filter into the object slot), while
-    # add_hgnc_links pattern-matches only rdfs:subClassOf /
-    # owl:onProperty / owl:someValuesFrom predicates and exactMatch
-    # edges whose OBJECT starts with "HGNC:" — so no flipped triple can
-    # ever match an hgnc_links pattern and
-    # add_hgnc_links(base ∪ flipped) ≡ add_hgnc_links(base) for every
-    # input, not just this data.  The final distinct subsumes the
-    # per-layer ones, so the merged SET is identical (pinned by
+    # r14: the two INSERT rewrites read the SAME base layer and are
+    # unioned in one pass (before, the flipped-mappings layer added a
+    # lazy cut, without a distinct, that the hgnc layer read; the hgnc
+    # layer's distinct is the one kept here).  Equivalent by
+    # construction: add_flipped_mondo_mappings emits only
+    # skos:exactMatch triples whose object starts with "MONDO:", while
+    # add_hgnc_links matches only rdfs:subClassOf / owl:onProperty /
+    # owl:someValuesFrom predicates and exactMatch edges whose OBJECT
+    # starts with "HGNC:", so add_hgnc_links(base ∪ flipped) ≡
+    # add_hgnc_links(base) for every input (pinned by
     # tests/test_pipeline.py::test_merged_rewrite_fusion).
     merged = (
         T.union_triples(base, add_flipped_mondo_mappings(base), add_hgnc_links(base))

@@ -64,3 +64,14 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def parallelism(spark: SparkSession) -> int:
+    """Partition count for spreading work: the core count.  Spark
+    Connect has no driver-side SparkContext; there it falls back to
+    ``spark.sql.shuffle.partitions``, not used everywhere because a
+    bare session leaves it at 200."""
+    try:
+        return spark.sparkContext.defaultParallelism
+    except NotImplementedError:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))

@@ -1,12 +1,9 @@
 """Title normalization pipeline (SURVEY §2.7 T1-T8).
 
 Reference: omim2obo/parsers/omim_entry_parser.py:163-369 and
-omim2obo/utils/romanplus.py.  Everything structural (splitting,
-FORMERLY partitioning, suffix removal) is a Column expression; only
-the two genuinely procedural pieces — roman-numeral conversion inside
-``cleanup_title`` and abbreviation detection/recapitalization — are
-Python, and they run as Arrow-batched pandas UDFs (vectorized
-transfer, no per-row pickling).
+omim2obo/utils/romanplus.py.  Every step is a Column expression, so no
+Python runs in the build; the procedural ones also exist as plain
+Python (``*_py``), the readable reference and the test oracle.
 
 Fidelity notes (deliberate, documented deviations from reference
 accidents):
@@ -25,13 +22,13 @@ accidents):
 
 from __future__ import annotations
 
+import itertools
+import json
 import re
-from typing import Iterator
+import string
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType
 
 # ---------------------------------------------------------------------------
 # Roman numerals (reference omim2obo/utils/romanplus.py:38-83)
@@ -174,65 +171,108 @@ def recapitalize_acronyms_py(title: str, known_abbrevs: list[str] | None) -> str
 
 
 # ---------------------------------------------------------------------------
-# Pandas UDF wrappers (Arrow-batched — the only Python in the plan)
+# Column forms of the three cores above (parity with the *_py oracles is
+# pinned by tests/test_titles_columns.py)
 # ---------------------------------------------------------------------------
 
-
-def cleanup_title_udf(word_replacements: dict[str, str] | None = None):
-    """pandas UDF: title → cleaned title.  The replacement dict ships
-    once in the UDF closure (broadcast by Spark's task serialization),
-    not per row."""
-    replacements = dict(word_replacements or {})
-
-    @F.pandas_udf(StringType())
-    def _cleanup(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batches:
-            yield s.map(lambda t: cleanup_title_py(t, replacements))
-
-    return _cleanup
+# str.split() separators: the 29 str.isspace() characters (Java's \s
+# misses 20 of them, e.g. \xa0 and \u2003).
+_PY_WHITESPACE = (
+    r"[\t\n\x0b\x0c\r\x1c-\x1f \x{85}\x{a0}\x{1680}\x{2000}-\x{200a}"
+    r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}]+"
+)
+# Map lookup scans keys linearly; this shape test skips it for all but
+# roman candidates.
+_ROMAN_SHAPE = r"^(XC|XL|L?X{0,3})(IX|IV|V?I{0,3})[A-Z]$"
 
 
-@F.pandas_udf(StringType())
-def recapitalize_acronyms_udf(
-    titles: pd.Series, abbrevs: pd.Series
-) -> pd.Series:
-    return pd.Series(
-        [
-            recapitalize_acronyms_py(t, list(a) if a is not None else [])
-            for t, a in zip(titles, abbrevs)
-        ]
+def _roman_words() -> dict[str, str]:
+    """The roman rule as a finite table: every word ROMAN_PATTERN
+    matches with 0 < from_roman < 100 is tens + ones + one letter (an
+    M/D/C lead is >= 100), mapped to its lowercased conversion."""
+    tens = [""] + [to_roman(10 * k) for k in range(1, 10)]
+    ones = [""] + [to_roman(k) for k in range(1, 10)]
+    table = {}
+    for w in map("".join, itertools.product(tens, ones, string.ascii_uppercase)):
+        if ROMAN_PATTERN.match(w) and 0 < (n := from_roman(w)) < 100:
+            table[w] = f"{n}{w.replace(to_roman(n), '', 1)}".lower()
+    return table
+
+
+ROMAN_WORDS = _roman_words()
+
+
+def _map_lit(d: dict[str, str]) -> Column:
+    """A dict as one map literal: the optimizer folds ``from_json`` of a
+    constant string.  Literal arrays would cost the driver a py4j call
+    per entry (~0.3 s for the roman table)."""
+    return F.from_json(F.lit(json.dumps(d)), "map<string,string>")
+
+
+def _words(col: Column) -> Column:
+    return F.filter(F.split(col, _PY_WHITESPACE), lambda w: w != "")
+
+
+def cleanup_title(
+    col: Column, word_replacements: dict[str, str] | None = None
+) -> Column:
+    """:func:`cleanup_title_py` with ``case_method='lower'``, under
+    which its stop-list step is a no-op and so is left out."""
+    roman = _map_lit(ROMAN_WORDS)
+    replacements = _map_lit(word_replacements) if word_replacements else None
+
+    def fix(w: Column, i: Column) -> Column:
+        word = F.coalesce(
+            F.when((i > 0) & w.rlike(_ROMAN_SHAPE), F.try_element_at(roman, w)),
+            F.lower(w),
+        )
+        if replacements is None:
+            return word
+        return F.coalesce(F.try_element_at(replacements, word), word)
+
+    return F.array_join(F.transform(_words(col), fix), " ")
+
+
+def detect_abbreviations(col: Column) -> Column:
+    """:func:`detect_abbreviations_py` (default threshold).  Group 1 of the dotted pattern
+    is what ``re.findall`` returns; no words gives a null share, so no
+    bare acronyms (there are none to find anyway)."""
+    words = _words(col)
+    share = F.try_divide(
+        F.size(F.filter(words, lambda w: F.upper(w) == w)), F.size(words)
+    )
+
+    def findall(pattern: re.Pattern, group: int) -> Column:
+        return F.regexp_extract_all(col, F.lit(pattern.pattern), F.lit(group))
+
+    return F.concat(
+        findall(_ACRONYM_WITH_PERIODS, 1),
+        F.when(share < 0.75, findall(_ACRONYM_NO_PERIODS, 0))
+        .otherwise(F.array().cast("array<string>")),
+        findall(_TITLE_CASED_ABBREV, 0),
     )
 
 
-def cleanup_titles_array_udf(word_replacements: dict[str, str] | None = None):
-    """pandas UDF over array<string>: clean every title in the array."""
-    replacements = dict(word_replacements or {})
+def recapitalize_acronyms(col: Column, known_abbrevs: Column) -> Column:
+    """:func:`recapitalize_acronyms_py`: a word becomes the smallest
+    candidate (code-point order, as ``sorted``) whose lowercase equals
+    it; no candidates leaves the title untouched."""
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def _cleanup_arr(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batches:
-            yield s.map(
-                lambda arr: None
-                if arr is None
-                else [cleanup_title_py(t, replacements) for t in arr]
-            )
-
-    return _cleanup_arr
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def recapitalize_acronyms_array_udf(
-    titles: pd.Series, abbrevs: pd.Series
-) -> pd.Series:
-    out = []
-    for arr, ab in zip(titles, abbrevs):
-        ab_list = list(ab) if ab is not None else []
-        out.append(
-            None
-            if arr is None
-            else [recapitalize_acronyms_py(t, ab_list) for t in arr]
+    def recase(abbrevs: Column) -> Column:
+        words = F.transform(
+            _words(col),
+            lambda w: F.coalesce(
+                F.array_min(F.filter(abbrevs, lambda a: F.lower(a) == w)), w
+            ),
         )
-    return pd.Series(out)
+        return F.when(F.size(abbrevs) == 0, col).otherwise(F.array_join(words, " "))
+
+    # The candidates are bound to a lambda variable so they are computed
+    # once per title; an outer expression read inside the word lambda
+    # would be re-evaluated per word.
+    known = F.coalesce(known_abbrevs, F.array().cast("array<string>"))
+    candidates = F.concat(known, detect_abbreviations(col))
+    return F.transform(F.array(candidates), recase)[0]
 
 
 # ---------------------------------------------------------------------------

@@ -55,6 +55,11 @@ from . import maintenance  # noqa: E402,F401
 # - 13 changed-closure slots below; the 37 fill slots rotate to the
 #   longest-unverified queries (the r10 greens) mechanically.
 _VERIFY_FIRST = [
+    # CHANGED: title normalization is Column expressions, not pandas
+    # UDFs (titles.py).  Oracle hash-match at sf0.001/0.01/0.1.
+    "q_omim_title_cleanup",
+    "q_omim_transform_entries",
+    "q_omim_api_entry_parse",
     # CHANGED in round 14: the five consumers of the fused
     # triple-emission legs (triples.py: emit_entry_classes 11-leg →
     # 1-explode, emit_restriction_with_evidence 3 → 1,

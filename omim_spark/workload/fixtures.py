@@ -33,7 +33,6 @@ oracle as a VALUES CTE, so the driver's hash compare covers real rows.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -654,39 +653,33 @@ def q_omim_title_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     interior stop-words, dictionary replacement, abbreviation
     detection with the 75% caps threshold and the dotted-acronym
     findall-group quirk, recapitalization by known+detected
-    abbreviations) under the gate, via the SAME Arrow-batched pandas
-    UDFs production uses (entries.transform_entries), composed in the
+    abbreviations) under the gate, via the SAME Column functions
+    production uses (entries.transform_entries), composed in the
     production order strip_suffix_markers → cleanup_title →
     recapitalize_acronyms.  The oracle pins reference-golden constants
     (parity with the reference source is separately byte-asserted by
     test_titles_reference_parity.py, which execs the reference's own
     functions)."""
     from omim_spark.titles import (
-        cleanup_title_udf,
-        detect_abbreviations_py,
-        recapitalize_acronyms_udf,
+        cleanup_title,
+        detect_abbreviations,
+        recapitalize_acronyms,
         strip_suffix_markers,
     )
-
-    @F.pandas_udf("string")
-    def detect_joined(labels: pd.Series) -> pd.Series:
-        # Gate plumbing only: exposes the production detection core
-        # (detect_abbreviations_py — the same function recapitalize
-        # unions with known abbrevs) as a hashable '|'-joined column.
-        return labels.map(
-            lambda t: None if t is None else "|".join(detect_abbreviations_py(t))
-        )
 
     raw = spark.createDataFrame(
         _TITLE_CLEANUP_ROWS, "id long, title string, abbrevs array<string>"
     )
-    cleanup = cleanup_title_udf(_TITLE_CLEANUP_REPLACEMENTS)
-    cleaned = cleanup(strip_suffix_markers(F.col("title")))
-    return raw.select(
+    cleaned = raw.withColumn(
+        "title_clean",
+        cleanup_title(strip_suffix_markers(raw.title), _TITLE_CLEANUP_REPLACEMENTS),
+    )
+    return cleaned.select(
         "id",
-        cleaned.alias("title_clean"),
-        recapitalize_acronyms_udf(cleaned, F.col("abbrevs")).alias("title_final"),
-        detect_joined(F.col("title")).alias("abbrevs"),
+        "title_clean",
+        recapitalize_acronyms(cleaned.title_clean, cleaned.abbrevs).alias("title_final"),
+        # the detection core recapitalize unions with the known abbrevs
+        F.array_join(detect_abbreviations(raw.title), "|").alias("abbrevs"),
     ).orderBy("id")
 
 

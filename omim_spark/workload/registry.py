@@ -16,6 +16,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from omim_spark.session import parallelism
+
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 
@@ -148,11 +150,10 @@ def spread(
     NO-OP at scale: any real multi-file / multi-row-group table (a
     100 TB fact table has millions of row groups) already parallelizes,
     so no exchange is added and the plan is unchanged.  The target
-    count derives from ``defaultParallelism``, not a constant, so the
-    driver's lower-core bench runs get proportionally fewer
-    partitions."""
-    spark = df.sparkSession
-    p = spark.sparkContext.defaultParallelism
+    count derives from :func:`omim_spark.session.parallelism`, not a
+    constant, so the driver's lower-core bench runs get
+    proportionally fewer partitions."""
+    p = parallelism(df.sparkSession)
     if scan_units(f"{sf_dir}/{name}.parquet") * 2 >= p:
         return df
     return df.repartition(p, *keys)

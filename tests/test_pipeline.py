@@ -408,3 +408,16 @@ class TestDeterministicTtl:
         single = tmp_path / "single.ttl"
         write_ttl(r.triples, str(single))
         assert out.read_bytes() + body == single.read_bytes()
+
+
+def test_build_without_spark_context(spark, omim_data_dir, tset, monkeypatch):
+    """A session with no driver-side SparkContext (Spark Connect) must
+    build the same graph: partition counts fall back to session conf."""
+    from pyspark.sql import SparkSession
+
+    def no_context(self):
+        raise NotImplementedError("no SparkContext on this session")
+
+    monkeypatch.setattr(SparkSession, "sparkContext", property(no_context))
+    r = build_graph(spark, omim_data_dir, version_date="2026-01-01")
+    assert {(t.subject, t.predicate, t.object) for t in r.triples.collect()} == tset

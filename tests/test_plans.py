@@ -74,3 +74,22 @@ def test_plan_sweep_no_flags_on_synthesized_corpus(spark, tmp_path_factory):
         # r13: the hot-shingle capfire sibling — 6 inline docs
         "q_dedup_lsh_capfire",
     }, unknown
+
+
+def test_spread_without_spark_context(spark, monkeypatch):
+    """With no driver-side SparkContext (Spark Connect), spread() sizes
+    its repartition from the session's shuffle partitions."""
+    import re
+
+    from pyspark.sql import SparkSession
+
+    from omim_spark.workload.registry import table_spread
+
+    def no_context(self):
+        raise NotImplementedError("no SparkContext on this session")
+
+    monkeypatch.setattr(SparkSession, "sparkContext", property(no_context))
+    df = table_spread(spark, SF_DIR, "orders", "o_orderkey")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert re.search(rf"hashpartitioning\(o_orderkey#\d+L?, {parts}\)", plan), plan

@@ -400,21 +400,23 @@ AUDITS: dict[str, dict] = {
         ],
     },
     "q_omim_title_cleanup": {
-        # the ONLY Python in the title pipeline is the two Arrow-
-        # batched pandas UDFs (cleanup + recapitalize) and the gate's
-        # detect column — never row-at-a-time BatchEvalPython, never
-        # a join
-        "require": ["ArrowEvalPython"],
-        "forbid": ["CartesianProduct", "Join", "BatchEvalPython"],
+        # cleanup / detect / recapitalize are Column expressions
+        # (higher-order array functions over the split words) — no
+        # Python node of any kind, never a join
+        "forbid": [
+            "CartesianProduct", "Join",
+            "MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+        ],
     },
     "q_omim_transform_entries": {
         # the full entries stage is ONE map stage (docstring contract
-        # of entries.transform_entries): Arrow-batched pandas UDFs for
-        # cleanup/recapitalize, column expressions for everything
-        # else — no joins, no shuffles beyond the final tiny sort, no
-        # row-at-a-time Python
-        "require": ["ArrowEvalPython"],
-        "forbid": ["CartesianProduct", "Join", "BatchEvalPython"],
+        # of entries.transform_entries): Column expressions throughout,
+        # title cleanup and recapitalization included — no joins, no
+        # shuffles beyond the final tiny sort, no Python
+        "forbid": [
+            "CartesianProduct", "Join",
+            "MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+        ],
     },
     "q_omim_entry_classes": {
         # type-conditional emission is a union of expression
