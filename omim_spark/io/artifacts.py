@@ -21,7 +21,7 @@ chain (makefile:41-58):
 
 Scale: both artifacts derive from the triples DataFrame with joins on
 the subject key only; serialization streams ordered partitions through
-the driver in bounded memory (same contract as write_ttl/write_tsv).
+the driver in bounded memory (same contract as write_tsv).
 Output is byte-deterministic: every row stream is totally ordered and
 blank-node ids are already deterministic md5 (triples.py:59-69).
 """
@@ -324,7 +324,7 @@ def write_obograph_json(
     """Stream the obographs document to ``path``: nodes ordered by id,
     edges ordered by (sub, pred, obj) — byte-deterministic across runs
     and partitionings, bounded driver memory (one partition at a time
-    through ``toLocalIterator``, same contract as write_ttl)."""
+    through ``toLocalIterator``, same contract as write_tsv)."""
     nodes = obograph_nodes(triples).orderBy("id").select("json")
     edges = obograph_edges(triples).orderBy("sub", "pred", "obj").select("json")
     with open(path, "w") as f:

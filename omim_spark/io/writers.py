@@ -12,6 +12,7 @@ partitioned cluster executions — produce byte-identical files.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -99,112 +100,24 @@ def _ttl_header() -> str:
     return "\n".join(header) + "\n\n"
 
 
-# Above this many triples, write_ttl (in auto mode) routes through
-# the sharded writer.  The r13 interleaved crossover measurement
-# (same checkpointed triples, min-of-3 per size, outputs verified
-# byte-identical at every size) put the break-even near 100k rows:
-# driver 0.60 s vs sharded 0.77 s at 50k, driver 1.58 vs sharded
-# 1.27 at 150k, 3.84 vs 2.85 at 400k, and 6.05 vs 0.92 at the
-# pipeline bench's 736k — the toLocalIterator relay is a serial
-# driver loop whose cost is linear in rows (r10 probe: its share
-# grew 35% -> 59% from 7.3M -> 73M triples), while the sharded
-# path's shuffle+concat overhead is a near-constant floor.
-TTL_SHARDED_THRESHOLD = 100_000
-
-# Deployment tier for the TTL sink (r12 verdict #5), mirroring
-# spark.omim.checkpoint.mode: one conf flips the writer instead of
-# editing call sites.
-# - auto (default): count the triples once and dispatch on
-#   TTL_SHARDED_THRESHOLD — small sets stream through the driver,
-#   large ones go sharded.
-# - driver: force the toLocalIterator path (skips the sizing count —
-#   for callers that KNOW the output is small).
-# - sharded: force the distributed shards + driver bulk concat (still
-#   one output file; skips the sizing count).
-# - sharded_keep: fully distributed — executors write range shards +
-#   a manifest, NO driver concat at all.  The 100 TB form: the driver
-#   never touches the bytes; downstream consumers read the manifest.
-TTL_WRITER_CONF = "spark.omim.ttl.writer"
-_TTL_WRITER_MODES = ("auto", "driver", "sharded", "sharded_keep")
-
-
-def _exceeds(df: DataFrame, threshold: int) -> bool:
-    """Does ``df`` have more than ``threshold`` rows — WITHOUT a full
-    count.  ``df.count()`` executes the entire input plan; for the
-    pipeline's ~20-leg emission union that sizing count re-ran the
-    whole build inside the timed write (r13 verdict).  A LIMIT
-    threshold+1 on a constant projection instead short-circuits: Spark
-    executes partitions incrementally until the limit fills, so a
-    large input answers from its first partitions and a small input
-    costs no more than its own (small) full scan.  The projection to a
-    literal prunes every column below the limit."""
-    probe = df.select(F.lit(1).alias("one")).limit(threshold + 1).count()
-    return probe > threshold
+# Range partitions of the TTL body, one text shard each.
+TTL_SHARDS = 16
 
 
 def write_ttl(
     triples: DataFrame, path: str, assume_distinct: bool = False
 ) -> None:
-    """Serialize to a single Turtle file, dispatching on the
-    ``spark.omim.ttl.writer`` conf (default ``auto``: size-thresholded
-    — small triple sets stream through the driver via
-    ``toLocalIterator``, one partition at a time with bounded driver
-    memory; anything past ``TTL_SHARDED_THRESHOLD`` rows routes
-    through :func:`write_ttl_sharded`, whose executor-written range
-    shards + bulk byte concat remove the row-at-a-time driver relay
-    entirely).  ``driver``/``sharded`` force a path without the sizing
-    count; ``sharded_keep`` skips even the driver concat (shards +
-    manifest only).  The single-file paths emit byte-identical files
-    (test_writers.py pins it), so a naive caller gets the scale path
-    automatically."""
-    mode = triples.sparkSession.conf.get(TTL_WRITER_CONF, "auto")
-    if mode not in _TTL_WRITER_MODES:
-        raise ValueError(
-            f"{TTL_WRITER_CONF}={mode!r}: expected one of {_TTL_WRITER_MODES}"
-        )
-    if mode == "sharded_keep":
-        write_ttl_sharded(
-            triples, path, keep_shards=True, assume_distinct=assume_distinct
-        )
-        return
-    if mode == "sharded" or (mode == "auto" and _exceeds(triples, TTL_SHARDED_THRESHOLD)):
-        write_ttl_sharded(triples, path, assume_distinct=assume_distinct)
-        return
+    """Serialize to a single Turtle file.
+
+    The body is range-partitioned on the sort key, every executor sorts
+    its own range and writes it as a text shard, and the driver
+    concatenates the header and the shards in range order with a bulk
+    byte copy.  Ranges are ordered and each is sorted, so the file is
+    in total order for any shard count — no single-task global sort,
+    no row-at-a-time driver loop."""
     body = (
         ttl_lines(triples, assume_distinct=assume_distinct)
-        .orderBy("sort_key", "line")
-        .select("line")
-    )
-    with open(path, "w") as f:
-        f.write(_ttl_header())
-        for r in body.toLocalIterator():
-            f.write(r.line + "\n")
-
-
-def write_ttl_sharded(
-    triples: DataFrame,
-    path: str,
-    shards: int = 16,
-    keep_shards: bool = False,
-    assume_distinct: bool = False,
-) -> None:
-    """Distributed Turtle sink — the 100 TB shape of :func:`write_ttl`.
-
-    The ordered body is range-partitioned on the sort key
-    (``repartitionByRange`` + ``sortWithinPartitions`` = a total order
-    ACROSS part files, each sorted by its own executor — no single-task
-    global sort, no row-at-a-time driver iterator), every executor
-    writes its own text shard, and the driver then concatenates the
-    shards in range order with a bulk byte copy.  Output is
-    byte-identical to :func:`write_ttl`.
-
-    With ``keep_shards=True`` the part files stay on disk next to a
-    ``manifest.txt`` listing them in range order, and the driver concat
-    is skipped entirely — the fully distributed form for a downstream
-    consumer that can read a sharded artifact."""
-    body = (
-        ttl_lines(triples, assume_distinct=assume_distinct)
-        .repartitionByRange(shards, "sort_key")
+        .repartitionByRange(TTL_SHARDS, "sort_key")
         .sortWithinPartitions("sort_key", "line")
         .select("line")
     )
@@ -215,14 +128,6 @@ def write_ttl_sharded(
         for f in os.listdir(shard_dir)
         if f.startswith("part-") and not f.endswith(".crc")
     )
-    if keep_shards:
-        with open(os.path.join(shard_dir, "manifest.txt"), "w") as m:
-            m.write("\n".join(parts) + "\n")
-        with open(path, "w") as f:
-            f.write(_ttl_header())
-        return
-    import shutil
-
     with open(path, "wb") as f:
         f.write(_ttl_header().encode())
         for p in parts:
@@ -267,15 +172,3 @@ def write_csv(df: DataFrame, path: str, order_by: list[str]) -> None:
         f.write(",".join(cell(c) for c in cols) + "\n")
         for r in df.orderBy(*order_by).toLocalIterator():
             f.write(",".join(cell(v) for v in r) + "\n")
-
-
-def write_parquet_sorted(df: DataFrame, path: str, order_by: list[str]) -> None:
-    """Cache/report sink for big outputs: distributed parquet write,
-    sorted within partitions for scan locality."""
-    df.repartition(1).sortWithinPartitions(*order_by).write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
-def ensure_dir(path: str) -> None:
-    os.makedirs(path, exist_ok=True)

@@ -1003,8 +1003,8 @@ def q_omim_transform_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ttl_lines (io/writers.py) is a pure projection — escaping, term
 # rendering, bnode detection, predicate ordering, dedup — so the
 # oracle can rebuild every byte in SQL.  write_ttl's FILE plumbing
-# (header, relay-vs-sharded dispatch, byte-identity of both paths)
-# stays pytest-pinned in test_writers.py / test_pipeline.py.
+# (header, range shards, byte-identity across shard counts) stays
+# pytest-pinned in test_pipeline.py.
 # ---------------------------------------------------------------------------
 
 _BNODE_ID = "abcdef0123456789abcdef0123456789"

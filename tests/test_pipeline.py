@@ -244,170 +244,51 @@ class TestQueries:
 
 
 class TestDeterministicTtl:
-    def test_byte_identical_across_builds(self, spark, omim_data_dir, tmp_path):
-        r1 = build_graph(spark, omim_data_dir, version_date="2026-01-01")
-        r2 = build_graph(spark, omim_data_dir, version_date="2026-01-01")
+    def test_byte_identical_across_builds(
+        self, spark, omim_data_dir, build, tmp_path
+    ):
+        again = build_graph(spark, omim_data_dir, version_date="2026-01-01")
         p1, p2 = tmp_path / "a.ttl", tmp_path / "b.ttl"
-        write_ttl(r1.triples, str(p1))
-        write_ttl(r2.triples, str(p2))
+        write_ttl(build.triples, str(p1))
+        write_ttl(again.triples, str(p2))
         c1, c2 = p1.read_text(), p2.read_text()
         assert c1 == c2
         assert c1.startswith("@prefix")
         assert "OMIM:100100" in c1
 
-    def test_sharded_writer_byte_identical(self, spark, omim_data_dir, tmp_path):
-        from omim_spark.io.writers import write_ttl_sharded
+    def test_sharded_writer_byte_identical(self, build, tmp_path, monkeypatch):
+        # One range shard is a single global sort: the reference every
+        # wider range split must reproduce byte for byte.
+        import omim_spark.io.writers as W
 
-        r = build_graph(spark, omim_data_dir, version_date="2026-01-01")
-        single, sharded = tmp_path / "single.ttl", tmp_path / "sharded.ttl"
-        write_ttl(r.triples, str(single))
+        outs = {}
         for shards in (1, 4, 16):
-            write_ttl_sharded(r.triples, str(sharded), shards=shards)
-            assert sharded.read_bytes() == single.read_bytes(), shards
+            monkeypatch.setattr(W, "TTL_SHARDS", shards)
+            out = tmp_path / f"s{shards}.ttl"
+            write_ttl(build.triples, str(out))
+            outs[shards] = out.read_bytes()
+            assert not (tmp_path / f"s{shards}.ttl.shards").exists()
+        assert outs[4] == outs[1]
+        assert outs[16] == outs[1]
 
-    def test_size_dispatch_routes_large_sets_sharded(
-        self, spark, omim_data_dir, tmp_path, monkeypatch
-    ):
-        # Force the dispatch threshold to 0 so THIS fixture takes the
-        # sharded route through the write_ttl front door — the file a
-        # naive caller gets at scale must be byte-identical to the
-        # small-data path's.
-        import omim_spark.io.writers as W
+    def test_empty_triples_write_header_only(self, build, tmp_path):
+        from omim_spark.io.writers import _ttl_header
 
-        r = build_graph(spark, omim_data_dir, version_date="2026-01-01")
-        small, big = tmp_path / "small.ttl", tmp_path / "big.ttl"
-        write_ttl(r.triples, str(small))
-        monkeypatch.setattr(W, "TTL_SHARDED_THRESHOLD", 0)
-        W.write_ttl(r.triples, str(big))
-        assert big.read_bytes() == small.read_bytes()
-        # the sharded route really ran (its scratch dir was created and
-        # cleaned next to the output)
-        assert not (tmp_path / "big.ttl.shards").exists()
+        out = tmp_path / "empty.ttl"
+        write_ttl(build.triples.where(F.lit(False)), str(out))
+        assert out.read_text() == _ttl_header()
+        assert not (tmp_path / "empty.ttl.shards").exists()
 
-    def test_ttl_writer_conf_tiers(self, spark, omim_data_dir, tmp_path):
-        # spark.omim.ttl.writer (r12 verdict #5): one conf flips the
-        # sink tier — driver / sharded forced paths are byte-identical
-        # to auto; sharded_keep skips the driver concat entirely
-        # (header file + manifest shards only); invalid modes fail
-        # loudly.
-        import pytest
-
-        from omim_spark.io.writers import TTL_WRITER_CONF
-
-        r = build_graph(spark, omim_data_dir, version_date="2026-01-01")
-        auto = tmp_path / "auto.ttl"
-        write_ttl(r.triples, str(auto))
-        try:
-            for mode in ("driver", "sharded"):
-                spark.conf.set(TTL_WRITER_CONF, mode)
-                out = tmp_path / f"{mode}.ttl"
-                write_ttl(r.triples, str(out))
-                assert out.read_bytes() == auto.read_bytes(), mode
-            spark.conf.set(TTL_WRITER_CONF, "sharded_keep")
-            kept = tmp_path / "kept.ttl"
-            write_ttl(r.triples, str(kept))
-            manifest = tmp_path / "kept.ttl.shards" / "manifest.txt"
-            assert manifest.exists()
-            parts = manifest.read_text().strip().split("\n")
-            body = b"".join(
-                (tmp_path / "kept.ttl.shards" / p).read_bytes()
-                for p in parts
-            )
-            assert kept.read_bytes() + body == auto.read_bytes()
-            spark.conf.set(TTL_WRITER_CONF, "bogus")
-            with pytest.raises(ValueError, match=TTL_WRITER_CONF):
-                write_ttl(r.triples, str(tmp_path / "bogus.ttl"))
-        finally:
-            spark.conf.unset(TTL_WRITER_CONF)
-
-    def test_auto_threshold_covers_bench_scale(self, spark, tmp_path):
-        # r13 crossover measurement (same checkpointed triples,
-        # min-of-3 interleaved, byte-identical outputs): the driver
-        # toLocalIterator relay wins only below ~100k rows (0.60 s vs
-        # 0.77 s at 50k) and loses from 150k up (1.58 vs 1.27 at
-        # 150k; 6.05 vs 0.92 at the 736k pipeline-bench size).  Pin
-        # that auto mode routes a >threshold synthetic set through
-        # the sharded path, so bench-scale writes never take the
-        # serial driver loop again.
-        import omim_spark.io.writers as W
-
-        n = W.TTL_SHARDED_THRESHOLD + 1
-        assert n <= 150_000, (
-            "threshold raised past the measured 150k crossover point"
-        )
-        triples = (
-            spark.range(n)
-            .selectExpr(
-                "concat('OMIM:', id) as subject",
-                "'rdfs:label' as predicate",
-                "concat('t', id) as object",
-                "'literal' as obj_kind",
-                "cast(null as string) as datatype",
-            )
-        )
-        out = tmp_path / "auto_big.ttl"
-        took_sharded = []
-        orig = W.write_ttl_sharded
-        W.write_ttl_sharded = lambda *a, **k: (
-            took_sharded.append(True),
-            orig(*a, **k),
-        )
-        try:
-            write_ttl(triples, str(out))
-        finally:
-            W.write_ttl_sharded = orig
-        assert took_sharded, "auto mode took the driver path at >threshold"
-        text = out.read_text()
-        assert text.startswith("@prefix")
-        assert text.count("\n") > n  # header + one line per triple
-
-    def test_assume_distinct_byte_identical(
-        self, spark, omim_data_dir, tmp_path
-    ):
+    def test_assume_distinct_byte_identical(self, build, tmp_path):
         # r14: build_graph's triples are .distinct()-ed before their
         # lineage cut, so the bench/CLI write path passes
         # assume_distinct=True to skip the writer's redundant dedup
         # exchange.  Pin that the flag changes the PLAN only, never
-        # the bytes, on both single-file paths.
-        from omim_spark.io.writers import write_ttl_sharded
-
-        r = build_graph(spark, omim_data_dir, version_date="2026-01-01")
+        # the bytes.
         base, fast = tmp_path / "base.ttl", tmp_path / "fast.ttl"
-        write_ttl(r.triples, str(base))
-        write_ttl(r.triples, str(fast), assume_distinct=True)
+        write_ttl(build.triples, str(base))
+        write_ttl(build.triples, str(fast), assume_distinct=True)
         assert fast.read_bytes() == base.read_bytes()
-        sh_fast = tmp_path / "sh_fast.ttl"
-        write_ttl_sharded(r.triples, str(sh_fast), assume_distinct=True)
-        assert sh_fast.read_bytes() == base.read_bytes()
-
-    def test_auto_dispatch_probe_is_bounded(self, spark):
-        # r14 (r13 verdict #2): auto mode's sizing probe must not
-        # execute a full count of the input plan — it answers "more
-        # than threshold rows?" through a LIMIT threshold+1 probe.
-        # Pin the boundary semantics on exact row counts.
-        from omim_spark.io.writers import _exceeds
-
-        assert not _exceeds(spark.range(10), 10)
-        assert _exceeds(spark.range(11), 10)
-        assert not _exceeds(spark.range(0), 10)
-
-    def test_sharded_writer_manifest_mode(self, spark, omim_data_dir, tmp_path):
-        from omim_spark.io.writers import write_ttl_sharded
-
-        r = build_graph(spark, omim_data_dir, version_date="2026-01-01")
-        out = tmp_path / "out.ttl"
-        write_ttl_sharded(r.triples, str(out), shards=4, keep_shards=True)
-        shard_dir = str(out) + ".shards"
-        manifest = (tmp_path / "out.ttl.shards" / "manifest.txt").read_text()
-        parts = manifest.strip().split("\n")
-        assert len(parts) == 4
-        # header file + shards in manifest order reassemble the artifact
-        body = b"".join(
-            open(f"{shard_dir}/{p}", "rb").read() for p in parts
-        )
-        single = tmp_path / "single.ttl"
-        write_ttl(r.triples, str(single))
-        assert out.read_bytes() + body == single.read_bytes()
 
 
 def test_build_without_spark_context(spark, omim_data_dir, tset, monkeypatch):

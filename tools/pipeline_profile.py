@@ -60,59 +60,10 @@ def main() -> None:
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
-    stage_in_run: set[int] = set()
-    stage_agg: dict[int, dict] = {}
-    stage_name: dict[int, str] = {}
-    stage_wall: dict[int, float] = {}
-    ev_files = []
-    for root, _dirs, files in os.walk(EVDIR):
-        ev_files.extend(
-            os.path.join(root, f) for f in files if "appstatus" not in f
-        )
-    for path in ev_files:
-        with open(path) as f:
-            for line in f:
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                et = ev.get("Event")
-                if et == "SparkListenerJobStart":
-                    desc = ev.get("Properties", {}).get(
-                        "spark.job.description", ""
-                    )
-                    if desc == f"{label}#run0":
-                        stage_in_run.update(ev.get("Stage IDs", []))
-                        for si in ev.get("Stage Infos", []):
-                            stage_name[si["Stage ID"]] = si.get("Stage Name", "")
-                elif et == "SparkListenerStageCompleted":
-                    si = ev.get("Stage Info", {})
-                    sub = si.get("Submission Time")
-                    comp = si.get("Completion Time")
-                    if sub and comp:
-                        stage_wall[si["Stage ID"]] = (comp - sub) / 1000.0
-                elif et == "SparkListenerTaskEnd":
-                    sid = ev["Stage ID"]
-                    m = ev.get("Task Metrics") or {}
-                    a = stage_agg.setdefault(
-                        sid, {"run_ms": 0, "sh_write": 0, "input": 0, "tasks": 0}
-                    )
-                    a["run_ms"] += m.get("Executor Run Time", 0)
-                    a["tasks"] += 1
-                    a["sh_write"] += (
-                        m.get("Shuffle Write Metrics") or {}
-                    ).get("Shuffle Bytes Written", 0)
-                    a["input"] += (m.get("Input Metrics") or {}).get(
-                        "Bytes Read", 0
-                    )
+    from tools.event_census import stage_census
 
-    rows = [
-        (agg["run_ms"], sid, agg["tasks"], agg["sh_write"], agg["input"])
-        for sid, agg in stage_agg.items()
-        if sid in stage_in_run
-    ]
-    total_ms = sum(r[0] for r in rows)
-    total_tasks = sum(r[2] for r in rows)
+    stages = stage_census(EVDIR).get(f"{label}#run0", {})
+    run_ms = sum(st["run_ms"] for st in stages.values())
     print(
         json.dumps(
             {
@@ -121,24 +72,25 @@ def main() -> None:
                 "wall_s": round(wall, 2),
                 "write_s": round(write_s, 2),
                 "triples": n,
-                "exec_s": round(total_ms / 1000, 1),
-                "stages": len(rows),
-                "tasks": total_tasks,
+                "exec_s": round(run_ms / 1000, 1),
+                "stages": len(stages),
+                "tasks": sum(st["tasks"] for st in stages.values()),
                 # Sum of per-stage walls vs the build wall: the gap is
                 # driver-side time (planning, scheduling, checkpoint
                 # barriers) that no stage accounts for (guide §7.3).
                 "stage_wall_s": round(
-                    sum(stage_wall.get(r[1], 0.0) for r in rows), 1
+                    sum(st["wall_s"] for st in stages.values()), 1
                 ),
             }
         )
     )
-    for run_ms, sid, tasks, shw, inp in sorted(rows, reverse=True)[:10]:
+    top = sorted(stages.items(), key=lambda kv: kv[1]["run_ms"], reverse=True)
+    for sid, st in top[:10]:
         print(
-            f"    stage {sid}: {run_ms / 1000:.1f}s exec, "
-            f"{stage_wall.get(sid, 0.0):.1f}s wall, {tasks} tasks, "
-            f"shW {shw / 1e6:.1f}MB, in {inp / 1e6:.1f}MB  "
-            f"{stage_name.get(sid, '')[:70]}"
+            f"    stage {sid}: {st['run_ms'] / 1000:.1f}s exec, "
+            f"{st['wall_s']:.1f}s wall, {st['tasks']} tasks, "
+            f"shW {st['sh_write'] / 1e6:.1f}MB, in {st['input'] / 1e6:.1f}MB  "
+            f"{st['name'][:70]}"
         )
 
 

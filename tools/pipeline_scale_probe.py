@@ -16,13 +16,7 @@ entries grow.
 
 At the default schedule each step is 10× the previous, so the printed
 exponent log10(t_next/t_prev) reads directly: ~0 = fixed overhead
-dominates, ~1 = linear, >1 = a scale bug.  The top step pushes the
-triple count past TTL_SHARDED_THRESHOLD when run with replicas
-≥ ~500 (threshold 100k since the r13 crossover measurement), so the
-run demonstrates the writer's automatic dispatch
-from the toLocalIterator relay to the executor-sharded sink — the
-exact bottleneck VERDICT r8 flagged as worth measuring
-(io/writers.py:119).
+dominates, ~1 = linear, >1 = a scale bug.
 
 Usage: python tools/pipeline_scale_probe.py [R1,R2,...]   (default 20,200,2000)
 """

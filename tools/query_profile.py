@@ -13,7 +13,6 @@ Env:   SPARK_GRAFT_PROFILE_RUNS (default 3)
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
@@ -72,80 +71,28 @@ def main() -> None:
 
     spark.stop()
 
-    # Attribute from the event log: map job description -> stages ->
-    # (executor run time, shuffle read/write bytes, tasks).
-    stage_to_label: dict[int, str] = {}
-    stage_agg: dict[int, dict] = {}
-    stage_name: dict[int, str] = {}
-    ev_files = []
-    for root, _dirs, files in os.walk(EVDIR):
-        ev_files.extend(
-            os.path.join(root, f) for f in files if "appstatus" not in f
-        )
-    for path in ev_files:
-        with open(path) as f:
-            for line in f:
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                et = ev.get("Event")
-                if et == "SparkListenerJobStart":
-                    label = ev.get("Properties", {}).get(
-                        "spark.job.description", ""
-                    )
-                    for sid in ev.get("Stage IDs", []):
-                        stage_to_label[sid] = label
-                    for si in ev.get("Stage Infos", []):
-                        stage_name[si["Stage ID"]] = si.get("Stage Name", "")
-                elif et == "SparkListenerTaskEnd":
-                    sid = ev["Stage ID"]
-                    m = ev.get("Task Metrics") or {}
-                    a = stage_agg.setdefault(
-                        sid,
-                        {"run_ms": 0, "sh_read": 0, "sh_write": 0, "tasks": 0,
-                         "gc_ms": 0, "input": 0},
-                    )
-                    a["run_ms"] += m.get("Executor Run Time", 0)
-                    a["gc_ms"] += m.get("JVM GC Time", 0)
-                    a["tasks"] += 1
-                    a["sh_read"] += (m.get("Shuffle Read Metrics") or {}).get(
-                        "Remote Bytes Read", 0
-                    ) + (m.get("Shuffle Read Metrics") or {}).get(
-                        "Local Bytes Read", 0
-                    )
-                    a["sh_write"] += (
-                        m.get("Shuffle Write Metrics") or {}
-                    ).get("Shuffle Bytes Written", 0)
-                    a["input"] += (m.get("Input Metrics") or {}).get(
-                        "Bytes Read", 0
-                    )
+    # Attribute from the event log, run 0 only (steady-state
+    # post-warmup): job description -> stages -> (executor run time,
+    # shuffle bytes, tasks).
+    from tools.event_census import stage_census
 
     per_label: dict[str, dict] = {}
-    for sid, agg in stage_agg.items():
-        label = stage_to_label.get(sid, "?")
-        if "#run" not in label:
+    for label, stages in stage_census(EVDIR).items():
+        qname, sep, run = label.rpartition("#run")
+        if not sep or run != "0":
             continue
-        qname, run = label.rsplit("#run", 1)
-        if run != "0":  # attribute run 0 only (steady-state post-warmup)
-            continue
-        d = per_label.setdefault(
-            qname,
-            {"stages": 0, "tasks": 0, "run_ms": 0, "gc_ms": 0,
-             "sh_read_mb": 0.0, "sh_write_mb": 0.0, "input_mb": 0.0,
-             "top_stages": []},
-        )
-        d["stages"] += 1
-        d["tasks"] += agg["tasks"]
-        d["run_ms"] += agg["run_ms"]
-        d["gc_ms"] += agg["gc_ms"]
-        d["sh_read_mb"] += agg["sh_read"] / 1e6
-        d["sh_write_mb"] += agg["sh_write"] / 1e6
-        d["input_mb"] += agg["input"] / 1e6
-        d["top_stages"].append(
-            (agg["run_ms"], sid, agg["tasks"],
-             stage_name.get(sid, "")[:60])
-        )
+        per_label[qname] = {
+            "stages": len(stages),
+            "tasks": sum(st["tasks"] for st in stages.values()),
+            "run_ms": sum(st["run_ms"] for st in stages.values()),
+            "gc_ms": sum(st["gc_ms"] for st in stages.values()),
+            "sh_write_mb": sum(st["sh_write"] for st in stages.values()) / 1e6,
+            "input_mb": sum(st["input"] for st in stages.values()) / 1e6,
+            "top_stages": [
+                (st["run_ms"], sid, st["tasks"], st["name"][:60])
+                for sid, st in stages.items()
+            ],
+        }
 
     for name in fns:
         r = results[name]

@@ -12,17 +12,13 @@ already ~32× the real OMIM's ~28k entries.  Widening the ids would
 break parse.parse_omim_id's 6-digit validation — i.e. it would no
 longer measure the real pipeline.
 
-The component that HAS a next decade is the writer: write_ttl_sharded
+The component that HAS a next decade is the writer: write_ttl
 (io/writers.py) serializes any triples DataFrame, regardless of what
 the subjects look like.  This probe synthesizes OMIM-shaped triples
 (CURIE subjects over the full MIM keyspace, the real predicate mix,
-uri/literal objects incl. md5 bnode lines) at N rows and times:
-
-- the sharded writer end-to-end (range shuffle + per-executor sorted
-  shards + driver byte concat) — the single-artifact form, and
-- keep_shards=True (manifest + shards, no concat) — the fully
-  distributed form whose cost is pure Spark, to expose the driver
-  concat's share of the wall.
+uri/literal objects incl. md5 bnode lines) at N rows and times
+write_ttl end-to-end (range shuffle + per-executor sorted shards +
+driver byte concat).
 
 Usage: python tools/writer_scale_probe.py [N1,N2,...]
        (default 7300000,73000000 — the pipeline probe's top step and
@@ -82,7 +78,7 @@ def main() -> int:
     root = str(_REPO_ROOT)
     if root not in sys.path:
         sys.path.insert(0, root)
-    from omim_spark.io.writers import write_ttl_sharded
+    from omim_spark.io.writers import write_ttl
     from omim_spark.session import get_spark
 
     schedule = (
@@ -98,33 +94,20 @@ def main() -> int:
     # codegen/shuffle paths so the first measured step isn't paying
     # JIT cost the second step doesn't.
     warm = _SCRATCH / "warm.ttl"
-    write_ttl_sharded(synth_triples(spark, 50_000), str(warm))
+    write_ttl(synth_triples(spark, 50_000), str(warm))
     warm.unlink()
     rows = []
     for n in schedule:
         triples = synth_triples(spark, n)
         out = _SCRATCH / f"out_{n}.ttl"
         t0 = time.perf_counter()
-        write_ttl_sharded(triples, str(out))
-        t_concat = time.perf_counter() - t0
+        write_ttl(triples, str(out))
+        wall = time.perf_counter() - t0
         size = out.stat().st_size
         out.unlink()
-        t0 = time.perf_counter()
-        write_ttl_sharded(triples, str(out), keep_shards=True)
-        t_shards = time.perf_counter() - t0
-        shutil.rmtree(str(out) + ".shards", ignore_errors=True)
-        out.unlink(missing_ok=True)
-        rows.append((n, t_concat))
+        rows.append((n, wall))
         print(
-            json.dumps(
-                {
-                    "rows": n,
-                    "sharded_concat_s": round(t_concat, 2),
-                    "shards_only_s": round(t_shards, 2),
-                    "concat_share": round(1 - t_shards / t_concat, 2),
-                    "ttl_bytes": size,
-                }
-            ),
+            json.dumps({"rows": n, "write_ttl_s": round(wall, 2), "ttl_bytes": size}),
             flush=True,
         )
     for (n1, t1), (n2, t2) in zip(rows, rows[1:]):
