@@ -20,11 +20,12 @@ deployment:
 - no cut at all: keep full lineage.  Free and always recomputable,
   but iterative algorithms pay exponential plan growth and shared
   subtrees recompute per consumer.  Measured warning (SCALING.md r13
-  addendum): the pipeline build's self-join rewrite stage grows the
-  DRIVER-side analysis cost quadratically without its cuts — under
-  ``mode=none`` plan construction alone exceeded 230 s at bench scale
-  vs ~20 s with the default ``local`` tier.  ``none`` is for linear
-  plans one wants fully recomputable, not for the pipeline.
+  addendum): without its cuts, the pipeline build's DRIVER-side
+  analysis cost grows quadratically in the number of union legs its
+  consumers replan — under ``mode=none`` plan construction alone
+  exceeded 230 s at bench scale vs ~20 s with the default ``local``
+  tier.  ``none`` is for linear plans one wants fully recomputable,
+  not for the pipeline.
 
 ``cut_lineage`` picks the tier from the session conf
 ``spark.omim.checkpoint.mode`` (``local`` | ``reliable`` | ``none``,

@@ -2,11 +2,19 @@
 DataFrame + report DataFrames — the Spark equivalent of
 `python -m omim2obo` (reference omim2obo/main.py:227-528).
 
-The whole build is ONE logical plan per sink: scans → parse
-projections → broadcast-joined overlays → window-counted decision
-table → union of ~20 triple emitters.  Stage boundaries appear only
-at the A1/A2 groupBys and the p_mim window — exactly where the
-reference materializes dict indexes (SURVEY §3.1 note).
+Scans → parse projections → broadcast-joined overlays →
+window-counted decision table → one union of the triple emitters.
+The build's barriers, in order:
+
+- the parse cuts: the parsed titles, entries, morbidmap and mim2gene
+  tables are lineage-cut (lazily) so their several consumers do not
+  re-read and re-parse the text;
+- the entries repartition, which spreads the single-split entries
+  table before the entry-classes explode;
+- the ``all_triples`` cut: the distinct union, materialized eagerly,
+  which every sink reads;
+- the reports: self-joins over ``all_triples`` plus the SSSOM
+  mappings, planned lazily and run by whoever writes them.
 """
 
 from __future__ import annotations
@@ -22,8 +30,6 @@ from omim_spark import parse, schemas, triples as T
 from omim_spark.entries import transform_entries
 from omim_spark.io import readers
 from omim_spark.queries import (
-    add_flipped_mondo_mappings,
-    add_hgnc_links,
     disease_gene_relationships,
     mondo_omim_genes,
     pmid_mentions,
@@ -37,7 +43,6 @@ class BuildResult:
     triples: DataFrame
     review_cases: DataFrame
     susceptibility: DataFrame
-    decided: DataFrame
     reports: dict[str, DataFrame] = field(default_factory=dict)
 
 
@@ -153,7 +158,7 @@ def build_graph(
 
     # --- Decision table ----------------------------------------------------
     decided = assoc_mod.derive_associations(assocs, exclusions, protected)
-    decided.cache()  # feeds three sinks (triples, review, robot tsv)
+    decided.cache()  # feeds three triple legs and review_cases
 
     # --- Triple emission ---------------------------------------------------
     # The entries checkpoint is single-partition (the mimTitles text
@@ -271,56 +276,23 @@ def build_graph(
             )
         )
 
-    all_triples = T.union_triples(*parts).distinct()
+    # Materialized once: the TTL, the artifacts and the reports' self-
+    # joins all read it, and each would otherwise replan the whole
+    # emission union (the reference's serialized omim.ttl plays the
+    # same role between make stages).
+    all_triples = T.union_triples(*parts).distinct().transform(
+        cut_lineage, eager=True
+    )
 
-    # --- Merged graph (the reference's `make omim.owl` stage:
-    # ROBOT merge of omim.ttl + SSSOM mapping OWL, then the two SPARQL
-    # INSERT rewrites — makefile:61-66) -------------------------------------
-    sssom_triples = omim_to_mondo.select(
-        F.concat(F.lit("OMIM:"), F.col("omim_mim")).alias("subject"),
-        F.lit("skos:exactMatch").alias("predicate"),
-        F.col("mondo_id").alias("object"),
-        F.lit("uri").alias("obj_kind"),
-        F.lit(None).cast("string").alias("datatype"),
-    )
-    # Materialize between stages: the rewrites self-join the graph, so
-    # feeding them the raw ~20-way-union plan would replan the whole
-    # build per pattern leg (plan-depth blowup).  localCheckpoint cuts
-    # the lineage — the graph is the natural pipeline breaker here,
-    # same role as the reference's serialized omim.ttl between make
-    # stages.
-    #
-    # r14: EVERY rewrite layer gets its own cut, not just the ends.
-    # add_flipped_mondo_mappings references its input 3× (union +
-    # filter leg + anti-join leg) and add_hgnc_links 5× (union + four
-    # pattern legs), and because Catalyst pushes each leg's filter
-    # below the layer's distinct, the subtrees are not exchange-
-    # reusable — the event-log census showed five stages re-reading
-    # the 136 MB all_triples checkpoint and re-running the union+
-    # distinct per leg (guide §2.4 shared-subtree recompute).  Each
-    # layer is graph-sized (OMIM-entry-proportional, never corpus-
-    # scale), so materializing it once per layer is scale-safe.
-    all_triples = all_triples.transform(cut_lineage, eager=True)
-    base = (
-        T.union_triples(all_triples, sssom_triples)
-        .distinct()
-        .transform(cut_lineage, eager=False)
-    )
-    # r14: the two INSERT rewrites read the SAME base layer and are
-    # unioned in one pass (before, the flipped-mappings layer added a
-    # lazy cut, without a distinct, that the hgnc layer read; the hgnc
-    # layer's distinct is the one kept here).  Equivalent by
-    # construction: add_flipped_mondo_mappings emits only
-    # skos:exactMatch triples whose object starts with "MONDO:", while
-    # add_hgnc_links matches only rdfs:subClassOf / owl:onProperty /
-    # owl:someValuesFrom predicates and exactMatch edges whose OBJECT
-    # starts with "HGNC:", so add_hgnc_links(base ∪ flipped) ≡
-    # add_hgnc_links(base) for every input (pinned by
-    # tests/test_pipeline.py::test_merged_rewrite_fusion).
-    merged = (
-        T.union_triples(base, add_flipped_mondo_mappings(base), add_hgnc_links(base))
-        .distinct()
-        .transform(cut_lineage, eager=True)
+    # The graph-pattern reports read the TTL plus the SSSOM mappings
+    # (the reference's `make omim.owl` merge, makefile:61-66).  Its two
+    # INSERT rewrites are not applied: every exactMatch here has an
+    # OMIM: subject, so the MONDO flip adds nothing, and the HGNC-class
+    # triples hgnc_links adds have no label or exactMatch for either
+    # report to join them to (pinned by tests/test_pipeline.py::
+    # TestQueries::test_rewrites_change_no_report_row).
+    graph = T.union_triples(
+        all_triples, T.emit_exact_match(omim_to_mondo, "omim_mim", F.col("mondo_id"))
     )
 
     # --- Reports -----------------------------------------------------------
@@ -332,10 +304,9 @@ def build_graph(
         triples=all_triples,
         review_cases=review,
         susceptibility=susceptibility,
-        decided=decided,
         reports={
-            "disease_gene_relationships": disease_gene_relationships(merged),
-            "mondo_omim_genes": mondo_omim_genes(merged),
+            "disease_gene_relationships": disease_gene_relationships(graph),
+            "mondo_omim_genes": mondo_omim_genes(graph),
             "pmid_mentions": pmid_mentions(all_triples),
         },
     )

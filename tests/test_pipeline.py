@@ -3,12 +3,19 @@ triples + reports, including the README.md:202-224 Prune belly golden
 (the restriction pair), entry emission per type, the deterministic TTL
 writer, and the SPARQL-equivalent queries."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from omim_spark.io.writers import write_ttl
 from omim_spark.pipeline import build_graph
-from omim_spark.queries import add_flipped_mondo_mappings, add_hgnc_links
+from omim_spark.queries import (
+    add_flipped_mondo_mappings,
+    add_hgnc_links,
+    disease_gene_relationships,
+    mondo_omim_genes,
+)
 
 
 @pytest.fixture(scope="module")
@@ -186,57 +193,52 @@ class TestQueries:
             for r in rows
         )
 
-    def test_merged_rewrite_fusion(self, spark, build):
-        # r14 pipeline optimization: build_graph applies BOTH INSERT
-        # rewrites to the same base layer and unions them in one pass.
-        # This pins the equivalence with the former sequential
-        # composition (flip first, then hgnc_links over the flipped
-        # graph) on a graph where BOTH rewrites produce rows — the
-        # fixture graph plus a MONDO-subject exactMatch edge so the
-        # flip is non-empty.
+    def test_rewrites_change_no_report_row(self, spark, omim_data_dir, build):
+        # build_graph's reports read the TTL triples plus the SSSOM
+        # mappings without the reference's two INSERT rewrites
+        # (makefile:61-66).  Pin why that is exact: the MONDO flip finds
+        # nothing to flip, and the HGNC links it would add change no row
+        # of either graph-pattern report.
         from omim_spark import triples as T
+        from omim_spark.pipeline import load_omim_to_mondo
 
-        extra = spark.createDataFrame(
+        mappings = load_omim_to_mondo(
+            spark, os.path.join(omim_data_dir, "mondo_exactmatch_omim.sssom.tsv")
+        )
+        graph = T.union_triples(
+            build.triples,
+            T.emit_exact_match(mappings, "omim_mim", F.col("mondo_id")),
+        )
+        flipped = add_flipped_mondo_mappings(graph)
+        links = add_hgnc_links(graph)
+        assert flipped.count() == 0
+        assert links.count() > 0  # not vacuous: the hgnc rewrite fires
+        rewritten = T.union_triples(graph, flipped, links)
+        for name, report in (
+            ("disease_gene_relationships", disease_gene_relationships),
+            ("mondo_omim_genes", mondo_omim_genes),
+        ):
+            expected = build.reports[name].collect()
+            assert expected
+            assert report(rewritten).collect() == expected
+
+    def test_insert_rewrites(self, spark, build):
+        # flip: each MONDO –exactMatch→ X edge gains its inverse unless
+        # the graph already has it
+        edges = spark.createDataFrame(
             [
-                ("MONDO:0008556", "skos:exactMatch", "OMIM:100100", "uri", None),
-                ("MONDO:0099999", "skos:exactMatch", "HGNC:1950", "uri", None),
+                ("MONDO:1", "skos:exactMatch", "OMIM:1", "uri", None),
+                ("MONDO:2", "skos:exactMatch", "OMIM:2", "uri", None),
+                ("OMIM:2", "skos:exactMatch", "MONDO:2", "uri", None),
             ],
             "subject string, predicate string, object string, "
             "obj_kind string, datatype string",
         )
-        base = T.union_triples(build.triples, extra).distinct()
-
-        def tset(df):
-            return {
-                (r.subject, r.predicate, r.object, r.obj_kind, r.datatype)
-                for r in df.collect()
-            }
-
-        mid = T.union_triples(base, add_flipped_mondo_mappings(base))
-        sequential = tset(
-            T.union_triples(mid, add_hgnc_links(mid)).distinct()
-        )
-        fused = tset(
-            T.union_triples(
-                base, add_flipped_mondo_mappings(base), add_hgnc_links(base)
-            ).distinct()
-        )
-        assert fused == sequential
-        # and the test is not vacuous: both rewrites fired
-        assert (
-            "HGNC:1950",
-            "skos:exactMatch",
-            "MONDO:0099999",
-            "uri",
-            None,
-        ) in fused  # the flip of the extra MONDO→HGNC edge
-        assert ("HGNC:1950", "rdf:type", "owl:Class", "uri", None) in fused
-
-    def test_insert_rewrites(self, build):
-        flipped = add_flipped_mondo_mappings(build.triples)
-        assert any(
-            r.subject == "OMIM:700100" for r in flipped.collect()
-        ) is False or True  # flipped adds X→MONDO inverses
+        flipped = {
+            (r.subject, r.predicate, r.object)
+            for r in add_flipped_mondo_mappings(edges).collect()
+        }
+        assert flipped == {("OMIM:1", "skos:exactMatch", "MONDO:1")}
         # hgnc links: disease gets a parallel restriction onto HGNC class
         new = add_hgnc_links(build.triples)
         new_set = {(r.subject, r.predicate, r.object) for r in new.collect()}
