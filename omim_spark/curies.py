@@ -41,30 +41,6 @@ NAMESPACES: dict[str, str] = {
     "orcid": "https://orcid.org/",
 }
 
-# Well-known term CURIEs used across emitters.
-RDF_TYPE = "rdf:type"
-RDFS_LABEL = "rdfs:label"
-RDFS_SUBCLASS_OF = "rdfs:subClassOf"
-OWL_CLASS = "owl:Class"
-OWL_RESTRICTION = "owl:Restriction"
-OWL_ON_PROPERTY = "owl:onProperty"
-OWL_SOME_VALUES_FROM = "owl:someValuesFrom"
-OWL_AXIOM = "owl:Axiom"
-OWL_ANNOTATED_SOURCE = "owl:annotatedSource"
-OWL_ANNOTATED_PROPERTY = "owl:annotatedProperty"
-OWL_ANNOTATED_TARGET = "owl:annotatedTarget"
-OWL_DEPRECATED = "owl:deprecated"
-SKOS_EXACT_MATCH = "skos:exactMatch"
-BIOLINK_CATEGORY = "biolink:category"
-
-
-def expand_curie(curie: str) -> str:
-    """'OMIM:100100' → full URI (driver-side, for literals/config)."""
-    prefix, _, local = curie.partition(":")
-    if prefix in NAMESPACES:
-        return NAMESPACES[prefix] + local
-    return curie
-
 
 def curie_to_uri(col: Column, extra: dict[str, str] | None = None) -> Column:
     """Column of CURIEs → column of URIs via a when-chain over the

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from omim_spark.curies import NAMESPACES
 from omim_spark.curies import curie_to_uri as _curie_to_uri_base
 from omim_spark.operators.checkpoint import cut_lineage
+from omim_spark.triples import restrictions
 
 # The TTL sink binds NCBITaxon in its header rather than NAMESPACES;
 # the obographs export needs the expansion inline.
@@ -291,21 +292,8 @@ def obograph_edges(triples: DataFrame) -> DataFrame:
         F.lit("is_a").alias("pred"),
         curie_to_uri(F.col("object")).alias("obj"),
     )
-    sub_bnode = (
-        triples.filter(
-            (F.col("predicate") == "rdfs:subClassOf")
-            & (F.col("obj_kind") == "bnode")
-        )
-        .select("subject", F.col("object").alias("bn"))
-    )
-    on_prop = triples.filter(F.col("predicate") == "owl:onProperty").select(
-        F.col("subject").alias("bn"), F.col("object").alias("prop")
-    )
-    svf = triples.filter(
-        F.col("predicate") == "owl:someValuesFrom"
-    ).select(F.col("subject").alias("bn"), F.col("object").alias("filler"))
-    restriction = sub_bnode.join(on_prop, "bn").join(svf, "bn").select(
-        curie_to_uri(F.col("subject")).alias("sub"),
+    restriction = restrictions(triples).select(
+        curie_to_uri(F.col("cls")).alias("sub"),
         curie_to_uri(F.col("prop")).alias("pred"),
         curie_to_uri(F.col("filler")).alias("obj"),
     )

@@ -6,14 +6,26 @@ external Java toolchain and its -Xmx20G single-JVM ceiling
 
 Scale: a triples relation self-joins on subject/object; each pattern
 leg filters on predicate BEFORE joining (predicate-filtered scans are
-the RDF-store equivalent of partition pruning).  All legs here are
-broadcast-sized after filtering except the restriction spine.
+the RDF-store equivalent of partition pruning).  The restriction spine
+(subClassOf → onProperty / someValuesFrom) is decoded once, by
+``triples.restrictions``.  Over the build's ``all_triples`` checkpoint,
+which carries no size statistics, every leg is planned as a
+sort-merge join; AQE turns the small ones into broadcasts only after
+their shuffle stages have run.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from omim_spark.triples import (
+    _emit,
+    _t,
+    emit_subclassof_restriction,
+    restrictions,
+    union_triples,
+)
 
 D2G_PREDICATES = [
     "RO:0003302",
@@ -53,11 +65,7 @@ def disease_gene_relationships(triples: DataFrame) -> DataFrame:
     categories → left joins; direction via IF(pred==RO:0004003)."""
     cls = _p(triples, "rdf:type", "cls").filter(F.col("cls_o") == "owl:Class")
     lab = _p(triples, "rdfs:label", "lab")
-    sub = _p(triples, "rdfs:subClassOf", "sub")
-    onp = _p(triples, "owl:onProperty", "onp").filter(
-        F.col("onp_o").isin(D2G_PREDICATES)
-    )
-    svf = _p(triples, "owl:someValuesFrom", "svf")
+    rst = restrictions(triples).filter(F.col("prop").isin(D2G_PREDICATES))
     cat = _p(triples, "biolink:category", "cat")
     ocls = cls.select(
         F.col("cls_s").alias("ocls_s"), F.col("cls_o").alias("ocls_o")
@@ -66,25 +74,23 @@ def disease_gene_relationships(triples: DataFrame) -> DataFrame:
     ocat = cat.select(F.col("cat_s").alias("ocat_s"), F.col("cat_o").alias("ocat_o"))
 
     joined = (
-        cls.join(lab, F.col("cls_s") == F.col("lab_s"))
-        .join(sub, F.col("cls_s") == F.col("sub_s"))
-        .join(onp, F.col("sub_o") == F.col("onp_s"))
-        .join(svf, F.col("sub_o") == F.col("svf_s"))
-        .join(ocls, F.col("svf_o") == F.col("ocls_s"))
-        .join(olab, F.col("svf_o") == F.col("olab_s"))
-        .join(cat, F.col("cls_s") == F.col("cat_s"), "left")
-        .join(ocat, F.col("svf_o") == F.col("ocat_s"), "left")
+        rst.join(cls, F.col("cls") == F.col("cls_s"))
+        .join(lab, F.col("cls") == F.col("lab_s"))
+        .join(ocls, F.col("filler") == F.col("ocls_s"))
+        .join(olab, F.col("filler") == F.col("olab_s"))
+        .join(cat, F.col("cls") == F.col("cat_s"), "left")
+        .join(ocat, F.col("filler") == F.col("ocat_s"), "left")
     )
     strip_biolink = lambda c: F.regexp_replace(c, "^biolink:", "")  # noqa: E731
     return joined.select(
-        F.col("cls_s").alias("SubId"),
+        F.col("cls").alias("SubId"),
         F.col("lab_o").alias("SubLabel"),
         strip_biolink(F.col("cat_o")).alias("SubBiolink"),
-        F.col("onp_o").alias("Pred"),
-        F.when(F.col("onp_o") == "RO:0004003", "Disease2Gene")
+        F.col("prop").alias("Pred"),
+        F.when(F.col("prop") == "RO:0004003", "Disease2Gene")
         .otherwise("Gene2Disease")
         .alias("PredDirection"),
-        F.col("svf_o").alias("ObjId"),
+        F.col("filler").alias("ObjId"),
         F.col("olab_o").alias("ObjLabel"),
         strip_biolink(F.col("ocat_o")).alias("ObjBiolink"),
     ).orderBy("PredDirection", "SubBiolink", "Pred", "SubId", "ObjBiolink", "ObjId")
@@ -99,23 +105,19 @@ def mondo_omim_genes(triples: DataFrame) -> DataFrame:
     mondo = match.filter(F.col("m_o").startswith("MONDO:")).select(
         F.col("m_s").alias("dis"), F.col("m_o").alias("mondo_id")
     )
-    sub = _p(triples, "rdfs:subClassOf", "sub")
-    onp = _p(triples, "owl:onProperty", "onp").filter(F.col("onp_o") == "RO:0004003")
-    svf = _p(triples, "owl:someValuesFrom", "svf")
+    rst = restrictions(triples).filter(F.col("prop") == "RO:0004003")
     hgnc = match.filter(F.col("m_o").startswith("HGNC:")).select(
         F.col("m_s").alias("gene"), F.col("m_o").alias("hgnc_id")
     )
     return (
-        cls.join(mondo, F.col("cls_s") == F.col("dis"))
-        .join(sub, F.col("cls_s") == F.col("sub_s"))
-        .join(onp, F.col("sub_o") == F.col("onp_s"))
-        .join(svf, F.col("sub_o") == F.col("svf_s"))
-        .join(hgnc, F.col("svf_o") == F.col("gene"))
+        rst.join(cls, F.col("cls") == F.col("cls_s"))
+        .join(mondo, F.col("cls") == F.col("dis"))
+        .join(hgnc, F.col("filler") == F.col("gene"))
         .select(
             "mondo_id",
             "hgnc_id",
-            F.col("cls_s").alias("omim_disease_xref"),
-            F.col("svf_o").alias("omim_gene"),
+            F.col("cls").alias("omim_disease_xref"),
+            F.col("filler").alias("omim_gene"),
         )
         .distinct()
         .orderBy("mondo_id", "hgnc_id", "omim_gene", "omim_disease_xref")
@@ -149,11 +151,6 @@ def add_hgnc_links(triples: DataFrame) -> DataFrame:
     restriction onto an OMIM gene that exactMatches an HGNC id, insert
     a parallel restriction onto the HGNC class (+ its owl:Class
     typing).  Returns the NEW triples."""
-    from omim_spark.triples import emit_subclassof_restriction, union_triples, _emit, _t
-
-    sub = _p(triples, "rdfs:subClassOf", "sub")
-    onp = _p(triples, "owl:onProperty", "onp").filter(F.col("onp_o") == "RO:0004003")
-    svf = _p(triples, "owl:someValuesFrom", "svf")
     hgnc = (
         triples.filter(
             (F.col("predicate") == "skos:exactMatch")
@@ -162,10 +159,10 @@ def add_hgnc_links(triples: DataFrame) -> DataFrame:
         .select(F.col("subject").alias("gene"), F.col("object").alias("hgnc"))
     )
     base = (
-        sub.join(onp, F.col("sub_o") == F.col("onp_s"))
-        .join(svf, F.col("sub_o") == F.col("svf_s"))
-        .join(hgnc, F.col("svf_o") == F.col("gene"))
-        .select(F.col("sub_s").alias("cls"), F.col("hgnc"))
+        restrictions(triples)
+        .filter(F.col("prop") == "RO:0004003")
+        .join(hgnc, F.col("filler") == F.col("gene"))
+        .select("cls", "hgnc")
         .distinct()
     )
     typing = _emit(base, _t(F.col("hgnc"), "rdf:type", "owl:Class"))

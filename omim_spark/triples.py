@@ -112,18 +112,46 @@ def emit_axiom_annotations(
 # ---------------------------------------------------------------------------
 
 
-def emit_subclassof_restriction(
-    df: DataFrame, pred: Column, svf: Column, on: Column
-) -> DataFrame:
-    """bnode Restriction(onProperty, someValuesFrom) + rdfs:subClassOf
-    (reference add_subclassof_restriction main.py:149-156)."""
+def _restriction_cols(pred: Column, svf: Column, on: Column) -> list[Column]:
+    """The four triples of ``on rdfs:subClassOf [owl:Restriction;
+    onProperty pred; someValuesFrom svf]`` (reference
+    add_subclassof_restriction main.py:149-156) — the one spelling of
+    the shape that :func:`restrictions` decodes."""
     b = bnode_restriction(on, pred, svf)
-    return _emit(
-        df,
+    return [
         _t(b, "rdf:type", "owl:Restriction"),
         _t(b, "owl:onProperty", pred),
         _t(b, "owl:someValuesFrom", svf),
         _t(on, "rdfs:subClassOf", b, BNODE),
+    ]
+
+
+def emit_subclassof_restriction(
+    df: DataFrame, pred: Column, svf: Column, on: Column
+) -> DataFrame:
+    """bnode Restriction(onProperty, someValuesFrom) + rdfs:subClassOf."""
+    return _emit(df, *_restriction_cols(pred, svf, on))
+
+
+def restrictions(triples: DataFrame) -> DataFrame:
+    """Decode every ``cls rdfs:subClassOf [onProperty prop;
+    someValuesFrom filler]`` back to one (cls, prop, filler) row — the
+    inverse of :func:`_restriction_cols`, joined on the bnode.  Reads
+    only subject/predicate/object, so it also decodes bare 3-column
+    graphs; a named-class subClassOf finds no onProperty leg and drops
+    out.  Callers filter ``prop``; Catalyst pushes that filter down to
+    the onProperty leg."""
+
+    def leg(pred: str, s: str, o: str) -> DataFrame:
+        return triples.filter(F.col("predicate") == pred).select(
+            F.col("subject").alias(s), F.col("object").alias(o)
+        )
+
+    return (
+        leg("rdfs:subClassOf", "cls", "bnode")
+        .join(leg("owl:onProperty", "bnode", "prop"), "bnode")
+        .join(leg("owl:someValuesFrom", "bnode", "filler"), "bnode")
+        .select("cls", "prop", "filler")
     )
 
 
@@ -134,41 +162,26 @@ def _restriction_with_evidence_cols(
     evidence: Column,
     orcid: Column | None = None,
 ) -> list[Column]:
-    """The G4 triple batch as struct columns — restriction + evidence
-    axiom (+ conditional oboInOwl:source) — so one ``_emit`` pass
-    covers what used to be a 3-leg union over the same source
-    (guide §2.4: each union leg re-scans the source per consumer)."""
-    b = bnode_restriction(on, pred, svf)
-    cols = [
-        _t(b, "rdf:type", "owl:Restriction"),
-        _t(b, "owl:onProperty", pred),
-        _t(b, "owl:someValuesFrom", svf),
-        _t(on, "rdfs:subClassOf", b, BNODE),
+    """The G4 triple batch as struct columns: the restriction plus its
+    evidence axiom, so one ``_emit`` pass scans the source once (guide
+    §2.4).  A null ``orcid`` gives a null oboInOwl:source object,
+    which ``_emit``'s null filter drops."""
+    annos = [
+        ("biolink:has_evidence", evidence, LIT),
+        ("rdfs:comment", evidence, LIT),
+    ]
+    if orcid is not None:
+        annos.append(("oboInOwl:source", orcid, URI))
+    return [
+        *_restriction_cols(pred, svf, on),
         *_axiom_triple_cols(
             on,
             F.lit("rdfs:subClassOf"),
-            b,
+            bnode_restriction(on, pred, svf),
             BNODE,
-            [
-                ("biolink:has_evidence", evidence, LIT),
-                ("rdfs:comment", evidence, LIT),
-            ],
+            annos,
         ),
     ]
-    if orcid is not None:
-        # WHEN gate instead of a filtered third union leg: a null
-        # orcid yields a null struct, dropped by _emit's null filter.
-        cols.append(
-            F.when(
-                orcid.isNotNull(),
-                _t(
-                    bnode_axiom(on, F.lit("rdfs:subClassOf"), b),
-                    "oboInOwl:source",
-                    orcid,
-                ),
-            )
-        )
-    return cols
 
 
 def emit_restriction_with_evidence(

@@ -72,6 +72,12 @@ _VERIFY_FIRST = [
     "q_omim_gene_disease_bidi",
     "q_omim_restriction_emission",
     "q_omim_ttl_lines",
+    # CHANGED: the restriction spine is decoded by one
+    # triples.restrictions (obograph_edges, add_hgnc_links) and
+    # encoded by one triples._restriction_cols.  Oracle hash-match at
+    # sf0.001 (q_omim_artifact_exports also at sf0.01/0.1).
+    "q_omim_artifact_exports",
+    "q_sparql_insert_hgnc_links",
     # CHANGED in round 14: PQ-ADC scoring rewrite (spread scan,
     # zero-allocation index-walking aggregate, query-constant distance
     # table precomputed on the broadcast codebook side — bit-identical

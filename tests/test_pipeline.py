@@ -245,6 +245,60 @@ class TestQueries:
         assert ("HGNC:1950", "rdf:type", "owl:Class") in new_set
 
 
+def test_restrictions_decode_what_the_emitters_encode(spark):
+    # Every restriction emitter round-trips through T.restrictions to
+    # exactly its (cls, prop, filler) inputs: the evidence axioms,
+    # whose annotatedTarget is the restriction bnode, add no rows.
+    from collections import Counter
+
+    from omim_spark import triples as T
+
+    plain = spark.createDataFrame(
+        [("OMIM:1", "RO:0002200", "NCBIGENE:10"), ("OMIM:2", "RO:0002525", "CHR:1")],
+        "on string, pred string, svf string",
+    )
+    evid = spark.createDataFrame(
+        [
+            ("OMIM:3", "RO:0003302", "OMIM:30", "ev3", None),
+            ("OMIM:4", "RO:0003303", "OMIM:40", "ev4", "orcid:0000-0001"),
+        ],
+        "on string, pred string, svf string, evidence string, orcid string",
+    )
+    assoc = spark.createDataFrame(
+        [("50", "60", "ev5", None), ("51", "61", "ev6", "orcid:0000-0002")],
+        "gene_mim string, p_mim string, evidence string, orcid string",
+    )
+    on, pred, svf = F.col("on"), F.col("pred"), F.col("svf")
+    emitted = T.union_triples(
+        T.emit_subclassof_restriction(plain, pred, svf, on),
+        T.emit_restriction_with_evidence(
+            evid, pred, svf, on, F.col("evidence"), F.col("orcid")
+        ),
+        T.emit_gene_disease_associations(assoc),
+    )
+    # Only subject/predicate/object: the decoder must not need obj_kind.
+    decoded = T.restrictions(emitted.select("subject", "predicate", "object"))
+    assert Counter(tuple(r) for r in decoded.collect()) == Counter(
+        [
+            ("OMIM:1", "RO:0002200", "NCBIGENE:10"),
+            ("OMIM:2", "RO:0002525", "CHR:1"),
+            ("OMIM:3", "RO:0003302", "OMIM:30"),
+            ("OMIM:4", "RO:0003303", "OMIM:40"),
+            ("OMIM:60", "RO:0004003", "OMIM:50"),
+            ("OMIM:50", "RO:0004013", "OMIM:60"),
+            ("OMIM:61", "RO:0004003", "OMIM:51"),
+            ("OMIM:51", "RO:0004013", "OMIM:61"),
+        ]
+    )
+    # The optional orcid lands once per non-null input axiom only.
+    sources = emitted.filter(F.col("predicate") == "oboInOwl:source")
+    assert sorted(r.object for r in sources.collect()) == [
+        "orcid:0000-0001",
+        "orcid:0000-0002",
+        "orcid:0000-0002",
+    ]
+
+
 class TestDeterministicTtl:
     def test_byte_identical_across_builds(
         self, spark, omim_data_dir, build, tmp_path
