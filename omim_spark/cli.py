@@ -142,11 +142,7 @@ def main(
     os.makedirs(args.out_dir, exist_ok=True)
     result = build_graph(spark, args.data_dir, args.version_date)
 
-    # build_graph's triples are already .distinct()-ed before their
-    # lineage cut — skip the writer's redundant dedup exchange.
-    write_ttl(
-        result.triples, os.path.join(args.out_dir, "omim.ttl"), assume_distinct=True
-    )
+    write_ttl(result.triples, os.path.join(args.out_dir, "omim.ttl"))
     # Release-artifact tail of the reference makefile (makefile:41-58):
     # obographs JSON (robot convert) + SSSOM mapping set (sssom parse).
     write_obograph_json(result.triples, os.path.join(args.out_dir, "omim.json"))

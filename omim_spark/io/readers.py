@@ -92,19 +92,9 @@ def read_sssom(spark: SparkSession, path: str) -> DataFrame:
 def read_curator_tsv(
     spark: SparkSession, path: str, schema: StructType
 ) -> DataFrame:
-    """Curator override tables (protected/exclusions/known-caps):
-    plain TSVs with one header row."""
-    return (
-        spark.read.option("sep", "\t")
-        .option("header", "true")
-        .schema(schema)
-        .csv(path)
-    )
-
-
-def read_cache_tsv(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    """API-cache TSVs with typed bool/date-ish columns
-    (omim_txt_parser.py:510-513)."""
+    """Curator override tables (protected/exclusions/known-caps) and
+    the API-cache TSVs with typed bool/date-ish columns
+    (omim_txt_parser.py:510-513): plain TSVs with one header row."""
     return (
         spark.read.option("sep", "\t")
         .option("header", "true")

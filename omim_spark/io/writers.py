@@ -2,11 +2,14 @@
 two-row-header templates, review TSV.
 
 Determinism contract (SURVEY §7.4): the reference's outputs are
-diffed across weekly releases, so every sink imposes a total order —
-triples sort by (subject kind, subject, predicate, object); report
-rows sort by their natural keys.  Blank-node ids are already
-deterministic md5 (triples.py), so two runs — or two differently
-partitioned cluster executions — produce byte-identical files.
+diffed across weekly releases, so a sink must impose a total order.
+Triples sort by (subject kind, subject, predicate, object).  A TSV
+sorts by its ``order_by`` columns only, and rows that tie on them come
+out in plan-dependent order: the CLI passes the reports one column,
+so the report TSVs are not yet totally ordered.  Blank-node ids are
+already deterministic md5 (triples.py), so two runs — or two
+differently partitioned cluster executions — produce byte-identical
+TTL.
 """
 
 from __future__ import annotations
@@ -52,21 +55,16 @@ def _term(subject_like, kind_col, datatype_col=None):
     )
 
 
-def ttl_lines(triples: DataFrame, assume_distinct: bool = False) -> DataFrame:
+def ttl_lines(triples: DataFrame) -> DataFrame:
     """Triples → one formatted DataFrame of (sort_key, line) rows:
-    prefix header + one `s p o .` statement per triple, totally
-    ordered.  Statement-per-line (N-Triples-style body with CURIEs)
-    keeps the serializer a pure projection — no driver loops, no
-    per-subject state — while remaining valid Turtle.
+    one `s p o .` statement per input row (the prefix header is
+    ``_ttl_header``).  Statement-per-line (N-Triples-style body with
+    CURIEs) keeps the serializer a pure projection — no driver loops,
+    no per-subject state — while remaining valid Turtle.
 
-    ``assume_distinct=True`` skips the dedup exchange for callers that
-    guarantee ``triples`` is already a set (build_graph's triples are
-    ``.distinct()``-ed before their lineage cut; re-running distinct
-    inside the timed write was a full extra shuffle for zero rows
-    removed — r14 optimization, guide §2.4).  Since distinct(distinct
-    X) == distinct X, the flag can only ever be a plan change, not an
-    output change; callers that cannot prove the invariant leave it
-    False."""
+    Every row is written, duplicates included: the caller passes a set
+    (build_graph's triples are ``.distinct()``-ed before their lineage
+    cut)."""
     # Subjects that are bnode objects elsewhere are bnode subjects here
     # (restriction/axiom nodes): detect by md5 shape (32 hex chars).
     subj_is_bnode = F.col("subject").rlike("^[0-9a-f]{32}$")
@@ -75,8 +73,7 @@ def ttl_lines(triples: DataFrame, assume_distinct: bool = False) -> DataFrame:
     ).otherwise(F.col("subject"))
     obj = _term(F.col("object"), F.col("obj_kind"), F.col("datatype"))
     line = F.concat_ws(" ", subj, F.col("predicate"), obj, F.lit("."))
-    deduped = triples if assume_distinct else triples.distinct()
-    body = deduped.select(
+    body = triples.select(
         F.concat_ws(
             "\x00",
             F.when(subj_is_bnode, "1").otherwise("0"),
@@ -104,9 +101,7 @@ def _ttl_header() -> str:
 TTL_SHARDS = 16
 
 
-def write_ttl(
-    triples: DataFrame, path: str, assume_distinct: bool = False
-) -> None:
+def write_ttl(triples: DataFrame, path: str) -> None:
     """Serialize to a single Turtle file.
 
     The body is range-partitioned on the sort key, every executor sorts
@@ -116,7 +111,7 @@ def write_ttl(
     in total order for any shard count — no single-task global sort,
     no row-at-a-time driver loop."""
     body = (
-        ttl_lines(triples, assume_distinct=assume_distinct)
+        ttl_lines(triples)
         .repartitionByRange(TTL_SHARDS, "sort_key")
         .sortWithinPartitions("sort_key", "line")
         .select("line")

@@ -259,12 +259,16 @@ def build_graph(
     # PubMed / UMLS / Orphanet links from caches (main.py:500-509)
     pubmed_path, mappings_path = p("pubmed-refs.tsv"), p("mappings.tsv")
     if os.path.exists(pubmed_path):
-        pubmed = readers.read_cache_tsv(spark, pubmed_path, schemas.PUBMED_REFS_CACHE)
+        pubmed = readers.read_curator_tsv(
+            spark, pubmed_path, schemas.PUBMED_REFS_CACHE
+        )
         parts.append(
             T.emit_packed_id_links(pubmed, "mim", "pmid_refs", "IAO:0000142", "PMID:")
         )
     if os.path.exists(mappings_path):
-        mappings = readers.read_cache_tsv(spark, mappings_path, schemas.MAPPINGS_CACHE)
+        mappings = readers.read_curator_tsv(
+            spark, mappings_path, schemas.MAPPINGS_CACHE
+        )
         parts.append(
             T.emit_packed_id_links(
                 mappings, "mim", "umls_ids", "skos:exactMatch", "UMLS:"

@@ -78,6 +78,10 @@ _VERIFY_FIRST = [
     # sf0.001 (q_omim_artifact_exports also at sf0.01/0.1).
     "q_omim_artifact_exports",
     "q_sparql_insert_hgnc_links",
+    # CHANGED: the typed cache scan reads through
+    # readers.read_curator_tsv, and q_omim_ttl_lines (above) dedups
+    # ahead of ttl_lines.  Oracle hash-match at sf0.001/0.01/0.1.
+    "q_omim_typed_cache_scan",
     # CHANGED in round 14: PQ-ADC scoring rewrite (spread scan,
     # zero-allocation index-walking aggregate, query-constant distance
     # table precomputed on the broadcast codebook side — bit-identical

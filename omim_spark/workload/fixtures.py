@@ -1001,10 +1001,11 @@ def q_omim_transform_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # S9 under the gate (round 11): the TTL serializer's line rendering.
 # ttl_lines (io/writers.py) is a pure projection — escaping, term
-# rendering, bnode detection, predicate ordering, dedup — so the
-# oracle can rebuild every byte in SQL.  write_ttl's FILE plumbing
-# (header, range shards, byte-identity across shard counts) stays
-# pytest-pinned in test_pipeline.py.
+# rendering, bnode detection, predicate ordering — so the oracle can
+# rebuild every byte in SQL.  The writer renders every row it is
+# given; the query dedups first, as build_graph does.  write_ttl's
+# FILE plumbing (header, range shards, byte-identity across shard
+# counts) stays pytest-pinned in test_pipeline.py.
 # ---------------------------------------------------------------------------
 
 _BNODE_ID = "abcdef0123456789abcdef0123456789"
@@ -1013,7 +1014,7 @@ _BNODE_ID = "abcdef0123456789abcdef0123456789"
 # then quote/\n/\r/\t), typed literal (^^xsd:boolean), bnode SUBJECT
 # (md5-shaped) and bnode OBJECT (_: prefix), rdf:type sorting before
 # alphabetical predicates, uri-subject blocks before bnode blocks,
-# and an exact-duplicate row that distinct() must collapse.
+# and an exact-duplicate row that the dedup must collapse.
 _TTL_ROWS = [
     ("OMIM:100100", "rdf:type", "owl:Class", "uri", None),
     ("OMIM:100100", "rdfs:label", 'has "quotes" and \\ backslash',
@@ -1085,11 +1086,12 @@ def q_omim_ttl_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     (backslash first, then quote/newline/CR/tab), typed-literal
     ``^^`` suffixes, md5-shaped bnode SUBJECT detection and ``_:``
     rendering for bnode objects, rdf:type-first predicate ordering
-    inside a subject block, uri-blocks-before-bnode-blocks, and
-    distinct() collapsing an exact-duplicate triple.  The sort is
-    re-derived from the components (the engine's \\x00-joined
-    sort_key equals component-tuple order because components are
-    NUL-free — DuckDB VARCHAR cannot hold NUL at all)."""
+    inside a subject block, uri-blocks-before-bnode-blocks, and the
+    distinct() ahead of ttl_lines collapsing an exact-duplicate
+    triple.  The sort is re-derived from the components (the engine's
+    \\x00-joined sort_key equals component-tuple order because
+    components are NUL-free — DuckDB VARCHAR cannot hold NUL at
+    all)."""
     from pyspark.sql import Window
 
     from omim_spark.io.writers import ttl_lines
@@ -1098,7 +1100,7 @@ def q_omim_ttl_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = spark.createDataFrame(_TTL_ROWS, TRIPLES)
     w = Window.orderBy("sort_key")
     return (
-        ttl_lines(df)
+        ttl_lines(df.distinct())
         .withColumn("pos", F.row_number().over(w))
         .select("pos", "line")
         .orderBy("pos")
@@ -1327,7 +1329,7 @@ def q_omim_typed_cache_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         hp = os.path.join(d, "hgnc_complete_set.txt")
         with open(hp, "w") as f:
             f.write(_HGNC_TSV_CONTENT)
-        cache = readers.read_cache_tsv(
+        cache = readers.read_curator_tsv(
             spark, cp, schemas.PUBMED_REFS_CACHE
         ).select(
             F.lit("cache").alias("src"),

@@ -119,9 +119,12 @@ lower_name\tcap_name\tpattern
 eagle-barrett\tEagle-Barrett\tn/a
 """
 
+# 100100 cites PMID 111 twice: the one source row that gives the
+# emitters a duplicate triple for build_graph's dedup to drop
+# (test_pipeline.py::TestDeterministicTtl::test_build_triples_are_a_set).
 PUBMED_REFS = """\
 mim\tis_phenotype\tdate_fetched\tpmid_refs
-100100\tTrue\t2024-01-01\t111|222
+100100\tTrue\t2024-01-01\t111|222|111
 118494\tFalse\t2024-01-01\t333
 200100\tTrue\t2024-01-01\t
 """

@@ -351,85 +351,3 @@ def test_emit_line_calibration_compresses_to_noise_before_dropping():
     assert parsed["calibration"] == {"noise": noise}
     assert parsed["pipeline"]["pipeline_build_2000x"]["min"] == 19.3
     assert parsed.get("over_cap") is None
-
-
-# ---------------------------------------------------------------------------
-# The one event-log census behind pipeline_profile / query_profile
-# ---------------------------------------------------------------------------
-
-
-def test_stage_census_attributes_stages_to_first_job(tmp_path):
-    sys.path.insert(0, str(REPO))
-    try:
-        from tools.event_census import stage_census
-    finally:
-        sys.path.pop(0)
-
-    def job(desc, sids):
-        props = {} if desc is None else {"spark.job.description": desc}
-        return {
-            "Event": "SparkListenerJobStart",
-            "Properties": props,
-            "Stage IDs": sids,
-            "Stage Infos": [
-                {"Stage ID": s, "Stage Name": f"stage-{s}"} for s in sids
-            ],
-        }
-
-    def task(sid, run, gc=0, local=0, remote=0, written=0, read=0):
-        return {
-            "Event": "SparkListenerTaskEnd",
-            "Stage ID": sid,
-            "Task Metrics": {
-                "Executor Run Time": run,
-                "JVM GC Time": gc,
-                "Shuffle Read Metrics": {
-                    "Local Bytes Read": local,
-                    "Remote Bytes Read": remote,
-                },
-                "Shuffle Write Metrics": {"Shuffle Bytes Written": written},
-                "Input Metrics": {"Bytes Read": read},
-            },
-        }
-
-    events = [
-        job("q#run0", [1, 2]),
-        task(1, 100, gc=5, written=1000, read=4000),
-        task(1, 50, gc=1, written=500, read=2000),
-        {
-            "Event": "SparkListenerStageCompleted",
-            "Stage Info": {
-                "Stage ID": 1,
-                "Submission Time": 10_000,
-                "Completion Time": 12_500,
-            },
-        },
-        task(2, 30, local=700, remote=300),
-        # a later job reuses stage 2's shuffle: the stage stays charged
-        # to the job that ran it; the skipped stage 3 ran no tasks
-        job("q#run1", [2, 3]),
-        job(None, [4]),
-        task(4, 7),
-    ]
-    log = tmp_path / "app-1"
-    log.write_text(
-        "\n".join(json.dumps(e) for e in events) + '\n{"Event": "Spark'
-    )
-    (tmp_path / "app-1.appstatus").write_text("not json either")
-
-    census = stage_census(str(tmp_path))
-    assert sorted(census) == ["", "q#run0"]
-    assert sorted(census["q#run0"]) == [1, 2]
-    s1, s2 = census["q#run0"][1], census["q#run0"][2]
-    assert s1 == {
-        "name": "stage-1",
-        "run_ms": 150,
-        "gc_ms": 6,
-        "sh_read": 0,
-        "sh_write": 1500,
-        "input": 6000,
-        "tasks": 2,
-        "wall_s": 2.5,
-    }
-    assert (s2["tasks"], s2["run_ms"], s2["sh_read"]) == (1, 30, 1000)
-    assert census[""][4]["run_ms"] == 7

@@ -335,16 +335,11 @@ class TestDeterministicTtl:
         assert out.read_text() == _ttl_header()
         assert not (tmp_path / "empty.ttl.shards").exists()
 
-    def test_assume_distinct_byte_identical(self, build, tmp_path):
-        # r14: build_graph's triples are .distinct()-ed before their
-        # lineage cut, so the bench/CLI write path passes
-        # assume_distinct=True to skip the writer's redundant dedup
-        # exchange.  Pin that the flag changes the PLAN only, never
-        # the bytes.
-        base, fast = tmp_path / "base.ttl", tmp_path / "fast.ttl"
-        write_ttl(build.triples, str(base))
-        write_ttl(build.triples, str(fast), assume_distinct=True)
-        assert fast.read_bytes() == base.read_bytes()
+    def test_build_triples_are_a_set(self, build):
+        # write_ttl renders every row it is given, so a duplicate
+        # triple would be a duplicate TTL statement: the graph must
+        # leave build_graph already deduplicated.
+        assert build.triples.count() == build.triples.distinct().count()
 
 
 def test_build_without_spark_context(spark, omim_data_dir, tset, monkeypatch):

@@ -1,15 +1,16 @@
 """Replication-isolation guard for the OMIM pipeline (round 9).
 
-tools/pipeline_scale_probe.py measured the end-to-end build at
-20/200/2,000/20,000 fixture replicas and the triple count was exactly
-linear: 366·R + 10 at every point.  That exactness IS a correctness
+The retired replica ladder of tools/pipeline_scale_probe.py measured
+the end-to-end build at 20/200/2,000/20,000 fixture replicas (its
+numbers are history in SCALING.md), and the triple count was exactly
+linear in R at every point.  That exactness IS a correctness
 property — the per-replica MIM remap is injective and nothing in the
 build (joins, conflict drops, windows, series groupings) leaks across
 replicas; any cross-replica join contamination would bend the line.
 Pin it at small R so a regression in parse/associations/triples that
 only manifests under multiplicity (e.g. a join key that stops
 including the replica-remapped MIM) fails here instead of silently
-skewing the probe.
+skewing the benchmarks built on replicated fixtures.
 """
 
 from omim_spark.pipeline import build_graph
@@ -36,15 +37,3 @@ def test_triple_count_exactly_linear_in_replicas(spark, tmp_path):
     # super-linear pair terms, dropped rows bend it sub-linear
     assert n20 - n5 == PER_REPLICA * 15
 
-
-def test_writer_probe_triples_are_distinct(spark):
-    """The writer probe's honesty guard: ttl_lines() runs distinct(),
-    so if tools/writer_scale_probe.synth_triples ever produced
-    duplicate rows the probe would silently serialize FEWER lines
-    than the row count it reports.  Pin distinct == n at small n."""
-    from tools.writer_scale_probe import synth_triples
-
-    n = 10_000
-    df = synth_triples(spark, n)
-    assert df.count() == n
-    assert df.distinct().count() == n

@@ -1,8 +1,9 @@
-"""Scale-probe the OMIM end-to-end pipeline itself (r8 judge #8):
-synthesize an N×-replicated mimTitles/morbidmap/... fixture set and
-time the full build (``pipeline.build_graph`` through the TTL write)
-at increasing N, the way tools/scale_probe.py already probes the
-workload tiers.
+"""Replicated OMIM fixture sources and one timed build over them.
+
+``synthesize`` writes an N×-replicated mimTitles/morbidmap/... fixture
+set; ``run_build`` times ``pipeline.build_graph`` through the TTL
+write.  tools/pipeline_bench.py (bench.py's pipeline tier) and
+tests/test_pipeline_scale.py use them.
 
 Replication that keeps every join valid: each replica r remaps every
 whole 6-digit MIM token in every source file through an injective map
@@ -13,20 +14,11 @@ references — ``MOVED TO 100100``, morbidmap's ``label, 100100 (3)``,
 MIM tokens (hgnc, known_capitalizations) are shared dims and land
 once, mirroring reality: the gene/curator vocabulary is bounded while
 entries grow.
-
-At the default schedule each step is 10× the previous, so the printed
-exponent log10(t_next/t_prev) reads directly: ~0 = fixed overhead
-dominates, ~1 = linear, >1 = a scale bug.
-
-Usage: python tools/pipeline_scale_probe.py [R1,R2,...]   (default 20,200,2000)
 """
 
 from __future__ import annotations
 
-import json
-import math
 import re
-import shutil
 import sys
 import time
 from pathlib import Path
@@ -36,8 +28,6 @@ from pathlib import Path
 # depend on where pytest was invoked, and sys.path mutation happens
 # inside the functions that need it, not at import time.
 _REPO_ROOT = Path(__file__).resolve().parent.parent
-
-_SCRATCH = _REPO_ROOT / ".scratch" / "pipeline_probe"
 
 
 def _fixture_files() -> dict[str, str]:
@@ -120,66 +110,7 @@ def run_build(spark, data_dir: str, ttl_path: str) -> tuple[float, int, float]:
     result = build_graph(spark, data_dir, version_date="2026-01-01")
     n = result.triples.count()
     t_write0 = time.perf_counter()
-    # build_graph's triples are .distinct()-ed before their lineage
-    # cut, so the writer's own dedup exchange is provably redundant
-    # here (r14: distinct-of-distinct removed from the timed write;
-    # outputs byte-compared by tests/test_pipeline.py either way).
-    write_ttl(result.triples, ttl_path, assume_distinct=True)
+    write_ttl(result.triples, ttl_path)
     t1 = time.perf_counter()
     return t1 - t0, n, t1 - t_write0
 
-
-def main() -> int:
-    root = str(_REPO_ROOT)
-    if root not in sys.path:
-        sys.path.insert(0, root)
-    from omim_spark.session import get_spark
-
-    schedule = (
-        [int(x) for x in sys.argv[1].split(",")]
-        if len(sys.argv) > 1
-        else [20, 200, 2000]
-    )
-    spark = get_spark("omim-pipeline-scale-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    rows = []
-    for replicas in schedule:
-        base = _SCRATCH / f"r{replicas}"
-        shutil.rmtree(base, ignore_errors=True)
-        synthesize(base / "data", replicas)
-        # warmup once (codegen/readers), then measure
-        run_build(spark, str(base / "data"), str(base / "warm.ttl"))
-        wall, n_triples, write_s = run_build(
-            spark, str(base / "data"), str(base / "out.ttl")
-        )
-        size = (base / "out.ttl").stat().st_size
-        rows.append((replicas, wall, n_triples, write_s, size))
-        print(
-            json.dumps(
-                {
-                    "replicas": replicas,
-                    "build_plus_write_s": round(wall, 2),
-                    "write_s": round(write_s, 2),
-                    "triples": n_triples,
-                    "ttl_bytes": size,
-                }
-            ),
-            flush=True,
-        )
-        shutil.rmtree(base, ignore_errors=True)
-
-    for (r1, t1, *_), (r2, t2, *_) in zip(rows, rows[1:]):
-        exp = math.log(t2 / t1) / math.log(r2 / r1)
-        print(
-            json.dumps(
-                {"step": f"{r1}->{r2}", "ratio": round(t2 / t1, 2),
-                 "exponent": round(exp, 2)}
-            ),
-            flush=True,
-        )
-    return 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())
