@@ -36,7 +36,9 @@ def entry_core(entries: DataFrame) -> DataFrame:
         F.lpad(e["mimNumber"].cast("string"), 6, "0").alias("mim_number"),
         _omim_type_from_char(e["prefix"]).alias("omim_type"),
         pref.alias("preferred_title"),
-        cleanup_title(F.substring_index(pref, ";", 1)).alias("label"),
+        F.expr(
+            cleanup_title("substring_index(entry.titles.preferredTitle, ';', 1)")
+        ).alias("label"),
         F.when(
             pref.contains(";"), F.trim(F.substring_index(pref, ";", -1))
         ).alias("abbrev"),

@@ -3,8 +3,8 @@ table at reference main.py:417-488, README.md:226-282).
 
 The reference walks a phenotype→assocs dict row by row with mutable
 short-circuit state; here the same semantics are one window count +
-two broadcast joins + an ordered when-cascade, evaluated once over the
-flat association relation:
+two broadcast joins + an ordered CASE cascade (SQL text), evaluated
+once over the flat association relation:
 
 1. protected (curator) short-circuits everything → bidirectional
    causal emission + HGNC exactMatch;
@@ -25,9 +25,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from omim_spark.omim_types import MORBIDMAP_KEY_PREDICATES
+from omim_spark.sqltext import q
 
 MAPPING_KEY_MEANINGS = {
     "1": "The disorder is placed on the map based on its association with a gene, "
@@ -48,11 +48,13 @@ ACT_SKIP = "skip"
 PROTECTED_EVIDENCE = "Evidence: (3) disease-defining (protected association)"
 
 
-def _map_label(col):
-    expr = None
-    for k, v in MAPPING_KEY_MEANINGS.items():
-        expr = F.when(col == k, v) if expr is None else expr.when(col == k, v)
-    return expr.otherwise(F.lit(""))
+def _case(col: str, arms: dict, default: str = "NULL") -> str:
+    """``CASE col WHEN k THEN v … ELSE default END`` over constant arms
+    (string or integer keys, string values)."""
+    whens = " ".join(
+        f"WHEN {q(k) if isinstance(k, str) else k} THEN {q(v)}" for k, v in arms.items()
+    )
+    return f"CASE {col} {whens} ELSE {default} END"
 
 
 def derive_associations(
@@ -67,103 +69,74 @@ def derive_associations(
     Returns one row per decision: p_mim, gene_mim, p_label, map_key,
     n_assocs, action, predicate, evidence, orcid, hgnc_id, row_order.
     """
-    linked = assocs.filter(F.col("p_mim") != "")
-    w = Window.partitionBy("p_mim")
-    counted = (
-        linked.withColumn("n_assocs", F.count("*").over(w))
+    excluded = "(x_mim IS NOT NULL)"
+    is_protected = "(pp_mim IS NOT NULL)"
+    nondefinitive = "p_label RLIKE " + q(r"^[\[{?]")
+    label = _case("map_key", MAPPING_KEY_MEANINGS, "''")
+    key_pred = _case(
+        "map_key", {k: p for k, p in MORBIDMAP_KEY_PREDICATES.items() if p}
+    )
+    action = f"""CASE WHEN {is_protected} THEN {q(ACT_PROTECTED)}
+                      WHEN map_key = '1' THEN {q(ACT_SKIP)}
+                      WHEN map_key != '3' OR {excluded} THEN {q(ACT_NONCAUSAL)}
+                      WHEN n_assocs > 1 OR {nondefinitive} THEN {q(ACT_SKIP)}
+                      ELSE {q(ACT_CAUSAL)} END"""
+    predicate = f"""CASE WHEN {is_protected} THEN 'RO:0004013'
+                         WHEN map_key = '1' THEN NULL
+                         WHEN map_key != '3' OR {excluded} THEN
+                           CASE WHEN n_assocs = 1 AND NOT {excluded} THEN {key_pred}
+                                ELSE 'RO:0003302' END
+                         WHEN n_assocs > 1 OR {nondefinitive} THEN NULL
+                         ELSE 'RO:0004013' END"""
+    orcid = f"""CASE WHEN {is_protected} THEN prot_orcid
+                     WHEN {excluded} AND ({action}) = {q(ACT_NONCAUSAL)} THEN x_orcid
+                     ELSE NULL END"""
+    linked = assocs.filter("p_mim != ''")
+    exclusion = exclusions.selectExpr("p_mim AS x_mim", "orcid AS x_orcid")
+    protection = protected.selectExpr(
+        "p_mim AS pp_mim",
+        "gene_mim AS pp_gene",
+        "hgnc_id AS prot_hgnc",
+        "orcid AS prot_orcid",
+    )
+    decided = (
+        linked.selectExpr("*", "count(*) OVER (PARTITION BY p_mim) AS n_assocs")
+        .join(F.broadcast(exclusion), F.expr("p_mim = x_mim"), "left")
         .join(
-            F.broadcast(
-                exclusions.select(
-                    F.col("p_mim").alias("x_mim"), F.col("orcid").alias("x_orcid")
-                )
-            ),
-            F.col("p_mim") == F.col("x_mim"),
+            F.broadcast(protection),
+            F.expr("p_mim = pp_mim AND gene_mim = pp_gene"),
             "left",
         )
-        .join(
-            F.broadcast(
-                protected.select(
-                    F.col("p_mim").alias("pp_mim"),
-                    F.col("gene_mim").alias("pp_gene"),
-                    F.col("hgnc_id").alias("prot_hgnc"),
-                    F.col("orcid").alias("prot_orcid"),
-                )
-            ),
-            (F.col("p_mim") == F.col("pp_mim"))
-            & (F.col("gene_mim") == F.col("pp_gene")),
-            "left",
-        )
-        .withColumn("excluded", F.col("x_mim").isNotNull())
-        .withColumn("is_protected", F.col("pp_mim").isNotNull())
-    )
-
-    evidence = F.format_string(
-        "Evidence: (%s) %s", F.col("map_key"), _map_label(F.col("map_key"))
-    )
-    nondefinitive = F.col("p_label").rlike(r"^[\[{?]")
-    key_pred = F.lit(None).cast("string")
-    for k, pred in MORBIDMAP_KEY_PREDICATES.items():
-        if pred:
-            key_pred = F.when(F.col("map_key") == k, pred).otherwise(key_pred)
-
-    action = (
-        F.when(F.col("is_protected"), ACT_PROTECTED)
-        .when(F.col("map_key") == "1", ACT_SKIP)
-        .when((F.col("map_key") != "3") | F.col("excluded"), ACT_NONCAUSAL)
-        .when((F.col("n_assocs") > 1) | nondefinitive, ACT_SKIP)
-        .otherwise(ACT_CAUSAL)
-    )
-    predicate = (
-        F.when(F.col("is_protected"), "RO:0004013")
-        .when(F.col("map_key") == "1", F.lit(None))
-        .when(
-            (F.col("map_key") != "3") | F.col("excluded"),
-            F.when((F.col("n_assocs") == 1) & ~F.col("excluded"), key_pred).otherwise(
-                "RO:0003302"
-            ),
-        )
-        .when((F.col("n_assocs") > 1) | nondefinitive, F.lit(None))
-        .otherwise("RO:0004013")
-    )
-    orcid = (
-        F.when(F.col("is_protected"), F.col("prot_orcid"))
-        .when(F.col("excluded") & (action == ACT_NONCAUSAL), F.col("x_orcid"))
-        .otherwise(F.lit(None))
-    )
-    decided = counted.select(
-        "p_mim",
-        "gene_mim",
-        "p_label",
-        "map_key",
-        "n_assocs",
-        action.alias("action"),
-        predicate.alias("predicate"),
-        evidence.alias("evidence"),
-        orcid.alias("orcid"),
-        F.col("prot_hgnc").alias("hgnc_id"),
-        "row_order",
-    )
-
-    # J6: protected associations absent from morbidmap (main.py:483-488)
-    leftover = (
-        protected.join(
-            linked.select("p_mim", "gene_mim").distinct(),
-            ["p_mim", "gene_mim"],
-            "left_anti",
-        )
-        .select(
+        .selectExpr(
             "p_mim",
             "gene_mim",
-            F.lit(None).cast("string").alias("p_label"),
-            F.lit("3").alias("map_key"),
-            F.lit(0).cast("long").alias("n_assocs"),
-            F.lit(ACT_PROTECTED).alias("action"),
-            F.lit("RO:0004013").alias("predicate"),
-            F.lit(PROTECTED_EVIDENCE).alias("evidence"),
-            F.col("orcid"),
-            F.col("hgnc_id"),
-            F.lit(None).cast("long").alias("row_order"),
+            "p_label",
+            "map_key",
+            "n_assocs",
+            f"{action} AS action",
+            f"{predicate} AS predicate",
+            f"format_string('Evidence: (%s) %s', map_key, {label}) AS evidence",
+            f"{orcid} AS orcid",
+            "prot_hgnc AS hgnc_id",
+            "row_order",
         )
+    )
+    # J6: protected associations absent from morbidmap (main.py:483-488)
+    keys = ["p_mim", "gene_mim"]
+    leftover = protected.join(
+        linked.select(*keys).distinct(), keys, "left_anti"
+    ).selectExpr(
+        "p_mim",
+        "gene_mim",
+        "CAST(NULL AS STRING) AS p_label",
+        "'3' AS map_key",
+        "CAST(0 AS BIGINT) AS n_assocs",
+        f"{q(ACT_PROTECTED)} AS action",
+        "'RO:0004013' AS predicate",
+        f"{q(PROTECTED_EVIDENCE)} AS evidence",
+        "orcid",
+        "hgnc_id",
+        "CAST(NULL AS BIGINT) AS row_order",
     )
     return decided.unionByName(leftover)
 
@@ -173,21 +146,24 @@ def susceptibility_rows(assocs: DataFrame, omim_to_mondo: DataFrame) -> DataFram
     '{'-prefixed labels → (mondo_id, omim_curie), one row per SSSOM
     MONDO mapping, distinct + sorted downstream."""
     susc = (
-        assocs.filter(
-            (F.col("p_mim") != "")
-            & F.ltrim(F.col("p_label")).startswith("{")
-        )
+        assocs.filter("p_mim != '' AND startswith(ltrim(p_label), '{')")
         .select("p_mim")
         .distinct()
     )
     return (
-        susc.join(omim_to_mondo, susc.p_mim == omim_to_mondo.omim_mim)
-        .select(
-            F.col("mondo_id"),
-            F.concat(F.lit("OMIM:"), F.col("p_mim")).alias("omim_id"),
-        )
+        susc.join(omim_to_mondo, F.expr("p_mim = omim_mim"))
+        .selectExpr("mondo_id", "concat('OMIM:', p_mim) AS omim_id")
         .distinct()
     )
+
+
+_CASE_NAMES = {
+    1: "D2G: digenic",
+    2: "D2G: self-referential",
+    3: "D2G: somatic",
+    4: "D2G: Phenotype is gene",
+    5: "D2G: Phenotype type error",
+}
 
 
 def review_cases(decided: DataFrame, assocs: DataFrame, omim_types: DataFrame) -> DataFrame:
@@ -202,80 +178,46 @@ def review_cases(decided: DataFrame, assocs: DataFrame, omim_types: DataFrame) -
       order — reproduces the reference's counter deterministically).
     Case 4/5: unexpected phenotype MIM type.
     """
-    causal = decided.filter(F.col("action") == ACT_CAUSAL)
-    info = F.format_string(
-        "(Phenotype: %s %s), (Map key: %s), (Gene: %s)",
-        F.col("p_mim"),
-        F.col("p_label"),
-        F.col("map_key"),
-        F.col("gene_mim"),
+    causal = decided.filter(f"action = {q(ACT_CAUSAL)}")
+    info = (
+        "format_string('(Phenotype: %s %s), (Map key: %s), (Gene: %s)',"
+        " p_mim, p_label, map_key, gene_mim)"
     )
 
-    digenic = causal.filter(F.lower(F.col("p_label")).contains("digenic")).select(
-        F.lit(1).alias("classCode"), info.alias("value")
-    )
-    somatic = causal.filter(F.lower(F.col("p_label")).contains("somatic")).select(
-        F.lit(3).alias("classCode"), info.alias("value")
-    )
+    def case(code: int, rows: DataFrame, value: str) -> DataFrame:
+        return rows.selectExpr(f"{code} AS classCode", f"{value} AS value")
+
+    digenic = case(1, causal.filter("contains(lower(p_label), 'digenic')"), info)
+    somatic = case(3, causal.filter("contains(lower(p_label), 'somatic')"), info)
 
     # Self-referential: p_mim appears as gene_mim with empty-p_mim assocs
-    self_ref_genes = (
-        assocs.filter(F.col("p_mim") == "")
-        .select(
-            F.col("gene_mim").alias("sr_gene"),
-            F.col("p_label").alias("sr_label"),
-            F.col("map_key").alias("sr_key"),
-        )
+    self_ref_genes = assocs.filter("p_mim = ''").selectExpr(
+        "gene_mim AS sr_gene", "p_label AS sr_label", "map_key AS sr_key"
     )
-    sr = causal.join(
-        self_ref_genes, causal.p_mim == self_ref_genes.sr_gene, "inner"
+    sr_numbered = causal.join(self_ref_genes, F.expr("p_mim = sr_gene")).selectExpr(
+        "*", "dense_rank() OVER (ORDER BY row_order, p_mim, gene_mim) AS sr_i"
     )
-    sr_i = F.dense_rank().over(Window.orderBy("row_order", "p_mim", "gene_mim"))
-    sr_numbered = sr.withColumn("sr_i", sr_i)
-    sr_head = sr_numbered.select(
-        F.lit(2).alias("classCode"),
-        F.format_string("%s: %s", F.col("sr_i"), info).alias("value"),
-    ).distinct()
-    sr_detail = sr_numbered.select(
-        F.lit(2).alias("classCode"),
-        F.format_string(
-            "%s: (Phenotype: %s), (Map key: %s), (Gene: %s)",
-            F.col("sr_i"),
-            F.col("sr_label"),
-            F.col("sr_key"),
-            F.col("p_mim"),
-        ).alias("value"),
+    sr_head = case(2, sr_numbered, f"format_string('%s: %s', sr_i, {info})").distinct()
+    sr_detail = case(
+        2,
+        sr_numbered,
+        "format_string('%s: (Phenotype: %s), (Map key: %s), (Gene: %s)',"
+        " sr_i, sr_label, sr_key, p_mim)",
     )
 
     # Unexpected phenotype MIM types
     typed = causal.join(
-        F.broadcast(omim_types.select(F.col("mim_number").alias("t_mim"), "omim_type")),
-        causal.p_mim == F.col("t_mim"),
+        F.broadcast(omim_types.selectExpr("mim_number AS t_mim", "omim_type")),
+        F.expr("p_mim = t_mim"),
         "left",
     )
-    type_err = F.format_string(
-        "(Phenotype MIM type %s), %s", F.col("omim_type"), info
+    type_err = f"format_string('(Phenotype MIM type %s), %s', omim_type, {info})"
+    case4 = case(4, typed.filter("omim_type = 'GENE'"), type_err)
+    case5 = case(
+        5,
+        typed.filter("omim_type IN ('OBSOLETE', 'SUSPECTED', 'HAS_AFFECTED_FEATURE')"),
+        type_err,
     )
-    case4 = typed.filter(F.col("omim_type") == "GENE").select(
-        F.lit(4).alias("classCode"), type_err.alias("value")
-    )
-    case5 = typed.filter(
-        F.col("omim_type").isin("OBSOLETE", "SUSPECTED", "HAS_AFFECTED_FEATURE")
-    ).select(F.lit(5).alias("classCode"), type_err.alias("value"))
-
-    name_map = {
-        1: "D2G: digenic",
-        2: "D2G: self-referential",
-        3: "D2G: somatic",
-        4: "D2G: Phenotype is gene",
-        5: "D2G: Phenotype type error",
-    }
-    name_expr = None
-    for code, name in name_map.items():
-        cond = F.col("classCode") == code
-        name_expr = (
-            F.when(cond, name) if name_expr is None else name_expr.when(cond, name)
-        )
     all_cases = (
         digenic.unionByName(somatic)
         .unionByName(sr_head)
@@ -283,6 +225,6 @@ def review_cases(decided: DataFrame, assocs: DataFrame, omim_types: DataFrame) -
         .unionByName(case4)
         .unionByName(case5)
     )
-    return all_cases.select(
-        "classCode", name_expr.alias("classShortName"), "value"
+    return all_cases.selectExpr(
+        "classCode", f"{_case('classCode', _CASE_NAMES)} AS classShortName", "value"
     ).orderBy("classCode", "value")

@@ -1,17 +1,16 @@
 """CURIE prefix ↔ URI expression helpers (SURVEY §1.4).
 
 The reference binds ~100 RDF namespaces (omim2obo/namespaces.py:1-509);
-the engine keeps them as a small literal map used by Column helpers —
-`curie_to_uri` / `uri_to_curie` are `regexp_replace`/`concat`
-expressions, never UDFs, so CURIE rewriting stays inside codegen (the
-SPARQL queries do the same with REPLACE(STR(uri), ...),
-sparql/disease-gene-relationships.sparql:41-45).
+the engine keeps them as a small literal map.  `curie_to_uri` /
+`uri_to_curie` each return ONE SQL expression (a ``CASE`` over the
+prefix; nested anchored ``regexp_replace``), never UDFs, so CURIE
+rewriting stays inside codegen (the SPARQL queries do the same with
+REPLACE(STR(uri), ...), sparql/disease-gene-relationships.sparql:41-45).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from omim_spark.sqltext import q
 
 # The namespaces actually used by the pipeline's emitters and queries.
 NAMESPACES: dict[str, str] = {
@@ -42,26 +41,26 @@ NAMESPACES: dict[str, str] = {
 }
 
 
-def curie_to_uri(col: Column, extra: dict[str, str] | None = None) -> Column:
-    """Column of CURIEs → column of URIs via a when-chain over the
-    literal namespace map (broadcast-free: pure expression).  ``extra``
-    overlays additional prefixes (e.g. the obographs export adds
-    NCBITaxon, which the TTL sink binds in its header instead)."""
+def curie_to_uri(col: str, extra: dict[str, str] | None = None) -> str:
+    """SQL expression: the CURIE column ``col`` (a column name or SQL
+    expression) as a URI, by its prefix in the literal namespace map;
+    an unknown prefix passes through.  ``extra`` overlays additional
+    prefixes (e.g. the obographs export adds NCBITaxon, which the TTL
+    sink binds in its header instead)."""
     ns = {**NAMESPACES, **(extra or {})}
-    prefix = F.substring_index(col, ":", 1)
-    local = F.substring_index(col, ":", -1)
-    expr: Column | None = None
-    for pfx, uri in ns.items():
-        cond = prefix == pfx
-        val = F.concat(F.lit(uri), local)
-        expr = F.when(cond, val) if expr is None else expr.when(cond, val)
-    return expr.otherwise(col)
+    arms = " ".join(
+        f"WHEN {q(pfx)} THEN concat({q(uri)}, substring_index({col}, ':', -1))"
+        for pfx, uri in ns.items()
+    )
+    return f"CASE substring_index({col}, ':', 1) {arms} ELSE {col} END"
 
 
-def uri_to_curie(col: Column) -> Column:
-    """Column of URIs → CURIEs (longest-prefix-first regexp_replace
-    chain — mirrors the SPARQL REPLACE post-processing)."""
+def uri_to_curie(col: str) -> str:
+    """SQL expression: the URI column ``col`` as a CURIE (anchored
+    replacements, longest namespace first — mirrors the SPARQL REPLACE
+    post-processing)."""
     expr = col
     for pfx, uri in sorted(NAMESPACES.items(), key=lambda kv: -len(kv[1])):
-        expr = F.regexp_replace(expr, "^" + uri.replace(".", r"\."), pfx + ":")
+        pattern = "^" + uri.replace(".", r"\.")
+        expr = f"regexp_replace({expr}, {q(pattern)}, {q(pfx + ':')})"
     return expr

@@ -2,16 +2,20 @@
 title/symbol columns ready for triple emission (reference
 main.py:288-307 orchestrating omim_entry_parser.py:316-385).
 
-Plan shape: one narrow DataFrame, five array columns, all Column
-expressions (no Python), so at scale this is a single map stage over
-the mimTitles scan (no shuffle at all).
+Plan shape: three SQL-text projections (split + partition + strip,
+then title cleanup + the abbreviation union, then recapitalization),
+each one ``selectExpr`` call, so building the frame costs the driver a
+few dozen round trips.  A level boundary stops an expression that a
+later lambda reads (``all_abbrevs``) from being re-evaluated per
+array element.  No Python runs, so at scale this is a single map stage
+over the mimTitles scan (no shuffle at all).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from omim_spark.sqltext import fresh
 from omim_spark.titles import (
     cleanup_title,
     partition_former,
@@ -27,6 +31,12 @@ _ARRAY_PAIRS = (
     ("included_titles", "included_symbols"),
     ("former_included_titles", "former_included_symbols"),
 )
+_KEYS = ("mim_number", "omim_type", "replaced_by")
+
+
+def _each(arr: str, fn) -> str:
+    x = fresh("t")
+    return f"transform({arr}, {x} -> {fn(x)})"
 
 
 def transform_entries(
@@ -39,53 +49,57 @@ def transform_entries(
     included_titles, included_symbols, former_included_titles,
     former_included_symbols.
     """
-    pref_parts = F.transform(
-        F.split(F.col("preferred_title"), ";"), lambda x: F.trim(x)
-    )
-    df = mim_titles.withColumn(
-        "pref_title_raw", F.element_at(pref_parts, 1)
-    ).withColumn(
-        "pref_symbols",
-        F.slice(pref_parts, 2, F.greatest(F.size(pref_parts) - 1, F.lit(1))),
-    )
-
+    pref_parts = _each("split(preferred_title, ';')", lambda x: f"trim({x})")
+    split = [
+        *_KEYS,
+        f"element_at({pref_parts}, 1) AS pref_title_raw",
+        f"slice({pref_parts}, 2, greatest(size({pref_parts}) - 1, 1)) AS pref_symbols",
+    ]
     # Alternative + included blocks share the ';;' pair micro-format.
     for col, prefix in (
         ("alternative_titles", "alt"),
         ("included_titles", "included"),
     ):
-        titles, symbols = title_symbol_pairs(F.coalesce(F.col(col), F.lit("")))
-        # Empty source → empty arrays (split of '' yields [''])
-        nonempty = F.coalesce(F.col(col), F.lit("")) != ""
-        titles = F.when(nonempty, titles).otherwise(F.array().cast("array<string>"))
-        symbols = F.when(nonempty, symbols).otherwise(
-            F.array().cast("array<string>")
-        )
-        cur_t, for_t = partition_former(titles)
-        cur_s, for_s = partition_former(symbols)
-        strip = lambda arr: F.transform(arr, strip_suffix_markers)  # noqa: E731
-        df = (
-            df.withColumn(f"{prefix}_titles_stripped", strip(cur_t))
-            .withColumn(f"{prefix}_symbols", strip(cur_s))
-            .withColumn(f"former_{prefix}_titles_stripped", strip(for_t))
-            .withColumn(f"former_{prefix}_symbols", strip(for_s))
-        )
+        cell = f"coalesce({col}, '')"
+        pair_titles, pair_symbols = title_symbol_pairs(cell)
+
+        def nonempty(arr: str) -> str:
+            # Empty source → empty arrays (split of '' yields [''])
+            return (
+                f"CASE WHEN {cell} != '' THEN {arr}"
+                " ELSE CAST(array() AS array<string>) END"
+            )
+
+        cur_t, for_t = partition_former(nonempty(pair_titles))
+        cur_s, for_s = partition_former(nonempty(pair_symbols))
+        split += [
+            f"{_each(arr, strip_suffix_markers)} AS {name}"
+            for arr, name in (
+                (cur_t, f"{prefix}_titles_stripped"),
+                (cur_s, f"{prefix}_symbols"),
+                (for_t, f"former_{prefix}_titles_stripped"),
+                (for_s, f"former_{prefix}_symbols"),
+            )
+        ]
 
     # cleanup_title over pref + the four title arrays, then recapitalize
     # acronyms using the union of all symbol lists (reference
     # main.py:299-307)
-    def cleanup(col):
-        return cleanup_title(col, known_capitalizations)
+    def cleanup(x: str) -> str:
+        return cleanup_title(x, known_capitalizations)
 
-    def recapitalize(col):
-        return recapitalize_acronyms(col, F.col("all_abbrevs"))
+    def recapitalize(x: str) -> str:
+        return recapitalize_acronyms(x, "all_abbrevs")
 
-    df = df.withColumn("pref_title", cleanup(F.col("pref_title_raw"))).withColumn(
-        "all_abbrevs", F.concat("pref_symbols", *(s for _, s in _ARRAY_PAIRS))
-    )
-    out = ["mim_number", "omim_type", "replaced_by"]
-    out += [recapitalize(F.col("pref_title")).alias("pref_title"), "pref_symbols"]
-    for titles, symbols in _ARRAY_PAIRS:
-        df = df.withColumn(titles, F.transform(f"{titles}_stripped", cleanup))
-        out += [F.transform(titles, recapitalize).alias(titles), symbols]
-    return df.select(*out)
+    symbols = ["pref_symbols", *(s for _, s in _ARRAY_PAIRS)]
+    cleaned = [
+        *_KEYS,
+        *symbols,
+        f"{cleanup('pref_title_raw')} AS pref_title",
+        f"concat({', '.join(symbols)}) AS all_abbrevs",
+        *(f"{_each(f'{t}_stripped', cleanup)} AS {t}" for t, _ in _ARRAY_PAIRS),
+    ]
+    out = [*_KEYS, f"{recapitalize('pref_title')} AS pref_title", "pref_symbols"]
+    for titles, symbols_col in _ARRAY_PAIRS:
+        out += [f"{_each(titles, recapitalize)} AS {titles}", symbols_col]
+    return mim_titles.selectExpr(*split).selectExpr(*cleaned).selectExpr(*out)

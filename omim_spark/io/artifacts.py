@@ -31,11 +31,11 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from omim_spark.curies import NAMESPACES
 from omim_spark.curies import curie_to_uri as _curie_to_uri_base
 from omim_spark.operators.checkpoint import cut_lineage
+from omim_spark.sqltext import q
 from omim_spark.triples import restrictions
 
 # The TTL sink binds NCBITaxon in its header rather than NAMESPACES;
@@ -43,7 +43,7 @@ from omim_spark.triples import restrictions
 _EXTRA_NS = {"NCBITaxon": "http://purl.obolibrary.org/obo/NCBITaxon_"}
 
 
-def curie_to_uri(col):
+def curie_to_uri(col: str) -> str:
     return _curie_to_uri_base(col, extra=_EXTRA_NS)
 
 # ---------------------------------------------------------------------------
@@ -71,29 +71,22 @@ def sssom_rows(triples: DataFrame) -> DataFrame:
     subject_label left-joins the subject's ``rdfs:label`` (min() picks
     deterministically if an entry ever carried two); mappings without
     a label keep an empty string, matching sssom-py's TSV rendering."""
-    ex = triples.filter(
-        (F.col("predicate") == "skos:exactMatch") & (F.col("obj_kind") == "uri")
-    )
-    labels = (
-        triples.filter(F.col("predicate") == "rdfs:label")
-        .groupBy("subject")
-        .agg(F.min("object").alias("subject_label"))
-        .withColumnRenamed("subject", "subject_id")
-    )
-    return (
-        ex.select(
-            F.col("subject").alias("subject_id"),
-            F.col("object").alias("object_id"),
-        )
-        .distinct()
-        .join(labels, "subject_id", "left")
-        .select(
-            "subject_id",
-            F.coalesce("subject_label", F.lit("")).alias("subject_label"),
-            F.lit("skos:exactMatch").alias("predicate_id"),
-            "object_id",
-            F.lit(SSSOM_JUSTIFICATION).alias("mapping_justification"),
-        )
+    return triples.sparkSession.sql(
+        f"""
+        SELECT subject_id,
+               coalesce(subject_label, '') AS subject_label,
+               'skos:exactMatch' AS predicate_id,
+               object_id,
+               {q(SSSOM_JUSTIFICATION)} AS mapping_justification
+        FROM (SELECT DISTINCT subject AS subject_id, object AS object_id
+              FROM {{t}}
+              WHERE predicate = 'skos:exactMatch' AND obj_kind = 'uri')
+        LEFT JOIN (SELECT subject AS subject_id, min(object) AS subject_label
+                   FROM {{t}} WHERE predicate = 'rdfs:label'
+                   GROUP BY subject)
+          USING (subject_id)
+        """,
+        t=triples,
     )
 
 
@@ -114,13 +107,9 @@ def _used_curie_map(rows: DataFrame) -> dict[str, str]:
     both expand to the same ORDO namespace."""
     prefixes = {
         r.p
-        for r in rows.select(
-            F.explode(
-                F.array(
-                    F.substring_index("subject_id", ":", 1),
-                    F.substring_index("object_id", ":", 1),
-                )
-            ).alias("p")
+        for r in rows.selectExpr(
+            "explode(array(substring_index(subject_id, ':', 1),"
+            " substring_index(object_id, ':', 1))) AS p"
         )
         .distinct()
         .collect()
@@ -196,87 +185,56 @@ def obograph_nodes(triples: DataFrame) -> DataFrame:
     """One row per named owl:Class: (id, json) where json is the
     obographs node object.  Labels/synonyms/deprecation/exactMatch
     aggregate per subject in one grouped pass; ids expand to URIs."""
-    named = F.col("subject").contains(":")  # bnode subjects are md5 hex
-    classes = (
-        triples.filter(
-            (F.col("predicate") == "rdf:type")
-            & (F.col("object") == "owl:Class")
-            & named
+    # robot's obographs writer emits xref val as the raw CURIE string
+    # (node/edge ids stay expanded URIs) — match that, since the
+    # reference's `sssom parse -I obographs-json` step consumes this
+    # exact checkpoint format.
+    uri = curie_to_uri("subject")
+    return triples.sparkSession.sql(
+        f"""
+        WITH classes AS (
+          SELECT DISTINCT subject FROM {{t}}
+          WHERE predicate = 'rdf:type' AND object = 'owl:Class'
+            AND contains(subject, ':')  -- bnode subjects are md5 hex
+        ),
+        props AS (
+          SELECT subject,
+                 min(CASE WHEN predicate = 'rdfs:label' THEN object END) AS lbl,
+                 sort_array(collect_set(
+                   CASE WHEN startswith(predicate, 'oboInOwl:has') THEN
+                     named_struct('pred', substring_index(predicate, ':', -1),
+                                  'val', object)
+                   END)) AS synonyms,
+                 sort_array(collect_set(
+                   CASE WHEN predicate = 'skos:exactMatch' THEN
+                     named_struct('val', object)
+                   END)) AS xrefs,
+                 max(CASE WHEN predicate = 'owl:deprecated' THEN true END)
+                   AS deprecated
+          FROM {{t}} LEFT SEMI JOIN classes USING (subject)
+          WHERE predicate IN ('rdfs:label', 'oboInOwl:hasExactSynonym',
+                              'oboInOwl:hasRelatedSynonym', 'owl:deprecated',
+                              'skos:exactMatch')
+          GROUP BY subject
         )
-        .select("subject")
-        .distinct()
+        SELECT {uri} AS id,
+               to_json(named_struct(
+                 'id', {uri},
+                 'lbl', lbl,
+                 'type', 'CLASS',
+                 'meta', CASE WHEN deprecated IS NOT NULL
+                                   OR size(coalesce(synonyms, array())) > 0
+                                   OR size(coalesce(xrefs, array())) > 0
+                              THEN named_struct(
+                                'deprecated', deprecated,
+                                'synonyms',
+                                CASE WHEN size(synonyms) > 0 THEN synonyms END,
+                                'xrefs', CASE WHEN size(xrefs) > 0 THEN xrefs END)
+                         END)) AS json
+        FROM classes LEFT JOIN props USING (subject)
+        """,
+        t=triples,
     )
-    props = (
-        triples.join(classes, "subject", "semi")
-        .filter(
-            F.col("predicate").isin(
-                "rdfs:label",
-                "oboInOwl:hasExactSynonym",
-                "oboInOwl:hasRelatedSynonym",
-                "owl:deprecated",
-                "skos:exactMatch",
-            )
-        )
-        .groupBy("subject")
-        .agg(
-            F.min(
-                F.when(F.col("predicate") == "rdfs:label", F.col("object"))
-            ).alias("lbl"),
-            F.sort_array(
-                F.collect_set(
-                    F.when(
-                        F.col("predicate").startswith("oboInOwl:has"),
-                        F.struct(
-                            F.substring_index("predicate", ":", -1).alias(
-                                "pred"
-                            ),
-                            F.col("object").alias("val"),
-                        ),
-                    )
-                )
-            ).alias("synonyms"),
-            # robot's obographs writer emits xref val as the raw CURIE
-            # string (node/edge ids stay expanded URIs) — match that,
-            # since the reference's `sssom parse -I obographs-json`
-            # step consumes this exact checkpoint format.
-            F.sort_array(
-                F.collect_set(
-                    F.when(
-                        F.col("predicate") == "skos:exactMatch",
-                        F.struct(F.col("object").alias("val")),
-                    )
-                )
-            ).alias("xrefs"),
-            F.max(
-                F.when(F.col("predicate") == "owl:deprecated", F.lit(True))
-            ).alias("deprecated"),
-        )
-    )
-    node = classes.join(props, "subject", "left").select(
-        curie_to_uri(F.col("subject")).alias("id"),
-        F.to_json(
-            F.struct(
-                curie_to_uri(F.col("subject")).alias("id"),
-                F.col("lbl"),
-                F.lit("CLASS").alias("type"),
-                F.when(
-                    F.col("deprecated").isNotNull()
-                    | (F.size(F.coalesce("synonyms", F.array())) > 0)
-                    | (F.size(F.coalesce("xrefs", F.array())) > 0),
-                    F.struct(
-                        F.col("deprecated"),
-                        F.when(F.size("synonyms") > 0, F.col("synonyms")).alias(
-                            "synonyms"
-                        ),
-                        F.when(F.size("xrefs") > 0, F.col("xrefs")).alias(
-                            "xrefs"
-                        ),
-                    ),
-                ).alias("meta"),
-            )
-        ).alias("json"),
-    )
-    return node
 
 
 def obograph_edges(triples: DataFrame) -> DataFrame:
@@ -285,24 +243,21 @@ def obograph_edges(triples: DataFrame) -> DataFrame:
     Direct named-class subClassOf → ``is_a``; subClassOf pointing at a
     restriction bnode collapses to (sub, onProperty URI, someValuesFrom
     URI) — obographs' standard existential-restriction edge."""
-    sub_named = triples.filter(
-        (F.col("predicate") == "rdfs:subClassOf") & (F.col("obj_kind") == "uri")
-    ).select(
-        curie_to_uri(F.col("subject")).alias("sub"),
-        F.lit("is_a").alias("pred"),
-        curie_to_uri(F.col("object")).alias("obj"),
-    )
-    restriction = restrictions(triples).select(
-        curie_to_uri(F.col("cls")).alias("sub"),
-        curie_to_uri(F.col("prop")).alias("pred"),
-        curie_to_uri(F.col("filler")).alias("obj"),
-    )
-    edges = sub_named.unionByName(restriction).distinct()
-    return edges.select(
-        "sub",
-        "pred",
-        "obj",
-        F.to_json(F.struct("sub", "pred", "obj")).alias("json"),
+    return triples.sparkSession.sql(
+        f"""
+        SELECT sub, pred, obj,
+               to_json(named_struct('sub', sub, 'pred', pred, 'obj', obj)) AS json
+        FROM (SELECT {curie_to_uri("subject")} AS sub, 'is_a' AS pred,
+                     {curie_to_uri("object")} AS obj
+              FROM {{t}}
+              WHERE predicate = 'rdfs:subClassOf' AND obj_kind = 'uri'
+              UNION
+              SELECT {curie_to_uri("cls")}, {curie_to_uri("prop")},
+                     {curie_to_uri("filler")}
+              FROM {{r}})
+        """,
+        t=triples,
+        r=restrictions(triples),
     )
 
 

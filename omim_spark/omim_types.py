@@ -11,8 +11,7 @@ from __future__ import annotations
 
 from enum import Enum
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from omim_spark.sqltext import q
 
 
 class OmimType(str, Enum):
@@ -42,13 +41,13 @@ PREFIX_CHAR_TO_TYPE = {
 }
 
 
-def omim_type_from_prefix_word(col: Column) -> Column:
-    """Prefix word ('Asterisk', ...) → OmimType name; empty/null → SUSPECTED."""
-    expr = None
-    for word, typ in PREFIX_WORD_TO_TYPE.items():
-        cond = col == word
-        expr = F.when(cond, typ) if expr is None else expr.when(cond, typ)
-    return expr.otherwise(OmimType.SUSPECTED.value)
+def omim_type_from_prefix_word(col: str) -> str:
+    """SQL expression: prefix word ('Asterisk', ...) in ``col`` →
+    OmimType name; empty/null → SUSPECTED."""
+    arms = " ".join(
+        f"WHEN {q(word)} THEN {q(typ)}" for word, typ in PREFIX_WORD_TO_TYPE.items()
+    )
+    return f"CASE {col} {arms} ELSE {q(OmimType.SUSPECTED.value)} END"
 
 
 # mim2gene entry-type phrase → gene/phenotype bucket

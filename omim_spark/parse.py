@@ -1,15 +1,16 @@
 """Source-file parsers → typed DataFrames (SURVEY §2.2-§2.4,
 reference omim2obo/parsers/omim_txt_parser.py).
 
-Every parser is a pure Column-expression transform over the
-comment-filtered scans from ``omim_spark.io.readers`` — the
-reference's per-line loops and dict builds become select/filter/
-groupBy plans that Catalyst can push down and parallelize.
+Every parser is a pure SQL-expression transform (``selectExpr`` /
+``filter`` text) over the comment-filtered scans from
+``omim_spark.io.readers`` — the reference's per-line loops and dict
+builds become select/filter/groupBy plans that Catalyst can push down
+and parallelize.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from omim_spark.omim_types import (
@@ -17,21 +18,27 @@ from omim_spark.omim_types import (
     PHENOTYPE_ENTRY_TYPES,
     omim_type_from_prefix_word,
 )
+from omim_spark.sqltext import fresh, q
 
 # ---------------------------------------------------------------------------
 # T1: MIM id validation/repair (reference omim_txt_parser.py:281-308)
 # ---------------------------------------------------------------------------
 
 
-def parse_omim_id(col: Column) -> Column:
-    """Validate/repair a MIM id: 6 digits pass through; '{123456}' and
-    '123456,...' forms are repaired; anything else → NULL."""
-    repaired = (
-        F.when(col.rlike(r"^\d{6}$"), col)
-        .when(col.rlike(r"^\{\d{6}\}"), F.regexp_extract(col, r"^\{(\d{6})\}", 1))
-        .when(col.rlike(r"^\d{6},"), F.regexp_extract(col, r"^(\d{6}),", 1))
+_SIX_DIGITS = q(r"^\d{6}$")
+_BRACED, _BRACED_ID = q(r"^\{\d{6}\}"), q(r"^\{(\d{6})\}")
+_COMMA, _COMMA_ID = q(r"^\d{6},"), q(r"^(\d{6}),")
+
+
+def parse_omim_id(col: str) -> str:
+    """SQL expression: validate/repair the MIM id ``col``: 6 digits
+    pass through; '{123456}' and '123456,...' forms are repaired;
+    anything else → NULL."""
+    return (
+        f"CASE WHEN {col} RLIKE {_SIX_DIGITS} THEN {col}"
+        f" WHEN {col} RLIKE {_BRACED} THEN regexp_extract({col}, {_BRACED_ID}, 1)"
+        f" WHEN {col} RLIKE {_COMMA} THEN regexp_extract({col}, {_COMMA_ID}, 1) END"
     )
-    return repaired
 
 
 # ---------------------------------------------------------------------------
@@ -47,34 +54,24 @@ def parse_mim_titles(raw: DataFrame) -> DataFrame:
     list (the 'AND' token is dropped); other Caret rows (REMOVED FROM
     DATABASE) yield an empty array; non-obsolete rows yield NULL.
     """
-    trimmed = raw.select(
-        *[F.trim(F.col(c)).alias(c) for c in raw.columns]
-    ).filter(
-        ~(
-            F.coalesce(F.col("prefix"), F.lit("")).eqNullSafe("")
-            & F.coalesce(F.col("mim_number"), F.lit("")).eqNullSafe("")
-            & F.coalesce(F.col("preferred_title"), F.lit("")).eqNullSafe("")
-        )
-        & F.col("mim_number").isNotNull()
+    trimmed = raw.selectExpr(*(f"trim(`{c}`) AS `{c}`" for c in raw.columns)).filter(
+        "NOT (coalesce(prefix, '') <=> '' AND coalesce(mim_number, '') <=> ''"
+        " AND coalesce(preferred_title, '') <=> '') AND mim_number IS NOT NULL"
     )
-    moved = F.when(
-        (F.col("prefix") == "Caret")
-        & F.col("preferred_title").startswith("MOVED TO "),
-        F.filter(
-            F.transform(
-                F.split(F.substring(F.col("preferred_title"), 10, 10_000), " "),
-                lambda t: parse_omim_id(t),
-            ),
-            lambda x: x.isNotNull(),
-        ),
-    ).when(F.col("prefix") == "Caret", F.array().cast("array<string>"))
-    return trimmed.select(
-        F.col("mim_number"),
-        omim_type_from_prefix_word(F.col("prefix")).alias("omim_type"),
-        F.col("preferred_title"),
-        F.col("alternative_titles"),
-        F.col("included_titles"),
-        moved.alias("replaced_by"),
+    t, x = fresh("t"), fresh("x")
+    moved = (
+        "CASE WHEN prefix = 'Caret' AND startswith(preferred_title, 'MOVED TO ')"
+        " THEN filter(transform(split(substring(preferred_title, 10, 10000), ' '),"
+        f" {t} -> {parse_omim_id(t)}), {x} -> {x} IS NOT NULL)"
+        " WHEN prefix = 'Caret' THEN CAST(array() AS array<string>) END"
+    )
+    return trimmed.selectExpr(
+        "mim_number",
+        f"{omim_type_from_prefix_word('prefix')} AS omim_type",
+        "preferred_title",
+        "alternative_titles",
+        "included_titles",
+        f"{moved} AS replaced_by",
     )
 
 
@@ -97,27 +94,31 @@ def parse_morbid_map(raw: DataFrame) -> DataFrame:
     of two hand-built dict indexes.  ``row_order`` preserves file
     order for first-wins semantics (SURVEY §4.2).
     """
-    with_order = raw.withColumn("row_order", F.monotonically_increasing_id())
-    has_mim = F.col("phenotype").rlike(r"\d{6}")
-    p_label = F.when(
-        has_mim, F.regexp_extract("phenotype", _P_REGEX, 1)
-    ).otherwise(F.regexp_extract("phenotype", _P_REGEX_NO_MIM, 1))
-    p_mim = F.when(has_mim, F.regexp_extract("phenotype", _P_REGEX, 2)).otherwise(
-        F.lit("")
-    )
-    map_key = F.when(
-        has_mim, F.regexp_extract("phenotype", _P_REGEX, 3)
-    ).otherwise(F.regexp_extract("phenotype", _P_REGEX_NO_MIM, 2))
-    return with_order.filter(
-        F.col("mim_number").isNotNull() & (F.trim(F.col("mim_number")) != "")
-    ).select(
-        F.trim(F.col("mim_number")).alias("gene_mim"),
-        F.trim(F.col("cyto_location")).alias("cyto_location"),
-        F.split(F.col("gene_symbols"), ", ").alias("gene_symbols"),
-        p_label.alias("p_label"),
-        p_mim.alias("p_mim"),
-        map_key.alias("map_key"),
-        F.col("row_order"),
+
+    has_mim = "phenotype RLIKE " + q(r"\d{6}")
+
+    def extract(with_mim: int, without_mim: str) -> str:
+        return (
+            f"CASE WHEN {has_mim}"
+            f" THEN regexp_extract(phenotype, {q(_P_REGEX)}, {with_mim})"
+            f" ELSE {without_mim} END"
+        )
+
+    def no_mim(group: int) -> str:
+        return f"regexp_extract(phenotype, {q(_P_REGEX_NO_MIM)}, {group})"
+
+    return (
+        raw.selectExpr("*", "monotonically_increasing_id() AS row_order")
+        .filter("mim_number IS NOT NULL AND trim(mim_number) != ''")
+        .selectExpr(
+            "trim(mim_number) AS gene_mim",
+            "trim(cyto_location) AS cyto_location",
+            "split(gene_symbols, ', ') AS gene_symbols",
+            f"{extract(1, no_mim(1))} AS p_label",
+            f"{extract(2, q(''))} AS p_mim",
+            f"{extract(3, no_mim(2))} AS map_key",
+            "row_order",
+        )
     )
 
 
@@ -126,13 +127,12 @@ def gene_phenotypes(assocs: DataFrame) -> DataFrame:
     fields (reference parse_morbid_map builds this dict directly;
     min_by(row_order) reproduces file-order 'first')."""
     return assocs.groupBy("gene_mim").agg(
-        F.min_by("cyto_location", "row_order").alias("cyto_location"),
-        F.min_by("gene_symbols", "row_order").alias("gene_symbols"),
-        F.sort_array(
-            F.collect_list(
-                F.struct("row_order", "p_mim", "p_label", "map_key")
-            )
-        ).alias("phenotype_associations"),
+        F.expr("min_by(cyto_location, row_order) AS cyto_location"),
+        F.expr("min_by(gene_symbols, row_order) AS gene_symbols"),
+        F.expr(
+            "sort_array(collect_list(struct(row_order, p_mim, p_label, map_key)))"
+            " AS phenotype_associations"
+        ),
     )
 
 
@@ -140,14 +140,13 @@ def phenotype_genes(assocs: DataFrame) -> DataFrame:
     """A2: inverted grouping phenotype → gene associations
     (reference get_phenotype_genes omim_txt_parser.py:673-688)."""
     return (
-        assocs.filter(F.col("p_mim") != "")
+        assocs.filter("p_mim != ''")
         .groupBy("p_mim")
         .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct("row_order", "gene_mim", "p_label", "map_key")
-                )
-            ).alias("gene_associations")
+            F.expr(
+                "sort_array(collect_list("
+                "struct(row_order, gene_mim, p_label, map_key))) AS gene_associations"
+            )
         )
     )
 
@@ -157,18 +156,20 @@ def phenotype_genes(assocs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _in(values: tuple[str, ...]) -> str:
+    return ", ".join(map(q, values))
+
+
 def parse_mim2gene(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """mim2gene scan → (gene_map, pheno_map) of mim → entrez id
     (F3: one scan, two filtered projections)."""
-    base = raw.filter(
-        F.col("entrez_id").isNotNull() & (F.col("entrez_id") != "")
-    )
-    gene_map = base.filter(F.col("entry_type").isin(*GENE_ENTRY_TYPES)).select(
+    base = raw.filter("entrez_id IS NOT NULL AND entrez_id != ''")
+    gene_map = base.filter(f"entry_type IN ({_in(GENE_ENTRY_TYPES)})").select(
         "mim_number", "entrez_id"
     )
-    pheno_map = base.filter(
-        F.col("entry_type").isin(*PHENOTYPE_ENTRY_TYPES)
-    ).select("mim_number", "entrez_id")
+    pheno_map = base.filter(f"entry_type IN ({_in(PHENOTYPE_ENTRY_TYPES)})").select(
+        "mim_number", "entrez_id"
+    )
     return gene_map, pheno_map
 
 
@@ -178,23 +179,16 @@ def reconcile_hgnc_symbol_maps(
     """J3: mim→HGNC-symbol from mim2gene ∪ genemap2; a key mapped to
     two different symbols is DROPPED, not resolved (reference
     omim_txt_parser.py:426-438)."""
-    a = mim2gene.filter(
-        F.col("hgnc_symbol").isNotNull() & (F.col("hgnc_symbol") != "")
-    ).select(F.col("mim_number").alias("mim"), F.col("hgnc_symbol").alias("sym_a"))
-    b = genemap2.filter(
-        F.col("approved_gene_symbol").isNotNull()
-        & (F.col("approved_gene_symbol") != "")
-    ).select(
-        F.col("mim_number").alias("mim"),
-        F.col("approved_gene_symbol").alias("sym_b"),
+    a = mim2gene.filter("hgnc_symbol IS NOT NULL AND hgnc_symbol != ''").selectExpr(
+        "mim_number AS mim", "hgnc_symbol AS sym_a"
     )
-    joined = a.join(b, "mim", "full_outer")
-    return joined.filter(
-        F.col("sym_a").isNull()
-        | F.col("sym_b").isNull()
-        | (F.col("sym_a") == F.col("sym_b"))
-    ).select(
-        "mim", F.coalesce("sym_a", "sym_b").alias("hgnc_symbol")
+    b = genemap2.filter(
+        "approved_gene_symbol IS NOT NULL AND approved_gene_symbol != ''"
+    ).selectExpr("mim_number AS mim", "approved_gene_symbol AS sym_b")
+    return (
+        a.join(b, "mim", "full_outer")
+        .filter("sym_a IS NULL OR sym_b IS NULL OR sym_a = sym_b")
+        .selectExpr("mim", "coalesce(sym_a, sym_b) AS hgnc_symbol")
     )
 
 
@@ -206,13 +200,11 @@ def reconcile_hgnc_symbol_maps(
 def parse_phenotypic_series(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Ragged file → (series(ps, title), members(ps, member_mim)); the
     'PS' prefix is stripped (stored bare, re-prefixed at emission)."""
-    ps = F.regexp_replace(F.trim(F.col("ps_id")), "^PS", "")
-    series = raw.filter(
-        F.col("col2").isNotNull() & F.col("col3").isNull()
-    ).select(ps.alias("ps"), F.trim(F.col("col2")).alias("title"))
-    members = raw.filter(F.col("col3").isNotNull()).select(
-        ps.alias("ps"), F.trim(F.col("col2")).alias("member_mim")
+    ps = "regexp_replace(trim(ps_id), '^PS', '') AS ps"
+    series = raw.filter("col2 IS NOT NULL AND col3 IS NULL").selectExpr(
+        ps, "trim(col2) AS title"
     )
+    members = raw.filter("col3 IS NOT NULL").selectExpr(ps, "trim(col2) AS member_mim")
     return series, members
 
 
@@ -231,16 +223,15 @@ def hgnc_symbol_id_map(
     """symbol → numeric hgnc id ('HGNC:5' → '5'), skipping null rows;
     fails the build if >1% of rows are bad (F10 quality gate — the one
     driver-side action, a 2-number aggregate)."""
-    bad = F.col("hgnc_id").isNull() | F.col("symbol").isNull()
-    counts = hgnc.agg(
-        F.count("*").alias("total"), F.sum(bad.cast("long")).alias("n_bad")
+    bad = "hgnc_id IS NULL OR symbol IS NULL"
+    counts = hgnc.selectExpr(
+        "count(*) AS total", f"sum(CAST({bad} AS BIGINT)) AS n_bad"
     ).collect()[0]
     if counts.total and counts.n_bad / counts.total > max_bad_ratio:
         raise HgncQualityError(
             f"{counts.n_bad}/{counts.total} HGNC rows missing id/symbol "
             f"(> {max_bad_ratio:.0%} threshold)"
         )
-    return hgnc.filter(~bad).select(
-        F.col("symbol"),
-        F.substring_index("hgnc_id", ":", -1).alias("hgnc_id"),
+    return hgnc.filter(f"NOT ({bad})").selectExpr(
+        "symbol", "substring_index(hgnc_id, ':', -1) AS hgnc_id"
     )

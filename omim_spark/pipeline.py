@@ -61,22 +61,15 @@ def load_omim_to_mondo(spark: SparkSession, path: str) -> DataFrame:
     """S5: SSSOM → (omim_mim, mondo_id), either orientation
     (reference main.py:87-109)."""
     raw = readers.read_sssom(spark, path)
-    subj_is_omim = F.col("subject_id").startswith("OMIM:")
-    obj_is_omim = F.col("object_id").startswith("OMIM:")
-    oriented = raw.filter(subj_is_omim | obj_is_omim).select(
-        F.when(subj_is_omim, F.col("subject_id"))
-        .otherwise(F.col("object_id"))
-        .alias("omim"),
-        F.when(subj_is_omim, F.col("object_id"))
-        .otherwise(F.col("subject_id"))
-        .alias("mondo"),
-    )
+    subj_is_omim = "startswith(subject_id, 'OMIM:')"
     return (
-        oriented.filter(F.col("mondo").startswith("MONDO:"))
-        .select(
-            F.substring_index("omim", ":", -1).alias("omim_mim"),
-            F.col("mondo").alias("mondo_id"),
+        raw.filter(f"{subj_is_omim} OR startswith(object_id, 'OMIM:')")
+        .selectExpr(
+            f"CASE WHEN {subj_is_omim} THEN subject_id ELSE object_id END AS omim",
+            f"CASE WHEN {subj_is_omim} THEN object_id ELSE subject_id END AS mondo",
         )
+        .filter("startswith(mondo, 'MONDO:')")
+        .selectExpr("substring_index(omim, ':', -1) AS omim_mim", "mondo AS mondo_id")
         .distinct()
     )
 
@@ -130,8 +123,8 @@ def build_graph(
         parse.reconcile_hgnc_symbol_maps(mim2gene_raw, genemap2)
         if genemap2 is not None
         else mim2gene_raw.filter(
-            F.col("hgnc_symbol").isNotNull() & (F.col("hgnc_symbol") != "")
-        ).select(F.col("mim_number").alias("mim"), "hgnc_symbol")
+            "hgnc_symbol IS NOT NULL AND hgnc_symbol != ''"
+        ).selectExpr("mim_number AS mim", "hgnc_symbol")
     )
     hgnc_ids = parse.hgnc_symbol_id_map(
         readers.read_hgnc(spark, p("hgnc_complete_set.txt"))
@@ -143,18 +136,16 @@ def build_graph(
 
     protected = readers.read_curator_tsv(
         spark, p("protected-disease-gene.tsv"), schemas.PROTECTED_D2G
-    ).select(
-        F.substring_index("phenotype_mim", ":", -1).alias("p_mim"),
-        F.substring_index("gene_mim", ":", -1).alias("gene_mim"),
-        F.substring_index("hgnc_id", ":", -1).alias("hgnc_id"),
-        F.col("orcid"),
-        F.col("mondo_id"),
+    ).selectExpr(
+        "substring_index(phenotype_mim, ':', -1) AS p_mim",
+        "substring_index(gene_mim, ':', -1) AS gene_mim",
+        "substring_index(hgnc_id, ':', -1) AS hgnc_id",
+        "orcid",
+        "mondo_id",
     )
     exclusions = readers.read_curator_tsv(
         spark, p("exclusions-disease-gene.tsv"), schemas.EXCLUSIONS_D2G
-    ).select(
-        F.substring_index("omim_id", ":", -1).alias("p_mim"), F.col("orcid")
-    )
+    ).selectExpr("substring_index(omim_id, ':', -1) AS p_mim", "orcid")
 
     # --- Decision table ----------------------------------------------------
     decided = assoc_mod.derive_associations(assocs, exclusions, protected)
@@ -180,30 +171,28 @@ def build_graph(
     # has-phenotype restriction (reference main.py:385-394)
     parts.append(
         T.emit_exact_match(
-            gene_map, "mim_number", F.concat(F.lit("NCBIGENE:"), F.col("entrez_id"))
+            gene_map, "mim_number", F.expr("concat('NCBIGENE:', entrez_id)")
         )
     )
     parts.append(
         T.emit_subclassof_restriction(
             pheno_map,
             F.lit("RO:0002200"),
-            F.concat(F.lit("OMIM:"), F.col("mim_number")),
-            F.concat(F.lit("NCBIGENE:"), F.col("entrez_id")),
+            F.expr("concat('OMIM:', mim_number)"),
+            F.expr("concat('NCBIGENE:', entrez_id)"),
         )
     )
     # HGNC symbol + id matches (main.py:390-394)
     parts.append(
         T.emit_exact_match(
-            hgnc_symbol_map, "mim", F.concat(F.lit("HGNC_symbol:"), F.col("hgnc_symbol"))
+            hgnc_symbol_map, "mim", F.expr("concat('HGNC_symbol:', hgnc_symbol)")
         )
     )
     with_ids = hgnc_symbol_map.join(
-        F.broadcast(hgnc_ids), hgnc_symbol_map.hgnc_symbol == hgnc_ids.symbol
+        F.broadcast(hgnc_ids), F.expr("hgnc_symbol = symbol")
     )
     parts.append(
-        T.emit_exact_match(
-            with_ids, "mim", F.concat(F.lit("HGNC:"), F.col("hgnc_id"))
-        )
+        T.emit_exact_match(with_ids, "mim", F.expr("concat('HGNC:', hgnc_id)"))
     )
 
     # Phenotypic series (main.py:396-404)
@@ -211,37 +200,35 @@ def build_graph(
 
     # Gene-chromosome restrictions (main.py:407-415): first-wins cyto
     gene_cyto = parse.gene_phenotypes(assocs).filter(
-        F.col("cyto_location").isNotNull() & (F.col("cyto_location") != "")
+        "cyto_location IS NOT NULL AND cyto_location != ''"
     )
     parts.append(
         T.emit_subclassof_restriction(
             gene_cyto,
             F.lit("RO:0002525"),  # is subsequence of
-            F.concat(F.lit("CHR:9606chr"), F.col("cyto_location")),
-            F.concat(F.lit("OMIM:"), F.col("gene_mim")),
+            F.expr("concat('CHR:9606chr', cyto_location)"),
+            F.expr("concat('OMIM:', gene_mim)"),
         )
     )
 
     # Associations
     causal = decided.filter(
-        F.col("action").isin(assoc_mod.ACT_CAUSAL, assoc_mod.ACT_PROTECTED)
+        f"action IN ('{assoc_mod.ACT_CAUSAL}', '{assoc_mod.ACT_PROTECTED}')"
     )
     parts.append(T.emit_gene_disease_associations(causal))
     prot_match = decided.filter(
-        (F.col("action") == assoc_mod.ACT_PROTECTED) & F.col("hgnc_id").isNotNull()
+        f"action = '{assoc_mod.ACT_PROTECTED}' AND hgnc_id IS NOT NULL"
     )
     parts.append(
-        T.emit_exact_match(
-            prot_match, "gene_mim", F.concat(F.lit("HGNC:"), F.col("hgnc_id"))
-        )
+        T.emit_exact_match(prot_match, "gene_mim", F.expr("concat('HGNC:', hgnc_id)"))
     )
-    noncausal = decided.filter(F.col("action") == assoc_mod.ACT_NONCAUSAL)
+    noncausal = decided.filter(f"action = '{assoc_mod.ACT_NONCAUSAL}'")
     parts.append(
         T.emit_restriction_with_evidence(
             noncausal,
             F.col("predicate"),
-            F.concat(F.lit("OMIM:"), F.col("p_mim")),
-            F.concat(F.lit("OMIM:"), F.col("gene_mim")),
+            F.expr("concat('OMIM:', p_mim)"),
+            F.expr("concat('OMIM:', gene_mim)"),
             F.col("evidence"),
             F.col("orcid"),
         )
@@ -250,7 +237,7 @@ def build_graph(
     # Protected MONDO mappings (main.py:490-497)
     parts.append(
         T.emit_exact_match(
-            protected.filter(F.col("mondo_id").isNotNull()),
+            protected.filter("mondo_id IS NOT NULL"),
             "p_mim",
             F.col("mondo_id"),
         )

@@ -17,15 +17,9 @@ their shuffle stages have run.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from omim_spark.triples import (
-    _emit,
-    _t,
-    emit_subclassof_restriction,
-    restrictions,
-    union_triples,
-)
+from omim_spark.sqltext import q
+from omim_spark.triples import _emit, _restriction_cols, _t, restrictions
 
 D2G_PREDICATES = [
     "RO:0003302",
@@ -36,91 +30,81 @@ D2G_PREDICATES = [
 ]
 
 
-def _p(triples: DataFrame, pred: str, alias: str) -> DataFrame:
-    return (
-        triples.filter(F.col("predicate") == pred)
-        .select(F.col("subject").alias(f"{alias}_s"), F.col("object").alias(f"{alias}_o"))
-        .alias(alias)
-    )
-
-
 def pmid_mentions(triples: DataFrame) -> DataFrame:
     """`make get-pmids` (reference omim_code_pmid_query.py:30-43):
     SELECT ?omim_code ?pmid WHERE { ?omim IAO:0000142 ?pmid } with
     URIs post-processed to bare codes."""
     return (
-        triples.filter(F.col("predicate") == "IAO:0000142")
-        .select(
-            F.substring_index("subject", ":", -1).alias("omim_code"),
-            F.substring_index("object", ":", -1).alias("pmid"),
+        triples.filter("predicate = 'IAO:0000142'")
+        .selectExpr(
+            "substring_index(subject, ':', -1) AS omim_code",
+            "substring_index(object, ':', -1) AS pmid",
         )
         .orderBy("omim_code", "pmid")
     )
 
 
 def disease_gene_relationships(triples: DataFrame) -> DataFrame:
-    """sparql/disease-gene-relationships.sparql:9-48 as DataFrame
-    joins: class ⋈ label ⋈ subClassOf ⋈ restriction(onProperty ∈ 5 RO
-    preds, someValuesFrom) ⋈ object class+label; OPTIONAL biolink
-    categories → left joins; direction via IF(pred==RO:0004003)."""
-    cls = _p(triples, "rdf:type", "cls").filter(F.col("cls_o") == "owl:Class")
-    lab = _p(triples, "rdfs:label", "lab")
-    rst = restrictions(triples).filter(F.col("prop").isin(D2G_PREDICATES))
-    cat = _p(triples, "biolink:category", "cat")
-    ocls = cls.select(
-        F.col("cls_s").alias("ocls_s"), F.col("cls_o").alias("ocls_o")
+    """sparql/disease-gene-relationships.sparql:9-48 as joins: class ⋈
+    label ⋈ subClassOf ⋈ restriction(onProperty ∈ 5 RO preds,
+    someValuesFrom) ⋈ object class+label; OPTIONAL biolink categories
+    → left joins; direction via IF(pred==RO:0004003)."""
+    preds = ", ".join(map(q, D2G_PREDICATES))
+    return triples.sparkSession.sql(
+        f"""
+        WITH klass AS (SELECT subject AS cls_s, object AS cls_o FROM {{t}}
+                       WHERE predicate = 'rdf:type' AND object = 'owl:Class'),
+             label AS (SELECT subject AS lab_s, object AS lab_o FROM {{t}}
+                       WHERE predicate = 'rdfs:label'),
+             category AS (SELECT subject AS cat_s, object AS cat_o FROM {{t}}
+                          WHERE predicate = 'biolink:category')
+        SELECT cls AS SubId,
+               lab.lab_o AS SubLabel,
+               regexp_replace(cat.cat_o, '^biolink:', '') AS SubBiolink,
+               prop AS Pred,
+               CASE WHEN prop = 'RO:0004003' THEN 'Disease2Gene'
+                    ELSE 'Gene2Disease' END AS PredDirection,
+               filler AS ObjId,
+               olab.lab_o AS ObjLabel,
+               regexp_replace(ocat.cat_o, '^biolink:', '') AS ObjBiolink
+        FROM (SELECT * FROM {{r}} WHERE prop IN ({preds})) rst
+        JOIN klass k ON cls = k.cls_s
+        JOIN label lab ON cls = lab.lab_s
+        JOIN klass ok ON filler = ok.cls_s
+        JOIN label olab ON filler = olab.lab_s
+        LEFT JOIN category cat ON cls = cat.cat_s
+        LEFT JOIN category ocat ON filler = ocat.cat_s
+        ORDER BY PredDirection, SubBiolink, Pred, SubId, ObjBiolink, ObjId
+        """,
+        t=triples,
+        r=restrictions(triples),
     )
-    olab = lab.select(F.col("lab_s").alias("olab_s"), F.col("lab_o").alias("olab_o"))
-    ocat = cat.select(F.col("cat_s").alias("ocat_s"), F.col("cat_o").alias("ocat_o"))
-
-    joined = (
-        rst.join(cls, F.col("cls") == F.col("cls_s"))
-        .join(lab, F.col("cls") == F.col("lab_s"))
-        .join(ocls, F.col("filler") == F.col("ocls_s"))
-        .join(olab, F.col("filler") == F.col("olab_s"))
-        .join(cat, F.col("cls") == F.col("cat_s"), "left")
-        .join(ocat, F.col("filler") == F.col("ocat_s"), "left")
-    )
-    strip_biolink = lambda c: F.regexp_replace(c, "^biolink:", "")  # noqa: E731
-    return joined.select(
-        F.col("cls").alias("SubId"),
-        F.col("lab_o").alias("SubLabel"),
-        strip_biolink(F.col("cat_o")).alias("SubBiolink"),
-        F.col("prop").alias("Pred"),
-        F.when(F.col("prop") == "RO:0004003", "Disease2Gene")
-        .otherwise("Gene2Disease")
-        .alias("PredDirection"),
-        F.col("filler").alias("ObjId"),
-        F.col("olab_o").alias("ObjLabel"),
-        strip_biolink(F.col("ocat_o")).alias("ObjBiolink"),
-    ).orderBy("PredDirection", "SubBiolink", "Pred", "SubId", "ObjBiolink", "ObjId")
 
 
 def mondo_omim_genes(triples: DataFrame) -> DataFrame:
     """sparql/mondo-omim-genes.sparql:12-25: disease exactMatch MONDO,
     disease subClassOf [RO:0004003 someValuesFrom gene], gene
     exactMatch HGNC."""
-    cls = _p(triples, "rdf:type", "cls").filter(F.col("cls_o") == "owl:Class")
-    match = _p(triples, "skos:exactMatch", "m")
-    mondo = match.filter(F.col("m_o").startswith("MONDO:")).select(
-        F.col("m_s").alias("dis"), F.col("m_o").alias("mondo_id")
-    )
-    rst = restrictions(triples).filter(F.col("prop") == "RO:0004003")
-    hgnc = match.filter(F.col("m_o").startswith("HGNC:")).select(
-        F.col("m_s").alias("gene"), F.col("m_o").alias("hgnc_id")
-    )
-    return (
-        rst.join(cls, F.col("cls") == F.col("cls_s"))
-        .join(mondo, F.col("cls") == F.col("dis"))
-        .join(hgnc, F.col("filler") == F.col("gene"))
-        .select(
-            "mondo_id",
-            "hgnc_id",
-            F.col("cls").alias("omim_disease_xref"),
-            F.col("filler").alias("omim_gene"),
-        )
-        .distinct()
-        .orderBy("mondo_id", "hgnc_id", "omim_gene", "omim_disease_xref")
+    return triples.sparkSession.sql(
+        """
+        WITH exact AS (SELECT subject AS m_s, object AS m_o FROM {t}
+                       WHERE predicate = 'skos:exactMatch')
+        SELECT DISTINCT mondo.m_o AS mondo_id,
+                        hgnc.m_o AS hgnc_id,
+                        cls AS omim_disease_xref,
+                        filler AS omim_gene
+        FROM (SELECT * FROM {r} WHERE prop = 'RO:0004003') rst
+        JOIN (SELECT subject AS cls_s FROM {t}
+              WHERE predicate = 'rdf:type' AND object = 'owl:Class') klass
+          ON cls = klass.cls_s
+        JOIN (SELECT * FROM exact WHERE startswith(m_o, 'MONDO:')) mondo
+          ON cls = mondo.m_s
+        JOIN (SELECT * FROM exact WHERE startswith(m_o, 'HGNC:')) hgnc
+          ON filler = hgnc.m_s
+        ORDER BY mondo_id, hgnc_id, omim_gene, omim_disease_xref
+        """,
+        t=triples,
+        r=restrictions(triples),
     )
 
 
@@ -128,22 +112,19 @@ def add_flipped_mondo_mappings(triples: DataFrame) -> DataFrame:
     """sparql/add_flipped_mondo_mappings.ru (J10): for every
     MONDO –exactMatch→ X edge, insert X –exactMatch→ MONDO.  Returns
     the NEW triples (caller unions them in)."""
-    flipped = (
-        triples.filter(
-            (F.col("predicate") == "skos:exactMatch")
-            & F.col("subject").startswith("MONDO:")
-        )
-        .select(
-            F.col("object").alias("subject"),
-            F.lit("skos:exactMatch").alias("predicate"),
-            F.col("subject").alias("object"),
-            F.lit("uri").alias("obj_kind"),
-            F.lit(None).cast("string").alias("datatype"),
-        )
+    return triples.sparkSession.sql(
+        """
+        SELECT f.subject, f.predicate, f.object,
+               'uri' AS obj_kind, CAST(NULL AS STRING) AS datatype
+        FROM (SELECT object AS subject, predicate, subject AS object FROM {t}
+              WHERE predicate = 'skos:exactMatch'
+                AND startswith(subject, 'MONDO:')) f
+        LEFT ANTI JOIN {t} g
+          ON f.subject = g.subject AND f.predicate = g.predicate
+             AND f.object = g.object
+        """,
+        t=triples,
     )
-    return flipped.join(
-        triples, ["subject", "predicate", "object"], "left_anti"
-    ).select("subject", "predicate", "object", "obj_kind", "datatype")
 
 
 def add_hgnc_links(triples: DataFrame) -> DataFrame:
@@ -151,22 +132,20 @@ def add_hgnc_links(triples: DataFrame) -> DataFrame:
     restriction onto an OMIM gene that exactMatches an HGNC id, insert
     a parallel restriction onto the HGNC class (+ its owl:Class
     typing).  Returns the NEW triples."""
-    hgnc = (
-        triples.filter(
-            (F.col("predicate") == "skos:exactMatch")
-            & F.col("object").startswith("HGNC:")
-        )
-        .select(F.col("subject").alias("gene"), F.col("object").alias("hgnc"))
+    base = triples.sparkSession.sql(
+        """
+        SELECT DISTINCT cls, hgnc
+        FROM (SELECT * FROM {r} WHERE prop = 'RO:0004003')
+        JOIN (SELECT subject AS gene, object AS hgnc FROM {t}
+              WHERE predicate = 'skos:exactMatch'
+                AND startswith(object, 'HGNC:'))
+          ON filler = gene
+        """,
+        t=triples,
+        r=restrictions(triples),
     )
-    base = (
-        restrictions(triples)
-        .filter(F.col("prop") == "RO:0004003")
-        .join(hgnc, F.col("filler") == F.col("gene"))
-        .select("cls", "hgnc")
-        .distinct()
+    return _emit(
+        base,
+        _t("hgnc", "rdf:type", q("owl:Class")),
+        *_restriction_cols(q("RO:0004003"), "hgnc", "cls"),
     )
-    typing = _emit(base, _t(F.col("hgnc"), "rdf:type", "owl:Class"))
-    restriction = emit_subclassof_restriction(
-        base, F.lit("RO:0004003"), F.col("hgnc"), F.col("cls")
-    )
-    return union_triples(typing, restriction)

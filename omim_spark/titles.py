@@ -1,8 +1,9 @@
 """Title normalization pipeline (SURVEY §2.7 T1-T8).
 
 Reference: omim2obo/parsers/omim_entry_parser.py:163-369 and
-omim2obo/utils/romanplus.py.  Every step is a Column expression, so no
-Python runs in the build; the procedural ones also exist as plain
+omim2obo/utils/romanplus.py.  Every step is a Spark SQL expression
+(returned as text, composed by the caller), so no Python runs in the
+build; the procedural ones also exist as plain
 Python (``*_py``), the readable reference and the test oracle.
 
 Fidelity notes (deliberate, documented deviations from reference
@@ -27,8 +28,7 @@ import json
 import re
 import string
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from omim_spark.sqltext import fresh, q
 
 # ---------------------------------------------------------------------------
 # Roman numerals (reference omim2obo/utils/romanplus.py:38-83)
@@ -171,8 +171,10 @@ def recapitalize_acronyms_py(title: str, known_abbrevs: list[str] | None) -> str
 
 
 # ---------------------------------------------------------------------------
-# Column forms of the three cores above (parity with the *_py oracles is
-# pinned by tests/test_titles_columns.py)
+# SQL forms of the three cores above (parity with the *_py oracles is
+# pinned by tests/test_titles_columns.py).  Each function takes SQL
+# expressions and returns one; lambda variables come from ``fresh``, so
+# a caller may pass an expression over its own lambda variable.
 # ---------------------------------------------------------------------------
 
 # str.split() separators: the 29 str.isspace() characters (Java's \s
@@ -184,6 +186,8 @@ _PY_WHITESPACE = (
 # Map lookup scans keys linearly; this shape test skips it for all but
 # roman candidates.
 _ROMAN_SHAPE = r"^(XC|XL|L?X{0,3})(IX|IV|V?I{0,3})[A-Z]$"
+
+_NO_STRINGS = "CAST(array() AS array<string>)"
 
 
 def _roman_words() -> dict[str, str]:
@@ -202,117 +206,108 @@ def _roman_words() -> dict[str, str]:
 ROMAN_WORDS = _roman_words()
 
 
-def _map_lit(d: dict[str, str]) -> Column:
+def _map_lit(d: dict[str, str]) -> str:
     """A dict as one map literal: the optimizer folds ``from_json`` of a
-    constant string.  Literal arrays would cost the driver a py4j call
-    per entry (~0.3 s for the roman table)."""
-    return F.from_json(F.lit(json.dumps(d)), "map<string,string>")
+    constant string."""
+    return f"from_json({q(json.dumps(d))}, 'map<string,string>')"
 
 
-def _words(col: Column) -> Column:
-    return F.filter(F.split(col, _PY_WHITESPACE), lambda w: w != "")
+def _words(col: str) -> str:
+    w = fresh("w")
+    return f"filter(split({col}, {q(_PY_WHITESPACE)}), {w} -> {w} != '')"
 
 
-def cleanup_title(
-    col: Column, word_replacements: dict[str, str] | None = None
-) -> Column:
+def cleanup_title(col: str, word_replacements: dict[str, str] | None = None) -> str:
     """:func:`cleanup_title_py` with ``case_method='lower'``, under
     which its stop-list step is a no-op and so is left out."""
-    roman = _map_lit(ROMAN_WORDS)
-    replacements = _map_lit(word_replacements) if word_replacements else None
-
-    def fix(w: Column, i: Column) -> Column:
-        word = F.coalesce(
-            F.when((i > 0) & w.rlike(_ROMAN_SHAPE), F.try_element_at(roman, w)),
-            F.lower(w),
-        )
-        if replacements is None:
-            return word
-        return F.coalesce(F.try_element_at(replacements, word), word)
-
-    return F.array_join(F.transform(_words(col), fix), " ")
+    w, i = fresh("w"), fresh("i")
+    word = (
+        f"coalesce(CASE WHEN {i} > 0 AND {w} RLIKE {q(_ROMAN_SHAPE)}"
+        f" THEN try_element_at({_map_lit(ROMAN_WORDS)}, {w}) END, lower({w}))"
+    )
+    if word_replacements:
+        replaced = f"try_element_at({_map_lit(word_replacements)}, {word})"
+        word = f"coalesce({replaced}, {word})"
+    return f"array_join(transform({_words(col)}, ({w}, {i}) -> {word}), ' ')"
 
 
-def detect_abbreviations(col: Column) -> Column:
+def detect_abbreviations(col: str) -> str:
     """:func:`detect_abbreviations_py` (default threshold).  Group 1 of the dotted pattern
     is what ``re.findall`` returns; no words gives a null share, so no
     bare acronyms (there are none to find anyway)."""
-    words = _words(col)
-    share = F.try_divide(
-        F.size(F.filter(words, lambda w: F.upper(w) == w)), F.size(words)
+    w = fresh("w")
+    share = (
+        f"try_divide(size(filter({_words(col)}, {w} -> upper({w}) = {w})),"
+        f" size({_words(col)}))"
     )
 
-    def findall(pattern: re.Pattern, group: int) -> Column:
-        return F.regexp_extract_all(col, F.lit(pattern.pattern), F.lit(group))
+    def findall(pattern: re.Pattern, group: int) -> str:
+        return f"regexp_extract_all({col}, {q(pattern.pattern)}, {group})"
 
-    return F.concat(
-        findall(_ACRONYM_WITH_PERIODS, 1),
-        F.when(share < 0.75, findall(_ACRONYM_NO_PERIODS, 0))
-        .otherwise(F.array().cast("array<string>")),
-        findall(_TITLE_CASED_ABBREV, 0),
+    return (
+        f"concat({findall(_ACRONYM_WITH_PERIODS, 1)},"
+        f" CASE WHEN {share} < 0.75D THEN {findall(_ACRONYM_NO_PERIODS, 0)}"
+        f" ELSE {_NO_STRINGS} END,"
+        f" {findall(_TITLE_CASED_ABBREV, 0)})"
     )
 
 
-def recapitalize_acronyms(col: Column, known_abbrevs: Column) -> Column:
+def recapitalize_acronyms(col: str, known_abbrevs: str) -> str:
     """:func:`recapitalize_acronyms_py`: a word becomes the smallest
     candidate (code-point order, as ``sorted``) whose lowercase equals
     it; no candidates leaves the title untouched."""
-
-    def recase(abbrevs: Column) -> Column:
-        words = F.transform(
-            _words(col),
-            lambda w: F.coalesce(
-                F.array_min(F.filter(abbrevs, lambda a: F.lower(a) == w)), w
-            ),
-        )
-        return F.when(F.size(abbrevs) == 0, col).otherwise(F.array_join(words, " "))
-
+    abbrevs, w, a = fresh("abbrevs"), fresh("w"), fresh("a")
+    words = (
+        f"transform({_words(col)}, {w} -> coalesce("
+        f"array_min(filter({abbrevs}, {a} -> lower({a}) = {w})), {w}))"
+    )
+    recase = (
+        f"CASE WHEN size({abbrevs}) = 0 THEN {col}"
+        f" ELSE array_join({words}, ' ') END"
+    )
     # The candidates are bound to a lambda variable so they are computed
     # once per title; an outer expression read inside the word lambda
     # would be re-evaluated per word.
-    known = F.coalesce(known_abbrevs, F.array().cast("array<string>"))
-    candidates = F.concat(known, detect_abbreviations(col))
-    return F.transform(F.array(candidates), recase)[0]
+    candidates = (
+        f"concat(coalesce({known_abbrevs}, {_NO_STRINGS}), {detect_abbreviations(col)})"
+    )
+    return f"transform(array({candidates}), {abbrevs} -> {recase})[0]"
 
 
 # ---------------------------------------------------------------------------
-# Structural title expressions (pure Column — T3/T4/T5)
+# Structural title expressions (SQL — T3/T4/T5)
 # ---------------------------------------------------------------------------
 
 
-def title_symbol_pairs(col: Column) -> tuple[Column, Column]:
+def title_symbol_pairs(col: str) -> tuple[str, str]:
     """`T1;S1;S2;;T2;;T3;S3` → (titles array, symbols array)
     (T3 — omim_entry_parser.py:344-369: pairs split on ';;', first
     element of each pair is a title, the rest are symbols)."""
-    pairs = F.split(col, ";;")
-    titles = F.transform(pairs, lambda p: F.trim(F.element_at(F.split(p, ";"), 1)))
-    symbols = F.flatten(
-        F.transform(
-            pairs,
-            lambda p: F.transform(
-                F.slice(
-                    F.split(p, ";"), 2, F.greatest(F.size(F.split(p, ";")) - 1, F.lit(1))
-                ),
-                lambda x: F.trim(x),
-            ),
-        )
+    pairs = f"split({col}, ';;')"
+    p, x = fresh("p"), fresh("x")
+    titles = f"transform({pairs}, {p} -> trim(element_at(split({p}, ';'), 1)))"
+    symbols = (
+        f"flatten(transform({pairs}, {p} -> transform("
+        f"slice(split({p}, ';'), 2, greatest(size(split({p}, ';')) - 1, 1)),"
+        f" {x} -> trim({x}))))"
     )
     return titles, symbols
 
 
-def partition_former(arr: Column) -> tuple[Column, Column]:
+def partition_former(arr: str) -> tuple[str, str]:
     """Split an array into (current, former) by the ', FORMERLY'
     marker (T4 — omim_entry_parser.py:323-331, case-insensitive)."""
-    has_formerly = lambda x: F.upper(x).contains(", FORMERLY")  # noqa: E731
-    current = F.filter(arr, lambda x: ~has_formerly(x))
-    former = F.filter(arr, has_formerly)
-    return current, former
+    x = fresh("x")
+    has_formerly = f"contains(upper({x}), ', FORMERLY')"
+    return (
+        f"filter({arr}, {x} -> NOT {has_formerly})",
+        f"filter({arr}, {x} -> {has_formerly})",
+    )
 
 
-def strip_suffix_markers(col: Column) -> Column:
+def strip_suffix_markers(col: str) -> str:
     """Remove ', FORMERLY' / ', INCLUDED' suffixes (T5 —
     omim_entry_parser.py:316-320; case-sensitive, see module
     docstring)."""
-    return F.regexp_replace(
-        F.regexp_replace(col, r",\s*FORMERLY", ""), r",\s*INCLUDED", ""
-    )
+    formerly, included = q(r",\s*FORMERLY"), q(r",\s*INCLUDED")
+    return f"regexp_replace(regexp_replace({col}, {formerly}, ''), {included}, '')"

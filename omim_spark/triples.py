@@ -1,7 +1,10 @@
 """Triple emission (SURVEY §2.10 G1-G8): the reference's in-memory
 rdflib graph (omim2obo/main.py:202-213) becomes ONE triples DataFrame
 — (subject, predicate, object, obj_kind, datatype) — built as a
-unionByName of select-projections, one per emitter.
+union of SQL-text batches, one per emitter: each emitter hands Spark
+one ``inline(array(named_struct(…), …))`` expression over its source,
+so building a batch costs a handful of driver calls however many
+triple templates it holds.
 
 Blank nodes are deterministic md5 ids (reference DeterministicBNode,
 main.py:178-186): a restriction's id hashes (on|pred|someValuesFrom),
@@ -11,8 +14,8 @@ dedupe instead of multiplying (the reference's random BNode() creates
 a fresh node per call; md5 identity is the Spark-native, idempotent
 equivalent).
 
-Scale: every emitter is a pure projection (explode of a literal
-struct array) — no shuffles until the final distinct/sort in the
+Scale: every emitter is a pure projection (one generator over its
+source rows) — no shuffles until the final distinct/sort in the
 writer.  At 100 TB of input the triples DF stays partition-parallel
 end to end.
 """
@@ -24,44 +27,51 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from omim_spark.sqltext import fresh, q
+
 URI, BNODE, LIT = "uri", "bnode", "literal"
 
-_FIELDS = ["subject", "predicate", "object", "obj_kind", "datatype"]
 
-
-def _t(s: Column, p, o, kind: str = URI, dt=None) -> Column:
-    """One triple as a struct (for array-explode emission)."""
-    p = F.lit(p) if isinstance(p, str) else p
-    o = F.lit(o) if isinstance(o, str) else o
-    return F.struct(
-        s.alias("subject"),
-        p.alias("predicate"),
-        o.cast("string").alias("object"),
-        F.lit(kind).alias("obj_kind"),
-        (F.lit(dt) if dt else F.lit(None).cast("string")).alias("datatype"),
-    )
-
-
-def _emit(df: DataFrame, *triples: Column) -> DataFrame:
-    """Explode a per-row batch of (possibly conditional) triples;
-    null-subject entries (failed WHEN gates) are dropped."""
+def _t(s: str, p: str, o: str, kind: str = URI, dt: str | None = None) -> str:
+    """One triple as a ``named_struct`` SQL expression.  ``s`` and
+    ``o`` are SQL expressions (quote a constant with ``q``); ``p`` is
+    a predicate CURIE, always a constant."""
     return (
-        df.select(F.explode(F.array(*triples)).alias("t"))
-        .select([F.col(f"t.{f}").alias(f) for f in _FIELDS])
-        .filter(F.col("subject").isNotNull() & F.col("object").isNotNull())
+        f"named_struct('subject', {s}, 'predicate', {q(p)}, "
+        f"'object', CAST({o} AS STRING), 'obj_kind', {q(kind)}, "
+        f"'datatype', {q(dt) if dt else 'CAST(NULL AS STRING)'})"
     )
+
+
+def _inline(df: DataFrame, batch: str) -> DataFrame:
+    """Explode a per-row array of triple structs; null elements
+    (failed CASE gates) and null-subject or null-object triples are
+    dropped."""
+    return df.selectExpr(f"inline({batch})").filter(
+        "subject IS NOT NULL AND object IS NOT NULL"
+    )
+
+
+def _emit(df: DataFrame, *triples: str) -> DataFrame:
+    return _inline(df, f"array({', '.join(triples)})")
+
+
+def _bind(df: DataFrame, **cols: Column) -> DataFrame:
+    """``df`` projected to the given Columns under their keyword names,
+    which the emitter's SQL text then reads."""
+    return df.select(*(c.alias(name) for name, c in cols.items()))
 
 
 def union_triples(*parts: DataFrame) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
-def bnode_restriction(on: Column, pred: Column, svf: Column) -> Column:
-    return F.md5(F.concat_ws("|", F.lit("restriction"), on, pred, svf))
+def bnode_restriction(on: str, pred: str, svf: str) -> str:
+    return f"md5(concat_ws('|', 'restriction', {on}, {pred}, {svf}))"
 
 
-def bnode_axiom(source: Column, prop: Column, target: Column) -> Column:
-    return F.md5(F.concat_ws("|", F.lit("axiom"), source, prop, target))
+def bnode_axiom(source: str, prop: str, target: str) -> str:
+    return f"md5(concat_ws('|', 'axiom', {source}, {prop}, {target}))"
 
 
 # ---------------------------------------------------------------------------
@@ -70,20 +80,20 @@ def bnode_axiom(source: Column, prop: Column, target: Column) -> Column:
 
 
 def _axiom_triple_cols(
-    source: Column,
-    prop: Column,
-    target: Column,
+    source: str,
+    prop: str,
+    target: str,
     target_kind: str,
-    anno_pred_vals: list[tuple[str, Column, str]],
-) -> list[Column]:
-    """The reification triples of :func:`emit_axiom_annotations` as
-    struct columns, so multi-leg emitters can pack them into ONE
-    array-explode pass over their source instead of a union leg per
-    axiom family (optimization guide §2.4: the build's dominant stage
-    was re-scanning the checkpointed entries table once per leg)."""
+    anno_pred_vals: list[tuple[str, str, str]],
+) -> list[str]:
+    """The reification triples of :func:`emit_axiom_annotations`, so
+    multi-leg emitters can pack them into ONE array-explode pass over
+    their source instead of a union leg per axiom family (optimization
+    guide §2.4: the build's dominant stage was re-scanning the
+    checkpointed entries table once per leg)."""
     ax = bnode_axiom(source, prop, target)
     return [
-        _t(ax, "rdf:type", "owl:Axiom"),
+        _t(ax, "rdf:type", q("owl:Axiom")),
         _t(ax, "owl:annotatedSource", source),
         _t(ax, "owl:annotatedProperty", prop),
         _t(ax, "owl:annotatedTarget", target, target_kind),
@@ -102,9 +112,10 @@ def emit_axiom_annotations(
     """OWL reification (reference add_axiom_annotations main.py:120-134):
     bnode Axiom + annotatedSource/Property/Target + annotation pairs.
     ``anno_pred_vals``: (predicate curie, value column, value kind)."""
-    return _emit(
-        df, *_axiom_triple_cols(source, prop, target, target_kind, anno_pred_vals)
-    )
+    values = {f"_a{i}": v for i, (_, v, _) in enumerate(anno_pred_vals)}
+    annos = [(p, name, kind) for (p, _, kind), name in zip(anno_pred_vals, values)]
+    bound = _bind(df, _s=source, _p=prop, _o=target, **values)
+    return _emit(bound, *_axiom_triple_cols("_s", "_p", "_o", target_kind, annos))
 
 
 # ---------------------------------------------------------------------------
@@ -112,14 +123,14 @@ def emit_axiom_annotations(
 # ---------------------------------------------------------------------------
 
 
-def _restriction_cols(pred: Column, svf: Column, on: Column) -> list[Column]:
+def _restriction_cols(pred: str, svf: str, on: str) -> list[str]:
     """The four triples of ``on rdfs:subClassOf [owl:Restriction;
     onProperty pred; someValuesFrom svf]`` (reference
     add_subclassof_restriction main.py:149-156) — the one spelling of
     the shape that :func:`restrictions` decodes."""
     b = bnode_restriction(on, pred, svf)
     return [
-        _t(b, "rdf:type", "owl:Restriction"),
+        _t(b, "rdf:type", q("owl:Restriction")),
         _t(b, "owl:onProperty", pred),
         _t(b, "owl:someValuesFrom", svf),
         _t(on, "rdfs:subClassOf", b, BNODE),
@@ -130,7 +141,8 @@ def emit_subclassof_restriction(
     df: DataFrame, pred: Column, svf: Column, on: Column
 ) -> DataFrame:
     """bnode Restriction(onProperty, someValuesFrom) + rdfs:subClassOf."""
-    return _emit(df, *_restriction_cols(pred, svf, on))
+    bound = _bind(df, _pred=pred, _svf=svf, _on=on)
+    return _emit(bound, *_restriction_cols("_pred", "_svf", "_on"))
 
 
 def restrictions(triples: DataFrame) -> DataFrame:
@@ -141,31 +153,31 @@ def restrictions(triples: DataFrame) -> DataFrame:
     graphs; a named-class subClassOf finds no onProperty leg and drops
     out.  Callers filter ``prop``; Catalyst pushes that filter down to
     the onProperty leg."""
-
-    def leg(pred: str, s: str, o: str) -> DataFrame:
-        return triples.filter(F.col("predicate") == pred).select(
-            F.col("subject").alias(s), F.col("object").alias(o)
-        )
-
-    return (
-        leg("rdfs:subClassOf", "cls", "bnode")
-        .join(leg("owl:onProperty", "bnode", "prop"), "bnode")
-        .join(leg("owl:someValuesFrom", "bnode", "filler"), "bnode")
-        .select("cls", "prop", "filler")
+    return triples.sparkSession.sql(
+        """
+        SELECT cls, prop, filler
+        FROM (SELECT subject AS cls, object AS bnode FROM {t}
+              WHERE predicate = 'rdfs:subClassOf')
+        JOIN (SELECT subject AS bnode, object AS prop FROM {t}
+              WHERE predicate = 'owl:onProperty') USING (bnode)
+        JOIN (SELECT subject AS bnode, object AS filler FROM {t}
+              WHERE predicate = 'owl:someValuesFrom') USING (bnode)
+        """,
+        t=triples,
     )
 
 
 def _restriction_with_evidence_cols(
-    pred: Column,
-    svf: Column,
-    on: Column,
-    evidence: Column,
-    orcid: Column | None = None,
-) -> list[Column]:
-    """The G4 triple batch as struct columns: the restriction plus its
-    evidence axiom, so one ``_emit`` pass scans the source once (guide
-    §2.4).  A null ``orcid`` gives a null oboInOwl:source object,
-    which ``_emit``'s null filter drops."""
+    pred: str,
+    svf: str,
+    on: str,
+    evidence: str,
+    orcid: str | None = None,
+) -> list[str]:
+    """The G4 triple batch: the restriction plus its evidence axiom,
+    so one ``_emit`` pass scans the source once (guide §2.4).  A null
+    ``orcid`` gives a null oboInOwl:source object, which ``_emit``'s
+    null filter drops."""
     annos = [
         ("biolink:has_evidence", evidence, LIT),
         ("rdfs:comment", evidence, LIT),
@@ -176,7 +188,7 @@ def _restriction_with_evidence_cols(
         *_restriction_cols(pred, svf, on),
         *_axiom_triple_cols(
             on,
-            F.lit("rdfs:subClassOf"),
+            q("rdfs:subClassOf"),
             bnode_restriction(on, pred, svf),
             BNODE,
             annos,
@@ -195,8 +207,14 @@ def emit_restriction_with_evidence(
     """G4 (reference main.py:159-174): restriction + evidence axiom
     (biolink:has_evidence + rdfs:comment, optional oboInOwl:source).
     One projection pass over ``df`` (was: 3 union legs)."""
+    cols = {"_pred": pred, "_svf": svf, "_on": on, "_ev": evidence}
+    if orcid is not None:
+        cols["_orcid"] = orcid
     return _emit(
-        df, *_restriction_with_evidence_cols(pred, svf, on, evidence, orcid)
+        _bind(df, **cols),
+        *_restriction_with_evidence_cols(
+            "_pred", "_svf", "_on", "_ev", None if orcid is None else "_orcid"
+        ),
     )
 
 
@@ -210,16 +228,15 @@ def emit_gene_disease_associations(df: DataFrame) -> DataFrame:
     with an evidence axiom (reference main.py:189-199).  ``df`` needs
     columns: gene_mim, p_mim, evidence, orcid (nullable).  Both
     directions emit in ONE pass over ``df`` (was: 2×3 union legs)."""
-    gene = F.concat(F.lit("OMIM:"), F.col("gene_mim"))
-    dis = F.concat(F.lit("OMIM:"), F.col("p_mim"))
-    orcid = F.col("orcid")
+    gene = "concat('OMIM:', gene_mim)"
+    dis = "concat('OMIM:', p_mim)"
     return _emit(
         df,
         *_restriction_with_evidence_cols(
-            F.lit("RO:0004003"), gene, dis, F.col("evidence"), orcid
+            q("RO:0004003"), gene, dis, "evidence", "orcid"
         ),
         *_restriction_with_evidence_cols(
-            F.lit("RO:0004013"), dis, gene, F.col("evidence"), orcid
+            q("RO:0004013"), dis, gene, "evidence", "orcid"
         ),
     )
 
@@ -260,25 +277,28 @@ def emit_entry_classes(entries: DataFrame) -> DataFrame:
     former_alt_titles, former_alt_symbols, included_titles,
     included_symbols, former_included_titles, former_included_symbols.
     """
-    uri = F.concat(F.lit("OMIM:"), F.col("mim_number"))
-    is_obsolete = F.col("omim_type") == "OBSOLETE"
-    is_gene = F.col("omim_type").isin("GENE", "HAS_AFFECTED_FEATURE")
-    is_pheno = F.col("omim_type").isin("PHENOTYPE", "HERITABLE_PHENOTYPIC_MARKER")
-    n_replaced = F.size(F.coalesce(F.col("replaced_by"), F.array()))
+    uri = "concat('OMIM:', mim_number)"
+    is_obsolete = "(omim_type = 'OBSOLETE')"
+    is_gene = "(omim_type IN ('GENE', 'HAS_AFFECTED_FEATURE'))"
+    is_pheno = "(omim_type IN ('PHENOTYPE', 'HERITABLE_PHENOTYPIC_MARKER'))"
+    n_replaced = "size(coalesce(replaced_by, array()))"
     # Only a REPLACED obsolete entry is fully suppressed — reference
     # main.py:276-287 `continue`s only when omim_replaced is truthy;
     # an unreplaced obsolete ('REMOVED FROM DATABASE') falls through
     # and still gets its label/synonym/included triples (the type-
     # category branches stay silent since OBSOLETE matches none).
-    suppressed = is_obsolete & (n_replaced > 0)
+    live = f"NOT ({is_obsolete} AND {n_replaced} > 0)"
     has_included = (
-        F.size(F.coalesce(F.col("included_titles"), F.array()))
-        + F.size(F.coalesce(F.col("included_symbols"), F.array()))
-    ) > 0
-    label = F.when(
-        is_gene & (F.size(F.coalesce(F.col("pref_symbols"), F.array())) > 0),
-        F.element_at(F.col("pref_symbols"), 1),
-    ).otherwise(F.col("pref_title"))
+        "(size(coalesce(included_titles, array()))"
+        " + size(coalesce(included_symbols, array()))) > 0"
+    )
+    label = (
+        f"CASE WHEN {is_gene} AND size(coalesce(pref_symbols, array())) > 0"
+        " THEN element_at(pref_symbols, 1) ELSE pref_title END"
+    )
+
+    def when(cond: str, triple: str) -> str:
+        return f"CASE WHEN {cond} THEN {triple} END"
 
     # ONE array-explode pass over entries (guide §2.4): the former
     # shape was an 11-leg union (core, consider, 3 plain synonym
@@ -287,108 +307,87 @@ def emit_entry_classes(entries: DataFrame) -> DataFrame:
     # Each row now packs ALL of its triples (conditional core triples,
     # per-array-element synonym batches, their reification axioms)
     # into one array and explodes once.  The emitted multiset is
-    # unchanged: WHEN gates replace leg filters (null struct elements
+    # unchanged: CASE gates replace leg filters (null struct elements
     # drop in the null filter), per-element batches replace per-leg
     # explodes.
     core = [
-        _t(uri, "rdf:type", "owl:Class"),
-        F.when(is_obsolete, _t(uri, "owl:deprecated", "true", LIT, "xsd:boolean")),
+        _t(uri, "rdf:type", q("owl:Class")),
+        when(is_obsolete, _t(uri, "owl:deprecated", q("true"), LIT, "xsd:boolean")),
         # IAO:0100001 = 'term replaced by' (single replacement only)
-        F.when(
-            is_obsolete & (n_replaced == 1),
-            _t(
-                uri,
-                "IAO:0100001",
-                F.concat(F.lit("OMIM:"), F.element_at(F.col("replaced_by"), 1)),
-            ),
+        when(
+            f"{is_obsolete} AND {n_replaced} = 1",
+            _t(uri, "IAO:0100001", "concat('OMIM:', element_at(replaced_by, 1))"),
         ),
         # Type-conditional categorization (never fires for OBSOLETE
-        # since the type tests exclude it; ~suppressed keeps the gate
+        # since the type tests exclude it; `live` keeps the gate
         # aligned with the reference's control flow)
-        F.when(
-            ~suppressed & is_pheno,
-            _t(uri, "biolink:category", "biolink:Disease"),
+        when(
+            f"{live} AND {is_pheno}", _t(uri, "biolink:category", q("biolink:Disease"))
         ),
-        F.when(~suppressed & is_gene, _t(uri, "rdfs:subClassOf", "SO:0000704")),
-        F.when(
-            ~suppressed & is_gene,
-            _t(uri, "mondo:exclusionReason", "mondo:nonDisease"),
+        when(f"{live} AND {is_gene}", _t(uri, "rdfs:subClassOf", q("SO:0000704"))),
+        when(
+            f"{live} AND {is_gene}",
+            _t(uri, "mondo:exclusionReason", q("mondo:nonDisease")),
         ),
-        F.when(~suppressed & is_gene, _t(uri, "biolink:category", "biolink:Gene")),
-        F.when(
-            ~suppressed & (F.col("omim_type") == "SUSPECTED"),
-            _t(uri, "mondo:exclusionReason", "mondo:excludeTrait"),
+        when(f"{live} AND {is_gene}", _t(uri, "biolink:category", q("biolink:Gene"))),
+        when(
+            f"{live} AND omim_type = 'SUSPECTED'",
+            _t(uri, "mondo:exclusionReason", q("mondo:excludeTrait")),
         ),
-        F.when(~suppressed, _t(uri, "rdfs:label", label, LIT)),
-        F.when(~suppressed, _t(uri, "oboInOwl:hasExactSynonym", F.col("pref_title"), LIT)),
-        F.when(
-            ~suppressed & has_included,
+        when(live, _t(uri, "rdfs:label", label, LIT)),
+        when(live, _t(uri, "oboInOwl:hasExactSynonym", "pref_title", LIT)),
+        when(
+            f"{live} AND {has_included}",
             _t(
                 uri,
                 "rdfs:comment",
-                "This term has one or more labels that end with ', INCLUDED'.",
+                q("This term has one or more labels that end with ', INCLUDED'."),
                 LIT,
             ),
         ),
     ]
 
     # 'consider' list for multi-replacement obsoletes (was its own
-    # filtered leg; the WHEN gate reproduces the filter row-wise).
-    consider = F.when(
-        is_obsolete & (n_replaced > 1),
-        F.transform(
-            F.coalesce(F.col("replaced_by"), F.array()),
-            lambda rep: _t(uri, "oboInOwl:consider", F.concat(F.lit("OMIM:"), rep)),
-        ),
-    ).otherwise(F.array())
+    # filtered leg; the CASE gate reproduces the filter row-wise).
+    replacement = _t(uri, "oboInOwl:consider", "concat('OMIM:', r)")
+    consider = (
+        f"CASE WHEN {is_obsolete} AND {n_replaced} > 1 THEN transform("
+        f"coalesce(replaced_by, array()), r -> {replacement}) ELSE array() END"
+    )
 
-    def _live_arr(col: str) -> Column:
-        # Source array for non-suppressed rows; suppressed rows emit
-        # nothing from it (the old legs filtered on ~suppressed).
-        return F.when(
-            ~suppressed, F.coalesce(F.col(col), F.array())
-        ).otherwise(F.array())
+    def live_arr(col: str) -> str:
+        # Source array for live rows; suppressed rows emit nothing
+        # from it (the old legs filtered them out).
+        return f"CASE WHEN {live} THEN coalesce({col}, array()) ELSE array() END"
 
-    def _plain_syns(col: str, pred: str) -> Column:
-        return F.transform(_live_arr(col), lambda v: _t(uri, pred, v, LIT))
+    def plain_syns(col: str, pred: str) -> str:
+        return f"transform({live_arr(col)}, v -> {_t(uri, pred, 'v', LIT)})"
 
-    def _syns_with_axiom(
-        col: str, pred: str, annos: list[tuple[str, Column, str]]
-    ) -> Column:
+    def syns_with_axiom(col: str, pred: str, annos: list[tuple[str, str, str]]) -> str:
         # Per array element: the synonym triple + its reification
         # axiom batch (what used to be two union legs per column).
-        return F.flatten(
-            F.transform(
-                _live_arr(col),
-                lambda v: F.array(
-                    _t(uri, pred, v, LIT),
-                    *_axiom_triple_cols(uri, F.lit(pred), v, LIT, annos),
-                ),
-            )
-        )
+        batch = [
+            _t(uri, pred, "v", LIT),
+            *_axiom_triple_cols(uri, q(pred), "v", LIT, annos),
+        ]
+        return f"flatten(transform({live_arr(col)}, v -> array({', '.join(batch)})))"
 
-    _omo = [("oboInOwl:hasSynonymType", F.lit("OMO:0003000"), URI)]
-    _dep = [("owl:deprecated", F.lit("true"), LIT)]
-    batch = F.concat(
-        F.array(*core),
+    omo = [("oboInOwl:hasSynonymType", q("OMO:0003000"), URI)]
+    dep = [("owl:deprecated", q("true"), LIT)]
+    batch = [
+        f"array({', '.join(core)})",
         consider,
-        _plain_syns("alt_titles", "oboInOwl:hasExactSynonym"),
-        _plain_syns("included_titles", "mondo:omim_included"),
-        _plain_syns("included_symbols", "mondo:omim_included"),
-        _syns_with_axiom("pref_symbols", "oboInOwl:hasExactSynonym", _omo),
-        _syns_with_axiom("alt_symbols", "oboInOwl:hasExactSynonym", _omo),
-        _syns_with_axiom("former_alt_titles", "oboInOwl:hasRelatedSynonym", _dep),
-        _syns_with_axiom(
-            "former_alt_symbols", "oboInOwl:hasRelatedSynonym", _dep + _omo
-        ),
-        _syns_with_axiom("former_included_titles", "mondo:omim_included", _dep),
-        _syns_with_axiom("former_included_symbols", "mondo:omim_included", _dep),
-    )
-    return (
-        entries.select(F.explode(batch).alias("t"))
-        .select([F.col(f"t.{f}").alias(f) for f in _FIELDS])
-        .filter(F.col("subject").isNotNull() & F.col("object").isNotNull())
-    )
+        plain_syns("alt_titles", "oboInOwl:hasExactSynonym"),
+        plain_syns("included_titles", "mondo:omim_included"),
+        plain_syns("included_symbols", "mondo:omim_included"),
+        syns_with_axiom("pref_symbols", "oboInOwl:hasExactSynonym", omo),
+        syns_with_axiom("alt_symbols", "oboInOwl:hasExactSynonym", omo),
+        syns_with_axiom("former_alt_titles", "oboInOwl:hasRelatedSynonym", dep),
+        syns_with_axiom("former_alt_symbols", "oboInOwl:hasRelatedSynonym", dep + omo),
+        syns_with_axiom("former_included_titles", "mondo:omim_included", dep),
+        syns_with_axiom("former_included_symbols", "mondo:omim_included", dep),
+    ]
+    return _inline(entries, f"concat({', '.join(batch)})")
 
 
 # ---------------------------------------------------------------------------
@@ -397,29 +396,20 @@ def emit_entry_classes(entries: DataFrame) -> DataFrame:
 
 
 def emit_exact_match(df: DataFrame, mim_col: str, obj: Column) -> DataFrame:
-    return _emit(
-        df, _t(F.concat(F.lit("OMIM:"), F.col(mim_col)), "skos:exactMatch", obj)
-    )
+    bound = _bind(df, _mim=F.col(mim_col), _obj=obj)
+    return _emit(bound, _t("concat('OMIM:', _mim)", "skos:exactMatch", "_obj"))
 
 
 def emit_packed_id_links(
     df: DataFrame, mim_col: str, packed_col: str, pred: str, obj_prefix: str
 ) -> DataFrame:
     """'|'-packed id cells → one triple per id (T11 unpack —
-    reference main.py:500-509)."""
-    exploded = df.filter(
-        F.col(packed_col).isNotNull() & (F.col(packed_col) != "")
-    ).select(
-        F.concat(F.lit("OMIM:"), F.col(mim_col)).alias("s"),
-        F.explode(F.split(F.col(packed_col), r"\|")).alias("id"),
-    ).filter(F.col("id") != "")
-    return exploded.select(
-        F.col("s").alias("subject"),
-        F.lit(pred).alias("predicate"),
-        F.concat(F.lit(obj_prefix), F.col("id")).alias("object"),
-        F.lit(URI).alias("obj_kind"),
-        F.lit(None).cast("string").alias("datatype"),
-    )
+    reference main.py:500-509); a row without a mim has no subject,
+    so the null filter drops its ids."""
+    i, sep = fresh("id"), q(r"\|")
+    ids = f"filter(split(`{packed_col}`, {sep}), {i} -> {i} != '')"
+    link = _t(f"concat('OMIM:', `{mim_col}`)", pred, f"concat({q(obj_prefix)}, {i})")
+    return _inline(df, f"transform({ids}, {i} -> {link})")
 
 
 # ---------------------------------------------------------------------------
@@ -428,19 +418,14 @@ def emit_packed_id_links(
 
 
 def emit_phenotypic_series(series: DataFrame, members: DataFrame) -> DataFrame:
-    ps_uri = F.concat(F.lit("OMIMPS:"), F.col("ps"))
+    ps_uri = "concat('OMIMPS:', ps)"
     head = _emit(
         series,
-        _t(ps_uri, "rdf:type", "owl:Class"),
-        _t(ps_uri, "rdfs:label", F.col("title"), LIT),
-        _t(ps_uri, "biolink:category", "biolink:Disease"),
+        _t(ps_uri, "rdf:type", q("owl:Class")),
+        _t(ps_uri, "rdfs:label", "title", LIT),
+        _t(ps_uri, "biolink:category", q("biolink:Disease")),
     )
     membership = _emit(
-        members,
-        _t(
-            F.concat(F.lit("OMIM:"), F.col("member_mim")),
-            "rdfs:subClassOf",
-            ps_uri,
-        ),
+        members, _t("concat('OMIM:', member_mim)", "rdfs:subClassOf", ps_uri)
     )
     return union_triples(head, membership)

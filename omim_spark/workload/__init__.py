@@ -82,6 +82,15 @@ _VERIFY_FIRST = [
     # readers.read_curator_tsv, and q_omim_ttl_lines (above) dedups
     # ahead of ttl_lines.  Oracle hash-match at sf0.001/0.01/0.1.
     "q_omim_typed_cache_scan",
+    # CHANGED: the emitters, CURIE rewrites, title steps, MIM-id repair
+    # and SPARQL rewrites are SQL text (sqltext.q quotes every
+    # constant) instead of Column trees.  Oracle hash-match at
+    # sf0.001/0.01/0.1.
+    "q_omim_parse_id",
+    "q_omim_title_former_suffix",
+    "q_omim_uri_curie_roundtrip",
+    "q_omim_xref_links",
+    "q_sparql_insert_flipped",
     # CHANGED in round 14: PQ-ADC scoring rewrite (spread scan,
     # zero-allocation index-walking aggregate, query-constant distance
     # table precomputed on the broadcast codebook side — bit-identical

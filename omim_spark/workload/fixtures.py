@@ -552,21 +552,16 @@ def q_omim_title_former_suffix(spark: SparkSession, sf_dir: str) -> DataFrame:
     title cells in the real ';;' micro-format.  The lowercase
     ', formerly' row proves the deliberate case-sensitivity split:
     routed to the former partition WITH its suffix intact."""
+    from omim_spark.sqltext import q
     from omim_spark.titles import partition_former, strip_suffix_markers
 
     raw = spark.createDataFrame(_FORMER_ROWS, "mim string, cell string")
-    items = F.filter(
-        F.transform(F.split(F.col("cell"), ";;"), lambda x: F.trim(x)),
-        lambda x: x != "",
-    )
+    items = "filter(transform(split(cell, ';;'), x -> trim(x)), x -> x != '')"
     current, former = partition_former(items)
 
     def side(arr, kind):
-        return raw.select(
-            "mim",
-            F.lit(kind).alias("kind"),
-            F.explode(arr).alias("t"),
-        ).select("mim", "kind", strip_suffix_markers(F.col("t")).alias("title"))
+        exploded = raw.selectExpr("mim", f"{q(kind)} AS kind", f"explode({arr}) AS t")
+        return exploded.selectExpr("mim", "kind", f"{strip_suffix_markers('t')} AS title")
 
     return (
         side(current, "current")
@@ -672,14 +667,16 @@ def q_omim_title_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cleaned = raw.withColumn(
         "title_clean",
-        cleanup_title(strip_suffix_markers(raw.title), _TITLE_CLEANUP_REPLACEMENTS),
+        F.expr(
+            cleanup_title(strip_suffix_markers("title"), _TITLE_CLEANUP_REPLACEMENTS)
+        ),
     )
-    return cleaned.select(
+    return cleaned.selectExpr(
         "id",
         "title_clean",
-        recapitalize_acronyms(cleaned.title_clean, cleaned.abbrevs).alias("title_final"),
+        f"{recapitalize_acronyms('title_clean', 'abbrevs')} AS title_final",
         # the detection core recapitalize unions with the known abbrevs
-        F.array_join(detect_abbreviations(raw.title), "|").alias("abbrevs"),
+        f"array_join({detect_abbreviations('title')}, '|') AS abbrevs",
     ).orderBy("id")
 
 
@@ -1405,15 +1402,10 @@ def q_omim_uri_curie_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omim_spark.curies import curie_to_uri, uri_to_curie
 
     df = spark.createDataFrame([(c,) for c in _CURIE_CASES], "curie string")
-    uri = curie_to_uri(F.col("curie"))
-    return (
-        df.select(
-            "curie",
-            uri.alias("uri"),
-            uri_to_curie(uri).alias("roundtrip"),
-        )
-        .orderBy("curie")
-    )
+    uri = curie_to_uri("curie")
+    return df.selectExpr(
+        "curie", f"{uri} AS uri", f"{uri_to_curie(uri)} AS roundtrip"
+    ).orderBy("curie")
 
 
 # ---------------------------------------------------------------------------

@@ -397,7 +397,7 @@ def q_omim_parse_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omim_spark.parse import parse_omim_id
 
     df = spark.createDataFrame(MALFORMED_ID_ROWS, ["raw"])
-    return df.select("raw", parse_omim_id(F.col("raw")).alias("fixed")).orderBy("raw")
+    return df.selectExpr("raw", f"{parse_omim_id('raw')} AS fixed").orderBy("raw")
 
 
 CACHE_ROWS = [

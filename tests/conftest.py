@@ -1,5 +1,8 @@
 import os
 import sys
+import threading
+from contextlib import contextmanager
+from types import SimpleNamespace
 
 import pytest
 
@@ -11,6 +14,36 @@ from omim_spark.session import get_spark  # noqa: E402
 @pytest.fixture(scope="session")
 def spark():
     return get_spark("omim-spark-tests", master="local[4]", shuffle_partitions=4)
+
+
+@contextmanager
+def _count_py4j_calls():
+    """Count the driver→JVM round trips (py4j ``GatewayClient.send_command``
+    calls) that the calling thread makes inside the block.  py4j sends
+    object releases from its own finalizer thread, whenever the garbage
+    collector gets to them, so those are not counted."""
+    from py4j.java_gateway import GatewayClient
+
+    counter = SimpleNamespace(n=0)
+    send = GatewayClient.send_command
+    caller = threading.get_ident()
+
+    def counting(self, *args, **kwargs):
+        if threading.get_ident() == caller:
+            counter.n += 1
+        return send(self, *args, **kwargs)
+
+    GatewayClient.send_command = counting
+    try:
+        yield counter
+    finally:
+        GatewayClient.send_command = send
+
+
+@pytest.fixture
+def py4j_calls():
+    """``with py4j_calls() as calls: …`` then read ``calls.n``."""
+    return _count_py4j_calls
 
 
 # ---------------------------------------------------------------------------

@@ -353,3 +353,27 @@ def test_build_without_spark_context(spark, omim_data_dir, tset, monkeypatch):
     monkeypatch.setattr(SparkSession, "sparkContext", property(no_context))
     r = build_graph(spark, omim_data_dir, version_date="2026-01-01")
     assert {(t.subject, t.predicate, t.object) for t in r.triples.collect()} == tset
+
+
+@pytest.mark.parametrize(
+    "packed_col, pred, prefix",
+    [("pmid_refs", "IAO:0000142", "PMID:"), ("umls_ids", "skos:exactMatch", "UMLS:")],
+)
+def test_packed_id_links_drop_rows_without_mim(spark, tmp_path, packed_col, pred, prefix):
+    # A cache row with a null mim has no subject: its ids must be
+    # dropped like every other emitter's null-subject triples, not
+    # written as a subject-less `pred obj .` TTL statement.
+    from omim_spark import triples as T
+
+    cache = spark.createDataFrame(
+        [("100100", "1||2"), (None, "3")], f"mim string, {packed_col} string"
+    )
+    links = T.emit_packed_id_links(cache, "mim", packed_col, pred, prefix)
+    assert sorted((r.subject, r.object) for r in links.collect()) == [
+        ("OMIM:100100", f"{prefix}1"),
+        ("OMIM:100100", f"{prefix}2"),
+    ]
+    out = tmp_path / "links.ttl"
+    write_ttl(links, str(out))
+    body = out.read_text().split("\n\n", 1)[1]
+    assert all(line.startswith("OMIM:") for line in body.splitlines())

@@ -1,0 +1,29 @@
+"""Driver round-trip budgets.  Building a plan must cost a handful of
+py4j calls per emitter, not one per expression node: the emitters,
+title transforms, association cascades and reports hand Spark SQL
+text, so a warm ``build_graph`` stays in the low thousands of calls
+(it was ~35k when every triple template was a tree of Columns)."""
+
+from __future__ import annotations
+
+from omim_spark import triples as T
+from omim_spark.entries import transform_entries
+from omim_spark.io import readers
+from omim_spark.parse import parse_mim_titles
+from omim_spark.pipeline import build_graph
+
+
+def test_entry_classes_plan_costs_a_few_calls(spark, omim_data_dir, py4j_calls):
+    entries = transform_entries(
+        parse_mim_titles(readers.read_mim_titles(spark, f"{omim_data_dir}/mimTitles.txt"))
+    )
+    with py4j_calls() as calls:
+        T.emit_entry_classes(entries)
+    assert calls.n <= 25
+
+
+def test_warm_build_graph_budget(spark, omim_data_dir, py4j_calls):
+    build_graph(spark, omim_data_dir, version_date="2026-01-01")  # warm-up
+    with py4j_calls() as calls:
+        build_graph(spark, omim_data_dir, version_date="2026-01-01")
+    assert calls.n <= 5000
