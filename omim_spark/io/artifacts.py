@@ -142,33 +142,32 @@ def _yaml_header(metadata: dict) -> str:
     return "\n".join(lines) + "\n"
 
 
-def write_sssom_tsv(
-    triples: DataFrame, path: str, metadata: dict | None = None
-) -> None:
-    """SSSOM sink: ``# ``-YAML metadata header, tab-separated columns,
-    rows ordered (subject_id, object_id).  ``metadata`` defaults to the
-    reference's data/metadata.sssom.yml fields (mapping_set_id /
-    license / curie_map); a passed dict is written as-is except
-    curie_map, which is always recomputed from the data so the header
-    never lies about the prefixes in the file."""
+# The reference's data/metadata.sssom.yml fields; write_sssom_tsv adds
+# a curie_map computed from the data, so the header never lies about
+# the prefixes in the file.
+SSSOM_METADATA = {
+    "mapping_set_id": (
+        "http://purl.obolibrary.org/obo/mondo/mondo-ingest/mapping/omim.sssom.tsv"
+    ),
+    "mapping_set_description": (
+        "The file `omim.sssom.tsv` flattens every skos:exactMatch edge "
+        "of the OMIM graph build. For data sources, assumptions, and "
+        "computations, refer to the repository README."
+    ),
+    "license": "https://creativecommons.org/licenses/by/4.0/",
+    "creator_id": "https://orcid.org/0000-0002-2906-7319",
+}
+
+
+def write_sssom_tsv(triples: DataFrame, path: str) -> None:
+    """SSSOM sink: ``# ``-YAML metadata header (:data:`SSSOM_METADATA`
+    plus the curie_map), tab-separated columns, rows ordered
+    (subject_id, object_id)."""
     # The rows lineage is executed twice (curie_map scan + the ordered
     # body stream) — checkpoint so the exactMatch filter, label
     # aggregate, and join run once.
     rows = sssom_rows(triples).transform(cut_lineage, eager=False)
-    meta = dict(metadata or {})
-    meta.setdefault(
-        "mapping_set_id",
-        "http://purl.obolibrary.org/obo/mondo/mondo-ingest/mapping/omim.sssom.tsv",
-    )
-    meta.setdefault(
-        "mapping_set_description",
-        "The file `omim.sssom.tsv` flattens every skos:exactMatch edge "
-        "of the OMIM graph build. For data sources, assumptions, and "
-        "computations, refer to the repository README.",
-    )
-    meta.setdefault("license", "https://creativecommons.org/licenses/by/4.0/")
-    meta.setdefault("creator_id", "https://orcid.org/0000-0002-2906-7319")
-    meta["curie_map"] = _used_curie_map(rows)
+    meta = {**SSSOM_METADATA, "curie_map": _used_curie_map(rows)}
     with open(path, "w") as f:
         f.write(_yaml_header(meta))
         f.write("\t".join(SSSOM_COLUMNS) + "\n")
@@ -261,9 +260,10 @@ def obograph_edges(triples: DataFrame) -> DataFrame:
     )
 
 
-def write_obograph_json(
-    triples: DataFrame, path: str, graph_id: str = "https://omim.org/"
-) -> None:
+OBOGRAPH_ID = "https://omim.org/"
+
+
+def write_obograph_json(triples: DataFrame, path: str) -> None:
     """Stream the obographs document to ``path``: nodes ordered by id,
     edges ordered by (sub, pred, obj) — byte-deterministic across runs
     and partitionings, bounded driver memory (one partition at a time
@@ -271,7 +271,7 @@ def write_obograph_json(
     nodes = obograph_nodes(triples).orderBy("id").select("json")
     edges = obograph_edges(triples).orderBy("sub", "pred", "obj").select("json")
     with open(path, "w") as f:
-        f.write('{"graphs":[{"id":%s,"nodes":[' % json.dumps(graph_id))
+        f.write('{"graphs":[{"id":%s,"nodes":[' % json.dumps(OBOGRAPH_ID))
         first = True
         for r in nodes.toLocalIterator():
             f.write(("" if first else ",") + r.json)

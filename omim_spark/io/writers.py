@@ -1,6 +1,10 @@
 """Sinks (SURVEY §2.1 S9-S13): deterministic Turtle serializer, ROBOT
 two-row-header templates, review TSV.
 
+The Turtle body is rendered by one ``selectExpr`` of two SQL-text
+expressions (sort key and line), so planning it costs a handful of
+driver calls; constants enter that text through ``sqltext.q``.
+
 Determinism contract (SURVEY §7.4): the reference's outputs are
 diffed across weekly releases, so a sink must impose a total order.
 Triples sort by (subject kind, subject, predicate, object).  A TSV
@@ -18,41 +22,24 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from omim_spark.curies import NAMESPACES
+from omim_spark.sqltext import q
 
 _XSD = "http://www.w3.org/2001/XMLSchema#"
 
-def _pred_order():
-    """Predicate ordering inside a subject block: rdf:type first
-    (Turtle idiom), then alphabetical."""
-    return F.when(F.col("predicate") == "rdf:type", F.lit("0")).otherwise(F.lit("1"))
 
-
-def _escape_literal(col):
-    out = F.replace(col, F.lit("\\"), F.lit("\\\\"))
-    out = F.replace(out, F.lit('"'), F.lit('\\"'))
-    out = F.replace(out, F.lit("\n"), F.lit("\\n"))
-    out = F.replace(out, F.lit("\r"), F.lit("\\r"))
-    out = F.replace(out, F.lit("\t"), F.lit("\\t"))
-    return out
-
-
-def _term(subject_like, kind_col, datatype_col=None):
-    """Render a term: bnode → _:id, literal → quoted+escaped(+^^dt),
-    everything else → CURIE as-is."""
-    lit_rendered = F.concat(F.lit('"'), _escape_literal(subject_like), F.lit('"'))
-    if datatype_col is not None:
-        lit_rendered = F.when(
-            datatype_col.isNotNull(),
-            F.concat(lit_rendered, F.lit("^^"), datatype_col),
-        ).otherwise(lit_rendered)
-    return (
-        F.when(kind_col == "bnode", F.concat(F.lit("_:"), subject_like))
-        .when(kind_col == "literal", lit_rendered)
-        .otherwise(subject_like)
-    )
+def _escape_literal(col: str) -> str:
+    """Turtle string escaping of ``col``, as SQL text."""
+    for raw, escaped in (
+        ("\\", "\\\\"),
+        ('"', '\\"'),
+        ("\n", "\\n"),
+        ("\r", "\\r"),
+        ("\t", "\\t"),
+    ):
+        col = f"replace({col}, {q(raw)}, {q(escaped)})"
+    return col
 
 
 def ttl_lines(triples: DataFrame) -> DataFrame:
@@ -67,24 +54,31 @@ def ttl_lines(triples: DataFrame) -> DataFrame:
     cut)."""
     # Subjects that are bnode objects elsewhere are bnode subjects here
     # (restriction/axiom nodes): detect by md5 shape (32 hex chars).
-    subj_is_bnode = F.col("subject").rlike("^[0-9a-f]{32}$")
-    subj = F.when(
-        subj_is_bnode, F.concat(F.lit("_:"), F.col("subject"))
-    ).otherwise(F.col("subject"))
-    obj = _term(F.col("object"), F.col("obj_kind"), F.col("datatype"))
-    line = F.concat_ws(" ", subj, F.col("predicate"), obj, F.lit("."))
-    body = triples.select(
-        F.concat_ws(
-            "\x00",
-            F.when(subj_is_bnode, "1").otherwise("0"),
-            F.col("subject"),
-            _pred_order(),
-            F.col("predicate"),
-            F.col("object"),
-        ).alias("sort_key"),
-        line.alias("line"),
+    subj_is_bnode = f"subject RLIKE {q('^[0-9a-f]{32}$')}"
+    subj = f"CASE WHEN {subj_is_bnode} THEN concat('_:', subject) ELSE subject END"
+    # A literal is quoted and escaped, with ^^datatype when it has one;
+    # a bnode is _:id; anything else is a CURIE as-is.
+    quote = q('"')
+    literal = (
+        f"concat({quote}, {_escape_literal('object')}, {quote},"
+        " coalesce(concat('^^', datatype), ''))"
     )
-    return body
+    obj = (
+        "CASE obj_kind WHEN 'bnode' THEN concat('_:', object)"
+        f" WHEN 'literal' THEN {literal} ELSE object END"
+    )
+    # rdf:type first inside a subject block (Turtle idiom), then
+    # alphabetical.
+    pred_order = "CASE WHEN predicate = 'rdf:type' THEN '0' ELSE '1' END"
+    subj_order = f"CASE WHEN {subj_is_bnode} THEN '1' ELSE '0' END"
+    sort_key = (
+        f"concat_ws({q(chr(0))}, {subj_order}, subject, {pred_order},"
+        " predicate, object)"
+    )
+    return triples.selectExpr(
+        f"{sort_key} AS sort_key",
+        f"concat_ws(' ', {subj}, predicate, {obj}, '.') AS line",
+    )
 
 
 def _ttl_header() -> str:

@@ -36,6 +36,7 @@ from omim_spark.queries import (
 )
 from omim_spark.operators.checkpoint import cut_lineage
 from omim_spark.session import parallelism
+from omim_spark.sqltext import q
 
 
 @dataclass
@@ -170,30 +171,26 @@ def build_graph(
     # Gene ids: OMIM gene → NCBIGENE exactMatch; phenotype → RO:0002200
     # has-phenotype restriction (reference main.py:385-394)
     parts.append(
-        T.emit_exact_match(
-            gene_map, "mim_number", F.expr("concat('NCBIGENE:', entrez_id)")
-        )
+        T.emit_exact_match(gene_map, "mim_number", "concat('NCBIGENE:', entrez_id)")
     )
     parts.append(
         T.emit_subclassof_restriction(
             pheno_map,
-            F.lit("RO:0002200"),
-            F.expr("concat('OMIM:', mim_number)"),
-            F.expr("concat('NCBIGENE:', entrez_id)"),
+            q("RO:0002200"),
+            "concat('OMIM:', mim_number)",
+            "concat('NCBIGENE:', entrez_id)",
         )
     )
     # HGNC symbol + id matches (main.py:390-394)
     parts.append(
         T.emit_exact_match(
-            hgnc_symbol_map, "mim", F.expr("concat('HGNC_symbol:', hgnc_symbol)")
+            hgnc_symbol_map, "mim", "concat('HGNC_symbol:', hgnc_symbol)"
         )
     )
     with_ids = hgnc_symbol_map.join(
         F.broadcast(hgnc_ids), F.expr("hgnc_symbol = symbol")
     )
-    parts.append(
-        T.emit_exact_match(with_ids, "mim", F.expr("concat('HGNC:', hgnc_id)"))
-    )
+    parts.append(T.emit_exact_match(with_ids, "mim", "concat('HGNC:', hgnc_id)"))
 
     # Phenotypic series (main.py:396-404)
     parts.append(T.emit_phenotypic_series(series, members))
@@ -205,9 +202,9 @@ def build_graph(
     parts.append(
         T.emit_subclassof_restriction(
             gene_cyto,
-            F.lit("RO:0002525"),  # is subsequence of
-            F.expr("concat('CHR:9606chr', cyto_location)"),
-            F.expr("concat('OMIM:', gene_mim)"),
+            q("RO:0002525"),  # is subsequence of
+            "concat('CHR:9606chr', cyto_location)",
+            "concat('OMIM:', gene_mim)",
         )
     )
 
@@ -220,26 +217,24 @@ def build_graph(
         f"action = '{assoc_mod.ACT_PROTECTED}' AND hgnc_id IS NOT NULL"
     )
     parts.append(
-        T.emit_exact_match(prot_match, "gene_mim", F.expr("concat('HGNC:', hgnc_id)"))
+        T.emit_exact_match(prot_match, "gene_mim", "concat('HGNC:', hgnc_id)")
     )
     noncausal = decided.filter(f"action = '{assoc_mod.ACT_NONCAUSAL}'")
     parts.append(
         T.emit_restriction_with_evidence(
             noncausal,
-            F.col("predicate"),
-            F.expr("concat('OMIM:', p_mim)"),
-            F.expr("concat('OMIM:', gene_mim)"),
-            F.col("evidence"),
-            F.col("orcid"),
+            "predicate",
+            "concat('OMIM:', p_mim)",
+            "concat('OMIM:', gene_mim)",
+            "evidence",
+            "orcid",
         )
     )
 
     # Protected MONDO mappings (main.py:490-497)
     parts.append(
         T.emit_exact_match(
-            protected.filter("mondo_id IS NOT NULL"),
-            "p_mim",
-            F.col("mondo_id"),
+            protected.filter("mondo_id IS NOT NULL"), "p_mim", "mondo_id"
         )
     )
 
@@ -283,7 +278,7 @@ def build_graph(
     # report to join them to (pinned by tests/test_pipeline.py::
     # TestQueries::test_rewrites_change_no_report_row).
     graph = T.union_triples(
-        all_triples, T.emit_exact_match(omim_to_mondo, "omim_mim", F.col("mondo_id"))
+        all_triples, T.emit_exact_match(omim_to_mondo, "omim_mim", "mondo_id")
     )
 
     # --- Reports -----------------------------------------------------------

@@ -219,15 +219,19 @@ def _words(col: str) -> str:
 
 def cleanup_title(col: str, word_replacements: dict[str, str] | None = None) -> str:
     """:func:`cleanup_title_py` with ``case_method='lower'``, under
-    which its stop-list step is a no-op and so is left out."""
+    which its stop-list step is a no-op and so is left out.  The
+    replacements are folded into the roman table, so each map literal
+    appears once in the text; a null replacement means none."""
+    repl = {k: v for k, v in (word_replacements or {}).items() if v is not None}
+    roman = {k: repl.get(v, v) for k, v in ROMAN_WORDS.items()}
     w, i = fresh("w"), fresh("i")
-    word = (
-        f"coalesce(CASE WHEN {i} > 0 AND {w} RLIKE {q(_ROMAN_SHAPE)}"
-        f" THEN try_element_at({_map_lit(ROMAN_WORDS)}, {w}) END, lower({w}))"
-    )
-    if word_replacements:
-        replaced = f"try_element_at({_map_lit(word_replacements)}, {word})"
-        word = f"coalesce({replaced}, {word})"
+    lookups = [
+        f"CASE WHEN {i} > 0 AND {w} RLIKE {q(_ROMAN_SHAPE)}"
+        f" THEN try_element_at({_map_lit(roman)}, {w}) END"
+    ]
+    if repl:
+        lookups.append(f"try_element_at({_map_lit(repl)}, lower({w}))")
+    word = f"coalesce({', '.join(lookups)}, lower({w}))"
     return f"array_join(transform({_words(col)}, ({w}, {i}) -> {word}), ' ')"
 
 

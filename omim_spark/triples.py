@@ -1,10 +1,12 @@
 """Triple emission (SURVEY §2.10 G1-G8): the reference's in-memory
 rdflib graph (omim2obo/main.py:202-213) becomes ONE triples DataFrame
 — (subject, predicate, object, obj_kind, datatype) — built as a
-union of SQL-text batches, one per emitter: each emitter hands Spark
-one ``inline(array(named_struct(…), …))`` expression over its source,
-so building a batch costs a handful of driver calls however many
-triple templates it holds.
+union of SQL-text batches, one per emitter.  SQL text in and out:
+every emitter takes its arguments as SQL expressions over its source
+(quote a constant with ``sqltext.q``) and splices them into one
+``inline(array(named_struct(…), …))`` expression, so building a batch
+costs a handful of driver calls however many triple templates it
+holds.
 
 Blank nodes are deterministic md5 ids (reference DeterministicBNode,
 main.py:178-186): a restriction's id hashes (on|pred|someValuesFrom),
@@ -24,8 +26,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from omim_spark.sqltext import fresh, q
 
@@ -44,7 +45,8 @@ def _t(s: str, p: str, o: str, kind: str = URI, dt: str | None = None) -> str:
 
 
 def _inline(df: DataFrame, batch: str) -> DataFrame:
-    """Explode a per-row array of triple structs; null elements
+    """Explode ``batch``, SQL text for a per-row array of triple
+    structs over ``df``'s columns, into triple rows; null elements
     (failed CASE gates) and null-subject or null-object triples are
     dropped."""
     return df.selectExpr(f"inline({batch})").filter(
@@ -53,13 +55,8 @@ def _inline(df: DataFrame, batch: str) -> DataFrame:
 
 
 def _emit(df: DataFrame, *triples: str) -> DataFrame:
+    """One triple row per ``_t`` SQL expression per row of ``df``."""
     return _inline(df, f"array({', '.join(triples)})")
-
-
-def _bind(df: DataFrame, **cols: Column) -> DataFrame:
-    """``df`` projected to the given Columns under their keyword names,
-    which the emitter's SQL text then reads."""
-    return df.select(*(c.alias(name) for name, c in cols.items()))
 
 
 def union_triples(*parts: DataFrame) -> DataFrame:
@@ -103,19 +100,18 @@ def _axiom_triple_cols(
 
 def emit_axiom_annotations(
     df: DataFrame,
-    source: Column,
-    prop: Column,
-    target: Column,
+    source: str,
+    prop: str,
+    target: str,
     target_kind: str,
-    anno_pred_vals: list[tuple[str, Column, str]],
+    anno_pred_vals: list[tuple[str, str, str]],
 ) -> DataFrame:
     """OWL reification (reference add_axiom_annotations main.py:120-134):
     bnode Axiom + annotatedSource/Property/Target + annotation pairs.
-    ``anno_pred_vals``: (predicate curie, value column, value kind)."""
-    values = {f"_a{i}": v for i, (_, v, _) in enumerate(anno_pred_vals)}
-    annos = [(p, name, kind) for (p, _, kind), name in zip(anno_pred_vals, values)]
-    bound = _bind(df, _s=source, _p=prop, _o=target, **values)
-    return _emit(bound, *_axiom_triple_cols("_s", "_p", "_o", target_kind, annos))
+    ``anno_pred_vals``: (predicate curie, value SQL, value kind)."""
+    return _emit(
+        df, *_axiom_triple_cols(source, prop, target, target_kind, anno_pred_vals)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -138,11 +134,10 @@ def _restriction_cols(pred: str, svf: str, on: str) -> list[str]:
 
 
 def emit_subclassof_restriction(
-    df: DataFrame, pred: Column, svf: Column, on: Column
+    df: DataFrame, pred: str, svf: str, on: str
 ) -> DataFrame:
     """bnode Restriction(onProperty, someValuesFrom) + rdfs:subClassOf."""
-    bound = _bind(df, _pred=pred, _svf=svf, _on=on)
-    return _emit(bound, *_restriction_cols("_pred", "_svf", "_on"))
+    return _emit(df, *_restriction_cols(pred, svf, on))
 
 
 def restrictions(triples: DataFrame) -> DataFrame:
@@ -198,24 +193,16 @@ def _restriction_with_evidence_cols(
 
 def emit_restriction_with_evidence(
     df: DataFrame,
-    pred: Column,
-    svf: Column,
-    on: Column,
-    evidence: Column,
-    orcid: Column | None = None,
+    pred: str,
+    svf: str,
+    on: str,
+    evidence: str,
+    orcid: str | None = None,
 ) -> DataFrame:
     """G4 (reference main.py:159-174): restriction + evidence axiom
     (biolink:has_evidence + rdfs:comment, optional oboInOwl:source).
     One projection pass over ``df`` (was: 3 union legs)."""
-    cols = {"_pred": pred, "_svf": svf, "_on": on, "_ev": evidence}
-    if orcid is not None:
-        cols["_orcid"] = orcid
-    return _emit(
-        _bind(df, **cols),
-        *_restriction_with_evidence_cols(
-            "_pred", "_svf", "_on", "_ev", None if orcid is None else "_orcid"
-        ),
-    )
+    return _emit(df, *_restriction_with_evidence_cols(pred, svf, on, evidence, orcid))
 
 
 # ---------------------------------------------------------------------------
@@ -395,9 +382,9 @@ def emit_entry_classes(entries: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def emit_exact_match(df: DataFrame, mim_col: str, obj: Column) -> DataFrame:
-    bound = _bind(df, _mim=F.col(mim_col), _obj=obj)
-    return _emit(bound, _t("concat('OMIM:', _mim)", "skos:exactMatch", "_obj"))
+def emit_exact_match(df: DataFrame, mim: str, obj: str) -> DataFrame:
+    """``OMIM:<mim> skos:exactMatch <obj>``."""
+    return _emit(df, _t(f"concat('OMIM:', {mim})", "skos:exactMatch", obj))
 
 
 def emit_packed_id_links(

@@ -353,6 +353,7 @@ def q_omim_axiom_synonyms(spark: SparkSession, sf_dir: str) -> DataFrame:
     triple plus a reified owl:Axiom (annotatedSource/Property/Target +
     hasSynonymType OMO:0003000) whose bnode id the oracle recomputes
     (18 expected rows = 3 pairs × 6 triples)."""
+    from omim_spark.sqltext import q
     from omim_spark.triples import LIT, URI, emit_axiom_annotations
 
     base = spark.createDataFrame(_SYN_ROWS, "s string, v string")
@@ -365,11 +366,11 @@ def q_omim_axiom_synonyms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ax = emit_axiom_annotations(
         base,
-        F.col("s"),
-        F.lit("oboInOwl:hasExactSynonym"),
-        F.col("v"),
+        "s",
+        q("oboInOwl:hasExactSynonym"),
+        "v",
         LIT,
-        [("oboInOwl:hasSynonymType", F.lit("OMO:0003000"), URI)],
+        [("oboInOwl:hasSynonymType", q("OMO:0003000"), URI)],
     )
     return (
         syn.unionByName(ax)

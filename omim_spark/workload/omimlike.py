@@ -522,10 +522,10 @@ def q_omim_restriction_emission(spark: SparkSession, sf_dir: str) -> DataFrame:
     assoc = spark.createDataFrame(BNODE_ROWS, ["p_mim", "pred", "gene_mim", "evidence"])
     triples = emit_restriction_with_evidence(
         assoc,
-        F.col("pred"),
-        F.concat(F.lit("OMIM:"), F.col("gene_mim")),
-        F.concat(F.lit("OMIM:"), F.col("p_mim")),
-        F.col("evidence"),
+        "pred",
+        "concat('OMIM:', gene_mim)",
+        "concat('OMIM:', p_mim)",
+        "evidence",
     )
     keep = triples.filter(
         F.col("predicate").isin(

@@ -207,7 +207,7 @@ class TestQueries:
         )
         graph = T.union_triples(
             build.triples,
-            T.emit_exact_match(mappings, "omim_mim", F.col("mondo_id")),
+            T.emit_exact_match(mappings, "omim_mim", "mondo_id"),
         )
         flipped = add_flipped_mondo_mappings(graph)
         links = add_hgnc_links(graph)
@@ -268,11 +268,10 @@ def test_restrictions_decode_what_the_emitters_encode(spark):
         [("50", "60", "ev5", None), ("51", "61", "ev6", "orcid:0000-0002")],
         "gene_mim string, p_mim string, evidence string, orcid string",
     )
-    on, pred, svf = F.col("on"), F.col("pred"), F.col("svf")
     emitted = T.union_triples(
-        T.emit_subclassof_restriction(plain, pred, svf, on),
+        T.emit_subclassof_restriction(plain, "pred", "svf", "on"),
         T.emit_restriction_with_evidence(
-            evid, pred, svf, on, F.col("evidence"), F.col("orcid")
+            evid, "pred", "svf", "on", "evidence", "orcid"
         ),
         T.emit_gene_disease_associations(assoc),
     )

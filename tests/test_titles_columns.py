@@ -168,3 +168,21 @@ def test_roman_words_exhaustive(spark):
     bad = [(r.title, r.clean) for r in got if r.clean != cleanup_title_py(r.title)]
     assert not bad
     assert len(got) == len(titles)
+
+
+def test_cleanup_title_null_replacement_means_none(spark):
+    # A null cap_name (known_capitalizations.tsv row with no value)
+    # leaves the word as cleaned, roman conversions included.
+    clean = cleanup_title("title", {"2b": None, "dna": "DNA", "xyz": None})
+    row = spark.createDataFrame([("DNA TYPE IIB XYZ",)], "title string").selectExpr(
+        f"{clean} AS clean"
+    ).first()
+    assert row.clean == "DNA type 2b xyz"
+
+
+def test_cleanup_title_writes_each_map_literal_once():
+    # The replacements are folded into the roman table, so the ~41 KB
+    # roman map literal is not repeated for the replacement lookup.
+    roman_key = '"XCIXA":'
+    assert cleanup_title("title").count(roman_key) == 1
+    assert cleanup_title("title", REPLACEMENTS).count(roman_key) == 1

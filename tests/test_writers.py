@@ -67,3 +67,33 @@ def test_write_csv_rfc4180_quoting(spark, tmp_path):
     # embedded newline stays inside one quoted cell
     assert '"line1\nline2"' in text
     assert text.splitlines()[-1] == "3,plain,ok"
+
+
+def test_ttl_lines_render_terms_and_order(spark):
+    # Literal escaping, ^^datatype, bnode terms, and concat_ws's null
+    # skipping; the sort key puts named subjects before bnodes and
+    # rdf:type first within a subject.
+    from omim_spark.io.writers import ttl_lines
+
+    bnode = "0123456789abcdef0123456789abcdef"
+    df = spark.createDataFrame(
+        [
+            ("OMIM:1", "rdfs:label", 'a "q" \\ b\nc\rd\te', "literal", None),
+            ("OMIM:1", "owl:deprecated", "true", "literal", "xsd:boolean"),
+            ("OMIM:1", "rdfs:subClassOf", bnode, "bnode", None),
+            (bnode, "owl:onProperty", "RO:1", "uri", None),
+            ("OMIM:1", "rdf:type", "owl:Class", "uri", None),
+            ("OMIM:2", "rdfs:label", None, "literal", "xsd:string"),
+        ],
+        "subject string, predicate string, object string, "
+        "obj_kind string, datatype string",
+    )
+    lines = [r.line for r in ttl_lines(df).orderBy("sort_key").collect()]
+    assert lines == [
+        "OMIM:1 rdf:type owl:Class .",
+        'OMIM:1 owl:deprecated "true"^^xsd:boolean .',
+        'OMIM:1 rdfs:label "a \\"q\\" \\\\ b\\nc\\rd\\te" .',
+        f"OMIM:1 rdfs:subClassOf _:{bnode} .",
+        "OMIM:2 rdfs:label .",
+        f"_:{bnode} owl:onProperty RO:1 .",
+    ]
