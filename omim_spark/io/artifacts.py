@@ -36,7 +36,7 @@ from omim_spark.curies import NAMESPACES
 from omim_spark.curies import curie_to_uri as _curie_to_uri_base
 from omim_spark.operators.checkpoint import cut_lineage
 from omim_spark.sqltext import q
-from omim_spark.triples import restrictions
+from omim_spark.triples import is_bnode, restrictions
 
 # The TTL sink binds NCBITaxon in its header rather than NAMESPACES;
 # the obographs export needs the expansion inline.
@@ -194,7 +194,7 @@ def obograph_nodes(triples: DataFrame) -> DataFrame:
         WITH classes AS (
           SELECT DISTINCT subject FROM {{t}}
           WHERE predicate = 'rdf:type' AND object = 'owl:Class'
-            AND contains(subject, ':')  -- bnode subjects are md5 hex
+            AND NOT {is_bnode('subject')}
         ),
         props AS (
           SELECT subject,

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 
 from omim_spark.curies import NAMESPACES
 from omim_spark.sqltext import q
+from omim_spark.triples import is_bnode
 
 _XSD = "http://www.w3.org/2001/XMLSchema#"
 
@@ -53,8 +54,8 @@ def ttl_lines(triples: DataFrame) -> DataFrame:
     (build_graph's triples are ``.distinct()``-ed before their lineage
     cut)."""
     # Subjects that are bnode objects elsewhere are bnode subjects here
-    # (restriction/axiom nodes): detect by md5 shape (32 hex chars).
-    subj_is_bnode = f"subject RLIKE {q('^[0-9a-f]{32}$')}"
+    # (restriction/axiom nodes).
+    subj_is_bnode = is_bnode("subject")
     subj = f"CASE WHEN {subj_is_bnode} THEN concat('_:', subject) ELSE subject END"
     # A literal is quoted and escaped, with ^^datatype when it has one;
     # a bnode is _:id; anything else is a CURIE as-is.

@@ -1,15 +1,8 @@
-"""Reusable large-scale operators: deduplication, similarity search,
-text analysis, multimodal column processing.
+"""Reusable large-scale operators that the workload queries and the
+build call: lineage cuts, near-duplicate and substring deduplication,
+multimodal column processing with its media codecs, profiling,
+sampling, skew-safe aggregation, bucketed layouts, as-of and interval
+joins, Bloom pruning and graph iteration.
 
-These are the production-shaped APIs behind the workload queries in
-``omim_spark.workload`` — parameterized, composable DataFrame→DataFrame
-transforms designed for 1000-executor / 100 TB deployments (see each
-module's scale notes)."""
-
-from omim_spark.operators import (  # noqa: F401
-    dedup,
-    multimodal,
-    profile,
-    similarity,
-    text,
-)
+Callers import the submodule they need; importing this package loads
+none of them."""

@@ -1,12 +1,12 @@
 """Bucketed-layout helpers: the storage-side answer to the one big
 shuffle left in the workload (fact⋈fact on orderkey).
 
-`write_bucketed` persists a table bucketed+sorted by the join key;
-`bucketed_join_ready` reads two such tables back — Spark then plans a
-SortMergeJoin with NO Exchange on either side (asserted in
-tests/test_bucketing.py).  At 100 TB this turns the recurring
-orders⋈lineitem shuffle into a metadata decision made once at write
-time; AQE handles everything else.
+`write_bucketed` persists a table bucketed+sorted by the join key; a
+join of two such tables read back with ``spark.table`` plans a
+SortMergeJoin with NO Exchange on either side (`exchange_count`,
+asserted in tests/test_bucketing.py).  At 100 TB this turns the
+recurring orders⋈lineitem shuffle into a metadata decision made once
+at write time; AQE handles everything else.
 
 Local note: bucketing requires saveAsTable (a warehouse catalog), so
 these helpers manage a named table, not a bare path.
@@ -14,7 +14,7 @@ these helpers manage a named table, not a bare path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -53,20 +53,6 @@ def write_bucketed(
         .format("parquet")
         .saveAsTable(table_name)
     )
-
-
-def bucketed_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    left_key: str,
-    right_key: str,
-) -> DataFrame:
-    """Join two same-bucket-count tables on their bucket keys —
-    planned shuffle-free (zero Exchange operators)."""
-    left = spark.table(left_table)
-    right = spark.table(right_table)
-    return left.join(right, left[left_key] == right[right_key])
 
 
 def exchange_count(df: DataFrame) -> int:

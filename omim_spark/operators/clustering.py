@@ -1,46 +1,21 @@
-"""Multi-column clustering rewrite (Z-order / interleaved-bits) — the
-remaining maintenance op a 100 TB table needs beyond small-file
-compaction: rewrite a table so files are clustered on SEVERAL columns
-at once, making per-file min/max stats tight on each of them and
-range/point predicates on ANY clustered column prune most files.
+"""Multi-column clustering (Z-order) key terms as SQL text.
 
-No reference counterpart (the reference is a ~30k-row curated ETL);
-this mirrors the OPTIMIZE ZORDER maintenance op of lakehouse table
-formats, re-expressed as plain DataFrame ops:
-
-1. bucket each clustering column into ``2**bits`` integer buckets —
-   ``minmax`` mode is pure integer arithmetic (bit-exact across
-   engines, used by the oracle-gated workload query); ``quantile``
-   mode uses approxQuantile boundaries (skew-robust — equal-count
-   buckets even when values cluster) at the cost of a sampled,
-   engine-specific boundary set;
-2. interleave the bucket bits into one Morton key (a JVM-side fold —
-   no UDF);
-3. ``repartitionByRange`` on the key + sort within partitions + write:
-   each output file covers a small hyper-rectangle of the clustered
-   column space.
-
-Everything is built-in expressions; the only shuffle is the range
-partitioning the rewrite exists to perform.
+``interleave_terms`` is the Morton interleave that the oracle-gated
+``workload/maintenance.q_zorder_locality`` query keys on: an explicit
+sum of shift/mask terms (no UDF) that evaluates identically in Spark
+SQL and DuckDB, so the key is bit-identical across engines.
+``minmax_bucket_sql`` is the integer-exact equal-width bucket in
+DuckDB SQL; the query inlines its own bucket templates so the two
+dialects' DIV spelling stays visible side by side.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-def minmax_bucket(col: str, lo: int, hi: int, bits: int) -> Column:
-    """Integer-exact equal-width bucket of ``col`` into [0, 2**bits):
-    ``((x - lo) * 2**bits) div (hi - lo + 1)`` — all integer ops, so
-    any engine computes the identical bucket."""
-    n = 1 << bits
-    width = hi - lo + 1
-    return F.expr(f"CAST((({col} - {lo}) * {n}) DIV {width} AS INT)")
-
 
 def minmax_bucket_sql(col: str, lo: int, hi: int, bits: int) -> str:
-    """The same bucket in ANSI SQL (DuckDB ``//`` integer division)."""
+    """Integer-exact equal-width bucket of ``col`` into [0, 2**bits):
+    ``((x - lo) * 2**bits) // (hi - lo + 1)`` in ANSI SQL (DuckDB
+    ``//`` integer division)."""
     n = 1 << bits
     width = hi - lo + 1
     return f"CAST((({col} - {lo}) * {n}) // {width} AS INT)"
@@ -58,75 +33,3 @@ def interleave_terms(bucket_cols: list[str], bits: int) -> str:
         for j, c in enumerate(bucket_cols):
             terms.append(f"(((({c} >> {i}) & 1)) << {i * k + j})")
     return " + ".join(terms)
-
-
-def zorder_key(
-    df: DataFrame,
-    cols: list[str],
-    bits: int = 8,
-    mode: str = "minmax",
-    rel_err: float = 0.01,
-) -> DataFrame:
-    """Attach ``_zkey`` (Morton key over ``cols``) to ``df``.
-
-    ``minmax``: one tiny agg collects per-column min/max (2 numbers per
-    column to the driver), buckets are equal-width integer arithmetic.
-    ``quantile``: approxQuantile boundaries give equal-COUNT buckets —
-    the production choice under skew; boundaries are embedded as an
-    array literal and the bucket is a JVM-side fold over it."""
-    out = df
-    bucket_names = []
-    if mode == "minmax":
-        stats = df.agg(
-            *[F.min(c).alias(f"_lo_{c}") for c in cols],
-            *[F.max(c).alias(f"_hi_{c}") for c in cols],
-        ).first()
-        for c in cols:
-            lo, hi = int(stats[f"_lo_{c}"]), int(stats[f"_hi_{c}"])
-            out = out.withColumn(f"_b_{c}", minmax_bucket(c, lo, hi, bits))
-            bucket_names.append(f"_b_{c}")
-    elif mode == "quantile":
-        n = 1 << bits
-        probs = [i / n for i in range(1, n)]
-        for c in cols:
-            bounds = df.approxQuantile(c, probs, rel_err)
-            arr = ",".join(repr(float(b)) for b in bounds)
-            # bucket = number of boundaries strictly below the value —
-            # a fold over the (2**bits - 1)-element literal array
-            out = out.withColumn(
-                f"_b_{c}",
-                F.expr(
-                    f"aggregate(array({arr}), 0, "
-                    f"(acc, b) -> acc + IF({c} > b, 1, 0))"
-                ),
-            )
-            bucket_names.append(f"_b_{c}")
-    else:
-        raise ValueError(f"unknown bucket mode: {mode}")
-    out = out.withColumn(
-        "_zkey", F.expr(interleave_terms(bucket_names, bits)).cast("long")
-    )
-    return out.drop(*bucket_names)
-
-
-def zorder_rewrite(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 16,
-    bits: int = 8,
-    mode: str = "quantile",
-) -> None:
-    """Rewrite ``df`` to ``path`` clustered on ``cols``: range-partition
-    by the Morton key (``n_files`` ranges), sort within each partition,
-    drop the key, write.  Each output file then covers a compact
-    hyper-rectangle of the clustered space, so per-file min/max stats
-    prune scans filtered on any of ``cols``."""
-    keyed = zorder_key(df, cols, bits=bits, mode=mode)
-    (
-        keyed.repartitionByRange(n_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -1,21 +1,21 @@
 """Deduplication operators for training-data pipelines.
 
-Tiers (cheapest first — compose as a funnel at 100 TB):
-1. exact_dedup            — content-hash groupBy (one shuffle).
-2. fingerprint_dedup      — order-insensitive token fingerprint.
-3. minhash_lsh_candidates — sub-quadratic near-dup candidates.
-4. jaccard_verify         — exact verification of candidates only.
-5. near_dup_clusters      — connected components over verified pairs,
-                            so whole duplicate *clusters* keep one
-                            canonical survivor.
+Near-duplicate tail (the workload's LSH queries build the shingles and
+candidate pairs; these finish the funnel):
+- jaccard_verify    — exact verification of candidate pairs only.
+- near_dup_clusters — connected components over verified pairs, so
+                      whole duplicate *clusters* keep one canonical
+                      survivor.
 
-Skew/scale guards built in:
-- hot-shingle document-frequency cap (boilerplate shingles explode the
-  inverted-index join; dropping shingles appearing in > max_df docs
-  bounds per-key fanout without hurting recall — near-dups still share
-  plenty of rare shingles);
-- 64-bit hashed join keys (shuffle bytes ∝ key width);
-- all hashing is built-in JVM (xxhash64/md5) — no Python in the path.
+Exact substring dedup (Lee et al. 2022), on the one shared
+``tokenize``:
+- token_spans / duplicate_spans — span census (detection).
+- merged_duplicate_spans        — maximal duplicated spans per doc.
+- excise_duplicate_spans        — keep-one-occurrence excision.
+- clean_corpus / clean_corpus_bucketed — the rewritten corpus.
+- decontaminate                 — n-gram overlap with a benchmark set.
+
+All hashing is built-in JVM (xxhash64/md5) — no Python in the path.
 """
 
 from __future__ import annotations
@@ -37,103 +37,6 @@ def tokenize(text_col: str = "text") -> Column:
     shifting positions).  Normalize whitespace upstream if collapsing
     is wanted."""
     return F.split(F.col(text_col), " ")
-
-
-def shingles(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    max_df: int | None = None,
-) -> DataFrame:
-    """(id, shingle-hash) relation: distinct word n-grams per doc,
-    hashed to 64 bits.  ``max_df`` drops shingles appearing in more
-    than that many documents (hot-key guard)."""
-    idx = ", ".join(f"element_at(tk, i + {k})" for k in range(n))
-    expr = (
-        f"array_distinct(transform(sequence(1, size(tk) - {n - 1}), "
-        f"i -> concat_ws(' ', {idx})))"
-    )
-    sh = (
-        df.withColumn("tk", tokenize(text_col))
-        .filter(F.size("tk") >= n)
-        .select(F.col(id_col).alias("id"), F.explode(F.expr(expr)).alias("s"))
-        .select("id", F.xxhash64("s").alias("s"))
-    )
-    if max_df is not None:
-        hot = sh.groupBy("s").count().filter(F.col("count") > max_df).select("s")
-        sh = sh.join(hot, "s", "left_anti")
-    return sh
-
-
-def exact_dedup(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Keep one deterministic survivor (min id) per exact content
-    hash.  Returns the surviving rows."""
-    canon = df.groupBy(F.md5(F.col(text_col).cast("binary")).alias("h")).agg(
-        F.min(id_col).alias(id_col)
-    )
-    return df.join(canon.select(id_col), id_col, "left_semi")
-
-
-def fingerprint_dedup(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Dedup on the sorted-distinct-token fingerprint (catches
-    word-order shuffles that exact hashing misses)."""
-    fp = F.md5(
-        F.array_join(F.sort_array(F.array_distinct(tokenize(text_col))), " ")
-    )
-    canon = df.groupBy(fp.alias("h")).agg(F.min(id_col).alias(id_col))
-    return df.join(canon.select(id_col), id_col, "left_semi")
-
-
-def minhash_signatures(
-    sh: DataFrame, n_hashes: int = 16
-) -> DataFrame:
-    """Wide minhash signature per id: one map-side-combinable
-    aggregation, no row explosion (columns h1..hN)."""
-    mins = [
-        F.min(F.xxhash64(F.concat(F.lit(f"{j}:"), F.col("s").cast("string")))).alias(
-            f"h{j}"
-        )
-        for j in range(1, n_hashes + 1)
-    ]
-    return sh.groupBy("id").agg(*mins)
-
-
-def minhash_lsh_candidates(
-    sh: DataFrame, n_hashes: int = 16, n_bands: int = 4
-) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b): docs sharing any LSH
-    band signature.  Shuffle cost: |docs|×|bands| short rows, bucket
-    fanout bounded by true near-dup cluster sizes."""
-    rows_per_band = n_hashes // n_bands
-    sig = minhash_signatures(sh, n_hashes)
-    band_pairs = ", ".join(
-        "{b}, concat_ws('|', {cols})".format(
-            b=b,
-            cols=", ".join(
-                f"h{b * rows_per_band + r + 1}" for r in range(rows_per_band)
-            ),
-        )
-        for b in range(n_bands)
-    )
-    bands = sig.select(
-        "id", F.expr(f"stack({n_bands}, {band_pairs}) AS (band, sig)")
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
 
 
 def jaccard_verify(
@@ -220,28 +123,6 @@ def near_dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         if changed == 0:
             break
     return labels
-
-
-def dedup_pipeline(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    n_hashes: int = 16,
-    n_bands: int = 4,
-    shingle_n: int = 3,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """Full near-dup funnel → surviving rows of ``df`` (one canonical
-    doc per near-dup cluster, plus all non-duplicates)."""
-    sh = shingles(df, id_col, text_col, shingle_n, max_shingle_df).transform(cut_lineage, eager=False)
-    cands = minhash_lsh_candidates(sh, n_hashes, n_bands)
-    verified = jaccard_verify(cands, sh, threshold)
-    clusters = near_dup_clusters(verified)
-    losers = clusters.filter(F.col("id") != F.col("cluster_id")).select(
-        F.col("id").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")
 
 
 def token_spans(

@@ -23,9 +23,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_PROFILE_FIELDS = ("n_nulls", "n_distinct", "min_str", "max_str")
-
-
 def profile(
     df: DataFrame,
     columns: Sequence[str] | None = None,

@@ -1,10 +1,8 @@
-"""Skew mitigation operators.
+"""Skew mitigation for aggregations.
 
 AQE's skew-join handling (enabled in session.py) covers sort-merge
-joins at runtime; explicit salting remains necessary when (a) the skew
-is in an AGGREGATION key, or (b) a broadcast isn't possible and a hot
-key would pin one task at 100 TB.  Both patterns here are pure
-DataFrame transforms with deterministic salts (hash-derived, not
+joins at runtime; explicit salting remains necessary when the skew is
+in an AGGREGATION key.  The salt is deterministic (hash-derived, not
 random — reruns and retries stay reproducible).
 """
 
@@ -14,33 +12,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT_COL = "__salt"
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi join where ``big`` has hot keys: big rows scatter across
-    ``n_salts`` sub-keys (deterministic hash of the whole row), the
-    small side replicates ×n_salts — every hot key's work spreads over
-    n_salts tasks instead of one.
-
-    Cost model: small side shuffles/broadcasts n_salts× its size;
-    worth it when max-key-frequency × row-width ≫ partition budget.
-    """
-    big_salted = big.withColumn(
-        SALT_COL,
-        F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(n_salts)).cast(
-            "int"
-        ),
-    )
-    small_salted = small.withColumn(
-        SALT_COL, F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    return big_salted.join(small_salted, [on, SALT_COL], how).drop(SALT_COL)
 
 
 def two_phase_agg(

@@ -41,10 +41,6 @@ GENEMAP2 = _s(
 
 PHENOTYPIC_SERIES = _s("ps_id", "col2", "col3")
 
-HGNC_COMPLETE_SET_MIN = _s("hgnc_id", "symbol")  # the two columns used
-
-SSSOM = _s("subject_id", "subject_label", "predicate_id", "object_id", "object_label")
-
 # Curator files (FIXTURES.md §8)
 PROTECTED_D2G = _s(
     "phenotype_mim", "mondo_id", "mondo_label", "type",
@@ -79,7 +75,8 @@ MAPPINGS_CACHE = StructType(
 
 # The engine's graph representation: one row per RDF triple.
 # obj_kind: 'uri' | 'bnode' | 'literal'.  Subjects that are bnodes use
-# the deterministic md5 ids from triples.py (reference main.py:178-186).
+# the deterministic md5 ids from triples.py (reference main.py:178-186);
+# ``triples.is_bnode`` tests that shape.
 TRIPLES = StructType(
     [
         StructField("subject", StringType(), False),

@@ -4,14 +4,16 @@ The built-in streaming aggregations in ``jobs.py`` cover windowed
 rollups; these operators cover the cases that need *explicit* keyed
 state across micro-batches:
 
-- ``running_user_totals``: per-key running (count, sum) emitted every
-  micro-batch — the live form of a grouped aggregate, with the state
-  schema under our control (so it can carry sketches, not just sums).
 - ``first_seen_filter``: streaming exact dedup — emit a key's row only
   the first time the key is ever seen; later occurrences are dropped.
-  This is the streaming twin of ``operators.dedup.exact_dedup`` and
-  the pattern a live ingest pipeline uses to keep a corpus duplicate-
-  free without re-scanning it.
+  This is the streaming twin of the batch ``workload/dedup.q_dedup_exact``
+  and the pattern a live ingest pipeline uses to keep a corpus
+  duplicate-free without re-scanning it.
+- ``neardup_signature_registry``: streaming LSH signature registry
+  (min-merge state, so any micro-batch split gives the same result).
+- ``substring_span_registry``: streaming span-owner registry for exact
+  substring dedup.
+- ``streaming_curation``: quality gate plus first-seen content dedup.
 
 State is Arrow-serialized pandas; one state row per key, sharded by
 the shuffle partitioning of the group key — at scale the state store
@@ -33,7 +35,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -66,52 +67,6 @@ def _with_ttl(fn, ttl_ms: int | None):
         yield from out
 
     return wrapped, GroupStateTimeout.ProcessingTimeTimeout
-
-_TOTALS_OUT = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-    ]
-)
-_TOTALS_STATE = StructType(
-    [StructField("n", LongType()), StructField("total", DoubleType())]
-)
-
-
-def _totals_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-    )
-
-
-def running_user_totals(
-    events: DataFrame, ttl_ms: int | None = None
-) -> DataFrame:
-    """Per-user running count and value sum, one updated row per key
-    per micro-batch (update semantics).  Input needs ``user_id`` and
-    ``value`` columns.  ``ttl_ms`` evicts users idle longer than the
-    TTL (their totals restart from zero on return)."""
-    fn, conf = _with_ttl(_totals_fn, ttl_ms)
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_TOTALS_OUT,
-            stateStructType=_TOTALS_STATE,
-            outputMode="update",
-            timeoutConf=conf,
-        )
-    )
-
 
 _SEEN_OUT = StructType(
     [

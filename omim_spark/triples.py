@@ -71,6 +71,14 @@ def bnode_axiom(source: str, prop: str, target: str) -> str:
     return f"md5(concat_ws('|', 'axiom', {source}, {prop}, {target}))"
 
 
+def is_bnode(col: str) -> str:
+    """SQL text: whether ``col`` holds a blank-node id, i.e. the
+    32-hex-digit md5 shape of ``bnode_restriction``/``bnode_axiom``.
+    Spelled without regex braces so it can sit inside a ``spark.sql``
+    template."""
+    return f"(length({col}) = 32 AND {col} RLIKE '^[0-9a-f]+$')"
+
+
 # ---------------------------------------------------------------------------
 # G1/G2: reified axiom annotations
 # ---------------------------------------------------------------------------

@@ -626,10 +626,9 @@ _FUNNEL_CTES = f"""
     """,
 )
 def q_dedup_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full near-dup funnel (operators.dedup.dedup_pipeline shape):
-    MinHash-LSH candidates → exact Jaccard verification → connected
-    components over verified pairs → one canonical survivor (min id)
-    per duplicate cluster.  The oracle replays the clustering with a
+    """The full near-dup funnel: MinHash-LSH candidates → exact
+    Jaccard verification → connected components over verified pairs →
+    one canonical survivor (min id) per duplicate cluster.  The oracle replays the clustering with a
     recursive CTE.
 
     Scale: the iterative min-label propagation is O(log diameter)

@@ -3,7 +3,7 @@
 Small-file compaction is exercised in tests/test_partition_pruning.py;
 this module puts the OTHER maintenance op a 100 TB table needs on the
 driver gate: the interleaved-bits clustering key that
-``operators/clustering.py:zorder_rewrite`` range-partitions by.  The
+an OPTIMIZE ZORDER rewrite range-partitions by.  The
 gate query computes the key with integer-exact min/max bucketing, so
 DuckDB reproduces every bit; the locality profile it returns (per
 z-cell row count + per-column extents) is exactly the statistic that
@@ -66,9 +66,8 @@ def q_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     text DuckDB evaluates — then per-z-cell count and column extents.
 
     This is the planning half of OPTIMIZE ZORDER: the rewrite
-    (operators/clustering.py:zorder_rewrite) range-partitions by this
-    key; the extents this query reports per cell are the per-file
-    min/max stats a reader would prune with."""
+    range-partitions by this key; the extents this query reports per
+    cell are the per-file min/max stats a reader would prune with."""
     ev = events_table(spark, sf_dir).select("event_id", "user_id")
     stats = ev.agg(
         F.min("user_id").alias("lo_u"),

@@ -3,9 +3,9 @@ sampling, chunking, sequence packing, PII redaction, repetition
 (Gopher-style) quality stats — the corpus-preparation operators a
 large-scale training pipeline runs, each oracle-checked vs DuckDB.
 
-Engine counterparts live in ``omim_spark.operators.sampling`` /
-``operators.text``; queries here inline the same expressions so the
-oracle SQL and the Spark plan stay visibly in lockstep.
+The sampling queries call ``omim_spark.operators.sampling``; the
+others inline their expressions so the oracle SQL and the Spark plan
+stay visibly in lockstep.
 
 Scale notes per query are inline; the common theme: every sampling
 decision hashes a stable key (never ``rand()``), fan-out ops are
@@ -217,8 +217,7 @@ def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     phone-shaped numbers, count matches per kind.  Patterns stay in the
     RE2-compatible subset (no lookarounds) so Java regex and DuckDB RE2
     agree character-for-character.  The email/phone corpus is
-    synthesized from customer rows so both engines see identical text.
-    Operator: operators/text.py:redact_pii."""
+    synthesized from customer rows so both engines see identical text."""
     email_pat = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
     phone_pat = r"\b\d{3}-\d{3}-\d{4}\b"
     c = table(spark, sf_dir, "customer")

@@ -888,7 +888,7 @@ def q_stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is one row per distinct key, sharded by the group-key
     shuffle; a production deployment adds a GroupStateTimeout TTL to
-    bound cardinality.  Batch twin: operators.dedup.exact_dedup."""
+    bound cardinality.  Batch twin: q_dedup_exact."""
     from ..streaming.stateful import first_seen_filter
 
     run_id = uuid.uuid4().hex[:12]

@@ -282,7 +282,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language ID (training-data pipeline op): stopword-hit
     ratio ≥ 10% → 'en'.  (A real n-gram profile model slots into the
-    same per-row expression shape; see omim_spark.operators.text.)"""
+    same per-row expression shape.)"""
     docs = table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     hits = F.size(F.filter(toks, lambda t: t.isin(*EN_STOPWORDS)))

@@ -117,21 +117,6 @@ class TestEntryCore:
 
 
 class TestSkewOperators:
-    def test_salted_join_matches_plain(self, spark):
-        from pyspark.sql import functions as F
-
-        big = spark.range(0, 10000).select(
-            (F.col("id") % 3).alias("k"), F.col("id").alias("v")
-        )
-        small = spark.createDataFrame(
-            [(0, "a"), (1, "b"), (2, "c")], ["k", "name"]
-        )
-        plain = big.join(small, "k").groupBy("name").count()
-        salted = skew.salted_join(big, small, "k", n_salts=4).groupBy("name").count()
-        assert sorted(map(tuple, plain.collect())) == sorted(
-            map(tuple, salted.collect())
-        )
-
     def test_two_phase_agg_matches_plain(self, spark):
         from pyspark.sql import functions as F
 

@@ -6,11 +6,7 @@ decision that removes the workload's one remaining big exchange at
 import pytest
 from pyspark.sql import functions as F
 
-from omim_spark.operators.bucketing import (
-    bucketed_join,
-    exchange_count,
-    write_bucketed,
-)
+from omim_spark.operators.bucketing import exchange_count, write_bucketed
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -31,7 +27,8 @@ def bucketed_tables(spark):
 class TestBucketedJoin:
     def test_join_is_shuffle_free(self, spark, bucketed_tables):
         left, right = bucketed_tables
-        joined = bucketed_join(spark, left, right, "o_orderkey", "l_orderkey")
+        orders, li = spark.table(left), spark.table(right)
+        joined = orders.join(li, orders.o_orderkey == li.l_orderkey)
         n_rows = joined.count()
         assert n_rows == spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
         assert exchange_count(joined) == 0  # co-located: no shuffle

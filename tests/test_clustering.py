@@ -1,23 +1,11 @@
-"""operators/clustering.py: Z-order key correctness + the pruning
-benefit the rewrite exists for."""
+"""operators/clustering.py: the Morton interleave that the oracle-gated
+z-order workload query keys on."""
 
 from __future__ import annotations
 
-import shutil
-import uuid
-from pathlib import Path
-
-import pytest
 from pyspark.sql import functions as F
 
-from omim_spark.operators.clustering import (
-    interleave_terms,
-    zorder_key,
-    zorder_rewrite,
-)
-
-SF_DIR = "/root/testdata/sf0.01"
-_SCRATCH = Path(__file__).resolve().parent.parent / ".scratch" / "clustering"
+from omim_spark.operators.clustering import interleave_terms
 
 
 def _py_morton(vals: list[int], bits: int) -> int:
@@ -41,70 +29,3 @@ class TestZorderKey:
         }
         for a, b in rows:
             assert got[(a, b)] == _py_morton([a, b], 3), (a, b)
-
-    def test_minmax_key_is_deterministic_and_bounded(self, spark):
-        from omim_spark.workload.registry import events_table
-
-        ev = events_table(spark, SF_DIR).select("event_id", "user_id")
-        k1 = zorder_key(ev, ["user_id", "event_id"], bits=4, mode="minmax")
-        k2 = zorder_key(ev, ["user_id", "event_id"], bits=4, mode="minmax")
-        s1 = k1.agg(F.sum("_zkey"), F.min("_zkey"), F.max("_zkey")).first()
-        s2 = k2.agg(F.sum("_zkey"), F.min("_zkey"), F.max("_zkey")).first()
-        assert s1 == s2
-        assert 0 <= s1[1] and s1[2] < (1 << 8)  # 2 cols x 4 bits
-
-    def test_quantile_buckets_equalize_skew(self, spark):
-        # heavily skewed column: minmax puts almost everything in
-        # bucket 0; quantile mode spreads it
-        df = spark.range(2000).select(
-            (F.col("id") * F.col("id")).alias("x"), F.col("id").alias("y")
-        )
-        q = zorder_key(df, ["x", "y"], bits=2, mode="quantile")
-        per_cell = q.groupBy("_zkey").count().collect()
-        assert max(r["count"] for r in per_cell) < 2000 * 0.5
-
-
-class TestZorderRewrite:
-    @pytest.fixture(scope="class")
-    def layouts(self, spark):
-        from omim_spark.workload.registry import events_table
-
-        base = _SCRATCH / f"z_{uuid.uuid4().hex[:12]}"
-        scattered, clustered = str(base / "scattered"), str(base / "clustered")
-        ev = events_table(spark, SF_DIR).select("event_id", "user_id", "value")
-        # scattered: 16 files, rows hashed by an unrelated expression
-        ev.repartition(16, F.crc32(F.col("value").cast("string"))).write.mode(
-            "overwrite"
-        ).parquet(scattered)
-        zorder_rewrite(
-            ev, clustered, ["user_id", "event_id"], n_files=16, mode="quantile"
-        )
-        yield spark, ev, scattered, clustered
-        shutil.rmtree(base, ignore_errors=True)
-
-    @staticmethod
-    def _files_touched(spark, path, predicate):
-        df = spark.read.parquet(path).filter(predicate)
-        return df.select(F.input_file_name()).distinct().count()
-
-    def test_content_preserved(self, layouts):
-        spark, ev, _, clustered = layouts
-        back = spark.read.parquet(clustered)
-        assert back.count() == ev.count()
-        assert back.exceptAll(ev).count() == 0
-
-    @pytest.mark.parametrize(
-        "col", ["user_id", "event_id"]
-    )
-    def test_point_range_prunes_on_both_columns(self, layouts, col):
-        spark, ev, scattered, clustered = layouts
-        lo, hi = ev.agg(F.min(col), F.max(col)).first()
-        # a range covering ~1/8 of the key space
-        width = (hi - lo) // 8
-        pred = (F.col(col) >= lo) & (F.col(col) < lo + width)
-        n_scattered = self._files_touched(spark, scattered, pred)
-        n_clustered = self._files_touched(spark, clustered, pred)
-        # scattered layout: matching rows land in (nearly) every file;
-        # clustered: the z-curve confines them to a fraction
-        assert n_scattered >= 12, n_scattered
-        assert n_clustered <= n_scattered // 2, (n_clustered, n_scattered)

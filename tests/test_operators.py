@@ -1,10 +1,10 @@
-"""Tests for the reusable scale operators (dedup, similarity, text,
-multimodal)."""
+"""Tests for the reusable scale operators (dedup, multimodal, sampling,
+joins, spans)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from omim_spark.operators import dedup, multimodal, similarity, text
+from omim_spark.operators import dedup, multimodal
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog"),
@@ -22,31 +22,23 @@ def docs(spark):
 
 
 class TestDedup:
-    def test_exact(self, docs):
-        out = sorted(r.doc_id for r in dedup.exact_dedup(docs).collect())
-        assert out == [1, 3, 4, 5, 6]  # 2 collapsed into 1
+    def test_lsh_candidates_and_verify(self, spark):
+        sh = spark.createDataFrame(
+            [(1, s) for s in (10, 11, 12, 13)]
+            + [(2, s) for s in (10, 11, 12, 13)]
+            + [(3, s) for s in (10, 11, 12, 14)]
+            + [(5, s) for s in (20, 21, 22)],
+            ["id", "s"],
+        )
+        cands = spark.createDataFrame([(1, 2), (1, 3), (1, 5)], ["id_a", "id_b"])
+        verified = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in dedup.jaccard_verify(cands, sh, threshold=0.5).collect()
+        }
+        # (1,5) shares nothing; (2,3) is similar but never a candidate
+        assert verified == {(1, 2): 1.0, (1, 3): pytest.approx(3 / 5)}
 
-    def test_fingerprint_catches_shuffle(self, docs):
-        out = sorted(r.doc_id for r in dedup.fingerprint_dedup(docs).collect())
-        assert 4 not in out  # word-order shuffle of doc 1
-        assert 2 not in out
-
-    def test_lsh_candidates_and_verify(self, docs):
-        sh = dedup.shingles(docs, n=2)
-        cands = dedup.minhash_lsh_candidates(sh, n_hashes=16, n_bands=8)
-        pairs = {(r.id_a, r.id_b) for r in cands.collect()}
-        assert (1, 2) in pairs  # exact dup must be a candidate
-        verified = dedup.jaccard_verify(cands, sh, threshold=0.5)
-        vpairs = {(r.id_a, r.id_b) for r in verified.collect()}
-        assert (1, 2) in vpairs
-        assert all(r.jaccard <= 1.0 for r in verified.collect())
-
-    def test_hot_shingle_cap(self, docs):
-        uncapped = dedup.shingles(docs, n=2)
-        capped = dedup.shingles(docs, n=2, max_df=2)
-        assert capped.count() < uncapped.count()
-
-    def test_clusters_and_pipeline(self, spark, docs):
+    def test_clusters_and_pipeline(self, spark):
         pairs = spark.createDataFrame(
             [(1, 2), (2, 6), (3, 9)], ["id_a", "id_b"]
         )
@@ -55,107 +47,6 @@ class TestDedup:
         }
         assert clusters[1] == clusters[2] == clusters[6] == 1
         assert clusters[3] == clusters[9] == 3
-        survivors = sorted(
-            r.doc_id
-            for r in dedup.dedup_pipeline(docs, threshold=0.5, n_hashes=16).collect()
-        )
-        assert 1 in survivors and 5 in survivors
-        assert 2 not in survivors  # exact dup never survives
-
-
-VECS = [
-    (0, [1.0, 0.0, 0.0, 0.0], 0),
-    (1, [0.9, 0.1, 0.0, 0.0], 0),
-    (2, [0.0, 1.0, 0.0, 0.0], 1),
-    (3, [0.0, 0.95, 0.05, 0.0], 1),
-    (4, [-1.0, 0.0, 0.0, 0.0], 2),
-]
-
-
-@pytest.fixture(scope="module")
-def vecs(spark):
-    from pyspark.sql.types import (
-        ArrayType, FloatType, IntegerType, LongType, StructField, StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("embedding", ArrayType(FloatType())),
-            StructField("label", IntegerType()),
-        ]
-    )
-    return spark.createDataFrame(VECS, schema)
-
-
-class TestSimilarity:
-    def test_cosine_topk_exact(self, vecs):
-        queries = vecs.filter(F.col("vec_id") == 0).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        out = similarity.cosine_topk(vecs, queries, k=2).collect()
-        ids = [r.vec_id for r in sorted(out, key=lambda r: -r.cosine)]
-        assert ids[0] == 0  # itself
-        assert ids[1] == 1  # nearest true neighbor
-
-    def test_bucketize_deterministic(self, vecs):
-        b1 = {r.vec_id: r.bucket for r in similarity.lsh_bucketize(vecs, dim=4).collect()}
-        b2 = {r.vec_id: r.bucket for r in similarity.lsh_bucketize(vecs, dim=4).collect()}
-        assert b1 == b2
-        assert all(0 <= v < 256 for v in b1.values())
-
-    def test_ann_finds_near_neighbor(self, vecs):
-        queries = vecs.filter(F.col("vec_id") == 0).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        out = similarity.ann_topk(vecs, queries, k=3, dim=4, multiprobe=True)
-        got = {r.vec_id for r in out.collect()}
-        assert 1 in got  # the true neighbor must be found
-
-    def test_centroids(self, vecs):
-        out = {r.label: r.centroid for r in similarity.label_centroids(vecs).collect()}
-        assert out[0][0] == pytest.approx(0.95)
-        assert len(out[0]) == 4
-
-    def test_neardup_pairs(self, vecs):
-        pairs = similarity.embedding_neardup_pairs(vecs, threshold=0.9, dim=4)
-        got = {(r.id_a, r.id_b) for r in pairs.collect()}
-        assert (0, 1) in got
-        assert (2, 3) in got
-
-
-class TestText:
-    def test_quality_features(self, docs):
-        out = {r.doc_id: r for r in text.quality_features(docs).collect()}
-        assert out[1].n_tokens == 9
-        assert out[1].stopword_ratio > 0.2  # 'the' ×2, 'over'... of 9
-        assert 0 <= out[1].quality_score <= 1
-
-    def test_language_scores(self, spark):
-        df = spark.createDataFrame(
-            [(1, "the cat and the dog of the house"), (2, "el perro y la casa de un es")],
-            ["doc_id", "text"],
-        )
-        out = {r.doc_id: r.lang_pred for r in text.language_scores(df).collect()}
-        assert out[1] == "en"
-        assert out[2] == "es"
-
-    def test_token_counts(self, docs):
-        out = {r.doc_id: r for r in text.token_counts(docs).collect()}
-        assert out[1].ws_tokens == 9
-        assert out[1].bpe_ish_tokens == 9
-
-    def test_fingerprint_order_insensitive(self, docs):
-        out = {r.doc_id: r.fingerprint for r in text.fingerprint(docs).collect()}
-        assert out[1] == out[4]  # shuffled doc has same fingerprint
-        assert out[1] != out[5]
-
-    def test_rolling_hashes(self, docs):
-        out = {r.doc_id: r.rolling_hashes for r in text.rolling_hashes(docs, window=3).collect()}
-        assert len(out[1]) == 7  # 9 tokens, window 3
-        # deterministic across calls
-        again = {r.doc_id: r.rolling_hashes for r in text.rolling_hashes(docs, window=3).collect()}
-        assert out == again
 
 
 MEDIA = [
@@ -422,27 +313,6 @@ class TestSamplingOps:
             packs.sort()
             for pid, tok in packs[:-1]:
                 assert tok >= 16 - 10  # a doc may straddle the cut
-
-
-class TestRedaction:
-    def test_redact_pii(self, spark):
-        from omim_spark.operators.text import redact_pii
-
-        df = spark.createDataFrame(
-            [
-                (1, "mail a.b@x.co or call 555-123-4567 ssn 123-45-6789"),
-                (2, "clean text with no pii at all"),
-            ],
-            ["doc_id", "text"],
-        )
-        out = {r.doc_id: r for r in redact_pii(df).collect()}
-        assert "[EMAIL]" in out[1].redacted
-        assert "[PHONE]" in out[1].redacted
-        assert "[SSN]" in out[1].redacted
-        assert (out[1].n_email, out[1].n_phone, out[1].n_ssn) == (1, 1, 1)
-        assert "a.b@x.co" not in out[1].redacted
-        assert out[2].redacted == out[2].text
-        assert (out[2].n_email, out[2].n_phone, out[2].n_ssn) == (0, 0, 0)
 
 
 class TestAsofJoin:

@@ -97,3 +97,26 @@ def test_ttl_lines_render_terms_and_order(spark):
         "OMIM:2 rdfs:label .",
         f"_:{bnode} owl:onProperty RO:1 .",
     ]
+
+
+def test_sinks_agree_on_blank_node_subjects(spark):
+    # The TTL body writes a bnode subject as _:id; the obographs export
+    # leaves it out of the named classes.  Both must classify a CURIE,
+    # an md5-shaped id and a bare word the same way.
+    from omim_spark.io.artifacts import obograph_nodes
+    from omim_spark.io.writers import ttl_lines
+
+    expected_bnode = {
+        "MONDO:0000001": False,
+        "0123456789abcdef0123456789abcdef": True,
+        "orphan": False,
+    }
+    for subject, is_bnode in expected_bnode.items():
+        df = spark.createDataFrame(
+            [(subject, "rdf:type", "owl:Class", "uri", None)],
+            "subject string, predicate string, object string, "
+            "obj_kind string, datatype string",
+        )
+        (line,) = [r.line for r in ttl_lines(df).collect()]
+        assert line.startswith("_:") == is_bnode, (subject, line)
+        assert obograph_nodes(df).count() == (0 if is_bnode else 1), subject
