@@ -20,10 +20,12 @@ chain (makefile:41-58):
   into edges, as robot's obographs writer does.
 
 Scale: both artifacts derive from the triples DataFrame with joins on
-the subject key only; serialization streams ordered partitions through
-the driver in bounded memory (same contract as write_tsv).
-Output is byte-deterministic: every row stream is totally ordered and
-blank-node ids are already deterministic md5 (triples.py:59-69).
+the subject key only.  Each is written by ``writers._write_ordered``,
+the one ordered-file writer: rows render as SQL text on the executors,
+each sorts and writes its key range, and the driver byte-copies the
+shards after the header.  Output is byte-deterministic: every row
+order is total and blank-node ids are already deterministic md5
+(triples.py:59-69).
 """
 
 from __future__ import annotations
@@ -34,6 +36,7 @@ from pyspark.sql import DataFrame
 
 from omim_spark.curies import NAMESPACES
 from omim_spark.curies import curie_to_uri as _curie_to_uri_base
+from omim_spark.io.writers import _write_ordered, tsv_line
 from omim_spark.operators.checkpoint import cut_lineage
 from omim_spark.sqltext import q
 from omim_spark.triples import is_bnode, restrictions
@@ -163,16 +166,14 @@ def write_sssom_tsv(triples: DataFrame, path: str) -> None:
     """SSSOM sink: ``# ``-YAML metadata header (:data:`SSSOM_METADATA`
     plus the curie_map), tab-separated columns, rows ordered
     (subject_id, object_id)."""
-    # The rows lineage is executed twice (curie_map scan + the ordered
-    # body stream) — checkpoint so the exactMatch filter, label
-    # aggregate, and join run once.
+    # The rows lineage is executed three times (curie_map scan, range
+    # sample, ordered write) — checkpoint so the exactMatch filter,
+    # label aggregate, and join run once.
     rows = sssom_rows(triples).transform(cut_lineage, eager=False)
     meta = {**SSSOM_METADATA, "curie_map": _used_curie_map(rows)}
-    with open(path, "w") as f:
-        f.write(_yaml_header(meta))
-        f.write("\t".join(SSSOM_COLUMNS) + "\n")
-        for r in rows.orderBy("subject_id", "object_id").toLocalIterator():
-            f.write("\t".join("" if v is None else str(v) for v in r) + "\n")
+    head = _yaml_header(meta) + "\t".join(SSSOM_COLUMNS) + "\n"
+    order_by = ["subject_id", "object_id"]
+    _write_ordered(path, [(head, rows, order_by, tsv_line(SSSOM_COLUMNS))])
 
 
 # ---------------------------------------------------------------------------
@@ -264,21 +265,12 @@ OBOGRAPH_ID = "https://omim.org/"
 
 
 def write_obograph_json(triples: DataFrame, path: str) -> None:
-    """Stream the obographs document to ``path``: nodes ordered by id,
-    edges ordered by (sub, pred, obj) — byte-deterministic across runs
-    and partitionings, bounded driver memory (one partition at a time
-    through ``toLocalIterator``, same contract as write_tsv)."""
-    nodes = obograph_nodes(triples).orderBy("id").select("json")
-    edges = obograph_edges(triples).orderBy("sub", "pred", "obj").select("json")
-    with open(path, "w") as f:
-        f.write('{"graphs":[{"id":%s,"nodes":[' % json.dumps(OBOGRAPH_ID))
-        first = True
-        for r in nodes.toLocalIterator():
-            f.write(("" if first else ",") + r.json)
-            first = False
-        f.write('],"edges":[')
-        first = True
-        for r in edges.toLocalIterator():
-            f.write(("" if first else ",") + r.json)
-            first = False
-        f.write("]}]}")
+    """Write the obographs document to ``path``: nodes ordered by id,
+    edges ordered by (sub, pred, obj), each section a comma-separated
+    JSON array rendered on the executors (``writers._write_ordered``)
+    — byte-deterministic across runs and partitionings, no row through
+    the driver."""
+    head = '{"graphs":[{"id":%s,"nodes":[' % json.dumps(OBOGRAPH_ID)
+    nodes = (head, obograph_nodes(triples), ["id"], "json")
+    edges = ('],"edges":[', obograph_edges(triples), ["sub", "pred", "obj"], "json")
+    _write_ordered(path, [nodes, edges], sep=",", tail="]}]}")

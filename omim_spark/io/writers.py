@@ -1,9 +1,12 @@
 """Sinks (SURVEY §2.1 S9-S13): deterministic Turtle serializer, ROBOT
-two-row-header templates, review TSV.
+two-row-header templates, review TSV, analysis CSV.
 
-The Turtle body is rendered by one ``selectExpr`` of two SQL-text
-expressions (sort key and line), so planning it costs a handful of
-driver calls; constants enter that text through ``sqltext.q``.
+Every ordered file — these four and the two release artifacts in
+``artifacts.py`` — is written by one helper, :func:`_write_ordered`:
+the executors render each row as one line of SQL text, sort their own
+key range and write it as a text shard, and the driver only
+byte-copies the shards in range order after the header.  No row passes
+through Python.  Constants enter the SQL text through ``sqltext.q``.
 
 Determinism contract (SURVEY §7.4): the reference's outputs are
 diffed across weekly releases, so a sink must impose a total order.
@@ -18,12 +21,14 @@ TTL.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 
 from pyspark.sql import DataFrame
 
 from omim_spark.curies import NAMESPACES
+from omim_spark.session import parallelism
 from omim_spark.sqltext import q
 from omim_spark.triples import is_bnode
 
@@ -92,38 +97,67 @@ def _ttl_header() -> str:
     return "\n".join(header) + "\n\n"
 
 
-# Range partitions of the TTL body, one text shard each.
-TTL_SHARDS = 16
+def _write_ordered(path: str, sections: list, sep: str = "\n", tail: str = "") -> None:
+    """Write ``path`` from ``(head, frame, order_by, line)`` sections:
+    each ``head`` as-is, then the frame's rows in ``order_by`` order,
+    each rendered by the SQL expression ``line``; ``tail`` closes the
+    file.
+
+    A frame is range-partitioned on ``order_by`` into
+    ``session.parallelism`` ranges, every executor sorts its own range
+    and writes it as a text shard, and the driver concatenates the
+    shards in range order with a bulk byte copy.  Ranges are ordered
+    and each is sorted, so the file is in order for any range count —
+    no single-task global sort, no row-at-a-time driver loop.  Cells
+    render as Spark ``CAST(… AS STRING)``, which for the string and
+    int columns the sinks write gives the bytes Python's ``str`` does.
+
+    A newline ``sep`` ends every row; any other separator (the ``,``
+    of a JSON array) goes between rows, so the one after a section's
+    last row is dropped.
+
+    The file appears at ``path`` only complete: it is written under a
+    temporary name beside ``path`` and renamed.  On any failure the
+    temporary file and the shards are deleted and the error re-raised."""
+    shard_dir, tmp = path + ".shards", path + ".tmp"
+    try:
+        with open(tmp, "wb") as f:
+            for i, (head, df, order_by, line) in enumerate(sections):
+                shards = os.path.join(shard_dir, str(i))
+                ranges = df.repartitionByRange(parallelism(df.sparkSession), *order_by)
+                rows = ranges.sortWithinPartitions(*order_by).selectExpr(line)
+                rows.write.mode("overwrite").text(shards, lineSep=sep)
+                f.write(head.encode())
+                body = f.tell()
+                for p in sorted(glob.glob(os.path.join(shards, "part-*"))):
+                    with open(p, "rb") as src:
+                        shutil.copyfileobj(src, f, length=1 << 20)
+                if sep != "\n" and f.tell() > body:
+                    f.seek(-len(sep), os.SEEK_END)
+                    f.truncate()
+            f.write(tail.encode())
+        os.replace(tmp, path)
+    finally:
+        shutil.rmtree(shard_dir, ignore_errors=True)
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def write_ttl(triples: DataFrame, path: str) -> None:
-    """Serialize to a single Turtle file.
+    """Serialize to a single Turtle file: the prefix header, then one
+    statement per triple in sort-key order."""
+    body = ttl_lines(triples)
+    _write_ordered(path, [(_ttl_header(), body, ["sort_key", "line"], "line")])
 
-    The body is range-partitioned on the sort key, every executor sorts
-    its own range and writes it as a text shard, and the driver
-    concatenates the header and the shards in range order with a bulk
-    byte copy.  Ranges are ordered and each is sorted, so the file is
-    in total order for any shard count — no single-task global sort,
-    no row-at-a-time driver loop."""
-    body = (
-        ttl_lines(triples)
-        .repartitionByRange(TTL_SHARDS, "sort_key")
-        .sortWithinPartitions("sort_key", "line")
-        .select("line")
-    )
-    shard_dir = path + ".shards"
-    body.write.mode("overwrite").text(shard_dir)
-    parts = sorted(
-        f
-        for f in os.listdir(shard_dir)
-        if f.startswith("part-") and not f.endswith(".crc")
-    )
-    with open(path, "wb") as f:
-        f.write(_ttl_header().encode())
-        for p in parts:
-            with open(os.path.join(shard_dir, p), "rb") as src:
-                shutil.copyfileobj(src, f, length=1 << 20)
-    shutil.rmtree(shard_dir)
+
+def _cells(cols: list[str]) -> list[str]:
+    """Each column of ``cols`` as a string cell, null as ``''``."""
+    return ["coalesce(CAST(`%s` AS STRING), '')" % c.replace("`", "``") for c in cols]
+
+
+def tsv_line(cols: list[str]) -> str:
+    """A TSV row of ``cols`` as SQL text: the cells joined by tabs."""
+    return f"concat_ws({q(chr(9))}, {', '.join(_cells(cols))})"
 
 
 def write_tsv(
@@ -131,34 +165,31 @@ def write_tsv(
 ) -> None:
     """Ordered single-file TSV (S10/S11): optional ROBOT directive
     second row (reference main.py:512-519,
-    mondo_omim_genes_robot_tsv.py:11-41).  Streams ordered partitions
-    through the driver (``toLocalIterator``) instead of collecting —
-    bounded driver memory for any input size."""
-    cols = df.columns
-    with open(path, "w") as f:
-        f.write("\t".join(cols) + "\n")
-        if subheader is not None:
-            f.write("\t".join(subheader) + "\n")
-        for r in df.orderBy(*order_by).toLocalIterator():
-            f.write(
-                "\t".join("" if v is None else str(v) for v in r) + "\n"
-            )
+    mondo_omim_genes_robot_tsv.py:11-41)."""
+    head_rows = [df.columns] + ([subheader] if subheader is not None else [])
+    head = "".join("\t".join(r) + "\n" for r in head_rows)
+    _write_ordered(path, [(head, df, order_by, tsv_line(df.columns))])
+
+
+# RFC-4180: a cell holding a comma, quote or line break is quoted, its
+# quotes doubled.
+_CSV_SPECIAL = ',"\n\r'
 
 
 def write_csv(df: DataFrame, path: str, order_by: list[str]) -> None:
     """Analysis CSV sink (S13; reference analyses write pandas
-    ``to_csv`` outputs, e.g. analyses/equivalency_cliques.py:141-150).
-    RFC-4180 quoting for cells containing comma/quote/newline; ordered,
-    single file, streamed through the driver in bounded memory."""
-
-    def cell(v) -> str:
-        s = "" if v is None else str(v)
-        if any(c in s for c in (",", '"', "\n", "\r")):
-            s = '"' + s.replace('"', '""') + '"'
-        return s
-
-    cols = df.columns
-    with open(path, "w") as f:
-        f.write(",".join(cell(c) for c in cols) + "\n")
-        for r in df.orderBy(*order_by).toLocalIterator():
-            f.write(",".join(cell(v) for v in r) + "\n")
+    ``to_csv`` outputs, e.g. analyses/equivalency_cliques.py:141-150):
+    ordered, single file, RFC-4180 quoting."""
+    header = ",".join(
+        '"' + c.replace('"', '""') + '"' if any(s in c for s in _CSV_SPECIAL) else c
+        for c in df.columns
+    )
+    special, dq, dq2 = q(f"[{_CSV_SPECIAL}]"), q('"'), q('""')
+    cells = [
+        f"CASE WHEN {c} RLIKE {special}"
+        f" THEN concat({dq}, replace({c}, {dq}, {dq2}), {dq}) ELSE {c} END"
+        for c in _cells(df.columns)
+    ]
+    _write_ordered(
+        path, [(header + "\n", df, order_by, f"concat_ws(',', {', '.join(cells)})")]
+    )

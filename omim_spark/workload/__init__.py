@@ -91,6 +91,11 @@ _VERIFY_FIRST = [
     "q_omim_uri_curie_roundtrip",
     "q_omim_xref_links",
     "q_sparql_insert_flipped",
+    # CHANGED: write_tsv and write_csv render rows as SQL text on the
+    # executors and write through the one ordered-file writer
+    # (io/writers._write_ordered) instead of a toLocalIterator relay.
+    # Oracle hash-match at sf0.001/0.01/0.1.
+    "q_omim_report_sinks",
     # CHANGED in round 14: PQ-ADC scoring rewrite (spread scan,
     # zero-allocation index-walking aggregate, query-constant distance
     # table precomputed on the broadcast codebook side — bit-identical

@@ -1194,11 +1194,11 @@ def q_omim_reader_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # S10/S11/S13/O2 under the gate (round 11): the report sinks' bytes.
-# write_tsv / write_csv stream driver-side, so the gate runs them on
-# scratch files and returns the FULL file content per artifact — the
-# oracle holds the exact expected bytes (ROBOT subheader prepend,
+# write_tsv / write_csv write files, not frames, so the gate runs them
+# on scratch files and returns the FULL file content per artifact —
+# the oracle holds the exact expected bytes (ROBOT subheader prepend,
 # None → '' in TSV, RFC-4180 quoting for comma/quote/newline in CSV,
-# order_by applied before the relay).
+# rows in order_by order across the written key ranges).
 # ---------------------------------------------------------------------------
 
 
@@ -1227,9 +1227,9 @@ def q_omim_report_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     mondo_omim_genes_robot_tsv.py:11-41 — and the RFC-4180 write_csv
     the analyses use) on scratch files and hash their exact bytes.
     Pins: header row, subheader PREPEND before data, order_by applied
-    before the driver relay (input rows arrive unsorted), None → ''
-    in TSV, and CSV quoting of comma / doubled-quote / embedded
-    newline cells."""
+    by the executors' range sort (input rows arrive unsorted), None →
+    '' in TSV, and CSV quoting of comma / doubled-quote / embedded
+    newline cells, all rendered as SQL text."""
     import os
     import shutil
     import tempfile

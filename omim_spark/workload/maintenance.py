@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from omim_spark.operators.clustering import interleave_terms, minmax_bucket_sql
+from omim_spark.operators.clustering import interleave_terms
 
 from .registry import events_table, register
 
@@ -95,9 +95,3 @@ def q_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("zkey")
     )
-
-
-# minmax_bucket_sql is the generic helper the docstring points users
-# at; the inline templates above keep the two dialects' DIV spelling
-# visibly side by side.
-__all__ = ["q_zorder_locality", "minmax_bucket_sql"]

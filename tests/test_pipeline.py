@@ -3,6 +3,7 @@ triples + reports, including the README.md:202-224 Prune belly golden
 (the restriction pair), entry emission per type, the deterministic TTL
 writer, and the SPARQL-equivalent queries."""
 
+import json
 import os
 
 import pytest
@@ -312,27 +313,57 @@ class TestDeterministicTtl:
         assert "OMIM:100100" in c1
 
     def test_sharded_writer_byte_identical(self, build, tmp_path, monkeypatch):
-        # One range shard is a single global sort: the reference every
-        # wider range split must reproduce byte for byte.
+        # One range is a single global sort: the reference every wider
+        # range split must reproduce byte for byte, for each rendering.
+        # The few-row input leaves most of 16 ranges empty, which pins
+        # the JSON array's commas across empty shards.
         import omim_spark.io.writers as W
+        from omim_spark.io.artifacts import write_obograph_json
 
-        outs = {}
-        for shards in (1, 4, 16):
-            monkeypatch.setattr(W, "TTL_SHARDS", shards)
-            out = tmp_path / f"s{shards}.ttl"
-            write_ttl(build.triples, str(out))
-            outs[shards] = out.read_bytes()
-            assert not (tmp_path / f"s{shards}.ttl.shards").exists()
-        assert outs[4] == outs[1]
-        assert outs[16] == outs[1]
+        cols = build.triples.columns
+        few = build.triples.where(
+            F.col("subject").isin("OMIM:100100", "OMIM:118494")
+        )
+        writers = {
+            "ttl": write_ttl,
+            "tsv": lambda df, path: W.write_tsv(df, path, order_by=cols),
+            "json": write_obograph_json,
+        }
+        for source, triples in (("all", build.triples), ("few", few)):
+            for kind, write in writers.items():
+                outs = {}
+                for ranges in (1, 4, 16):
+                    monkeypatch.setattr(W, "parallelism", lambda spark: ranges)
+                    out = tmp_path / f"{source}{ranges}.{kind}"
+                    write(triples, str(out))
+                    outs[ranges] = out.read_bytes()
+                    assert not (tmp_path / f"{out.name}.shards").exists()
+                assert outs[4] == outs[1], (source, kind)
+                assert outs[16] == outs[1], (source, kind)
+        doc = json.loads((tmp_path / "few16.json").read_text())["graphs"][0]
+        assert 0 < len(doc["nodes"]) < 16
+        assert 0 < len(doc["edges"]) < 16
 
     def test_empty_triples_write_header_only(self, build, tmp_path):
-        from omim_spark.io.writers import _ttl_header
+        from omim_spark.io.artifacts import OBOGRAPH_ID, write_obograph_json
+        from omim_spark.io.writers import _ttl_header, write_tsv
 
+        empty = build.triples.where(F.lit(False))
         out = tmp_path / "empty.ttl"
-        write_ttl(build.triples.where(F.lit(False)), str(out))
+        write_ttl(empty, str(out))
         assert out.read_text() == _ttl_header()
         assert not (tmp_path / "empty.ttl.shards").exists()
+
+        out = tmp_path / "empty.tsv"
+        sub = ["ID", "A rdfs:label", "", "", ""]
+        write_tsv(empty, str(out), order_by=["subject"], subheader=sub)
+        header = ["\t".join(empty.columns), "\t".join(sub), ""]
+        assert out.read_text().split("\n") == header
+
+        out = tmp_path / "empty.json"
+        write_obograph_json(empty, str(out))
+        doc = {"graphs": [{"id": OBOGRAPH_ID, "nodes": [], "edges": []}]}
+        assert out.read_text() == json.dumps(doc, separators=(",", ":"))
 
     def test_build_triples_are_a_set(self, build):
         # write_ttl renders every row it is given, so a duplicate

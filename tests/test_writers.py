@@ -1,12 +1,16 @@
-"""Sink tests (S9-S13): streamed single-file writers on multi-partition
-inputs — the scale contract is that the driver never materializes the
-frame (``toLocalIterator`` walks ordered partitions one at a time)."""
+"""Sink tests (S9-S13): single-file writers on multi-partition inputs.
+The scale contract is that no row passes through the driver: the
+executors render, sort and write key ranges as text shards, and the
+driver only concatenates the shards.  A file appears complete or not
+at all."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from omim_spark.io.writers import write_csv, write_tsv
+from omim_spark.io.artifacts import write_obograph_json
+from omim_spark.io.writers import write_csv, write_tsv, write_ttl
 
 
 def test_write_tsv_multipartition_streams_ordered(spark, tmp_path):
@@ -120,3 +124,28 @@ def test_sinks_agree_on_blank_node_subjects(spark):
         (line,) = [r.line for r in ttl_lines(df).collect()]
         assert line.startswith("_:") == is_bnode, (subject, line)
         assert obograph_nodes(df).count() == (0 if is_bnode else 1), subject
+
+
+@pytest.mark.parametrize(
+    "write",
+    [
+        lambda df, path: write_tsv(df, path, order_by=["subject"]),
+        write_obograph_json,
+        write_ttl,
+    ],
+    ids=["write_tsv", "write_obograph_json", "write_ttl"],
+)
+def test_failed_write_leaves_no_partial_artifact(spark, tmp_path, write):
+    # One row's evaluation raises while the shards are written: the
+    # call must fail with no file at the destination and no shards.
+    triples = spark.range(50).selectExpr(
+        "IF(id = 37, raise_error('boom'), concat('OMIM:', id)) AS subject",
+        "'rdf:type' AS predicate",
+        "'owl:Class' AS object",
+        "'uri' AS obj_kind",
+        "CAST(NULL AS STRING) AS datatype",
+    )
+    out = tmp_path / "artifact"
+    with pytest.raises(Exception, match="boom"):
+        write(triples, str(out))
+    assert sorted(p.name for p in tmp_path.iterdir()) == []
