@@ -16,11 +16,14 @@ from __future__ import annotations
 import argparse
 import os
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor, as_completed
+
+from pyspark import inheritable_thread_target
 
 from omim_spark.io.artifacts import write_obograph_json, write_sssom_tsv
 from omim_spark.io.writers import write_tsv, write_ttl
 from omim_spark.pipeline import build_graph
-from omim_spark.session import get_spark
+from omim_spark.session import get_spark, parallelism
 
 SUSCEPTIBILITY_SUBHEADER = [
     "ID",
@@ -81,9 +84,12 @@ def refresh_sources(
     # mkstemp creates 0600; restore the umask-derived mode a plain
     # open() would have produced so landing doesn't tighten perms.
     # NOTE: the probe (set-then-restore) briefly widens the
-    # process-wide umask — safe only because refresh_sources runs in
-    # the single-threaded CLI; do not call from threaded code without
-    # replacing the probe with a stat of an existing file (r9 ADVICE).
+    # process-wide umask — safe only because main() calls
+    # refresh_sources before it starts the sink pool, when no other
+    # thread of the process creates files (the JVM is its own process,
+    # with its own umask); do not call it while other threads write
+    # without replacing the probe with a stat of an existing file (r9
+    # ADVICE).
     umask = os.umask(0)
     os.umask(umask)
     for fname, text in staged:
@@ -108,6 +114,36 @@ def _no_network_transport(url: str) -> str:
         "transport= to cli.main(), or run with --use-cache to build "
         "from the already-landed --data-dir"
     )
+
+
+def _run_sinks(spark, sinks: list[Callable[[], None]]) -> None:
+    """Run ``sinks`` on ``min(len(sinks), parallelism)`` threads, in
+    list order.  Each sink starts with the calling thread's Spark local
+    properties (job group, description) and tags.  The first failure
+    cancels the sinks not yet started; once the running ones have
+    returned, that failure is re-raised.
+
+    Running sinks are not interrupted: a task killed while it sets up
+    can create its shard after ``_write_ordered`` has removed the
+    shard directory, leaving it behind, and ``interruptAll`` would
+    also cancel jobs the caller runs on the same session."""
+
+    def inheriting(sink: Callable[[], None]) -> Callable[[], None]:
+        # one wrapper per sink, so each gets its own copy of the
+        # properties; with threads not pinned (PYSPARK_PIN_THREAD=false)
+        # PySpark returns the session itself and there is none to copy
+        wrap = inheritable_thread_target(spark)
+        return wrap(sink) if callable(wrap) else sink
+
+    with ThreadPoolExecutor(min(len(sinks), parallelism(spark))) as pool:
+        futures = [pool.submit(inheriting(s)) for s in sinks]
+        try:
+            for future in as_completed(futures):
+                future.result()
+        except BaseException:
+            for future in futures:
+                future.cancel()
+            raise
 
 
 def main(
@@ -142,33 +178,42 @@ def main(
     os.makedirs(args.out_dir, exist_ok=True)
     result = build_graph(spark, args.data_dir, args.version_date)
 
-    write_ttl(result.triples, os.path.join(args.out_dir, "omim.ttl"))
-    # Release-artifact tail of the reference makefile (makefile:41-58):
-    # obographs JSON (robot convert) + SSSOM mapping set (sssom parse).
-    write_obograph_json(result.triples, os.path.join(args.out_dir, "omim.json"))
-    write_sssom_tsv(result.triples, os.path.join(args.out_dir, "omim.sssom.tsv"))
-    write_tsv(
-        result.review_cases,
-        os.path.join(args.out_dir, "review.tsv"),
-        order_by=["classCode", "value"],
-    )
+    def out(name: str) -> str:
+        return os.path.join(args.out_dir, name)
+
     susc = result.susceptibility.selectExpr(
         "mondo_id",
         "'http://purl.obolibrary.org/obo/mondo#omim_susceptibility' AS subset",
         "omim_id",
     )
-    write_tsv(
-        susc,
-        os.path.join(args.out_dir, "mondo-omim-susceptibility-subset.robot.tsv"),
-        order_by=["mondo_id", "omim_id"],
-        subheader=SUSCEPTIBILITY_SUBHEADER,
-    )
-    for name, df in result.reports.items():
-        write_tsv(
-            df,
-            os.path.join(args.out_dir, f"{name}.tsv"),
-            order_by=df.columns[:1],
-        )
+    # The release artifacts (TTL, obographs JSON, SSSOM mapping set;
+    # reference makefile:41-58), the review and ROBOT subset TSVs, and
+    # the reports: each reads the all_triples cut or a cached frame and
+    # writes its own file, so they run concurrently, longest first.
+    # Each looks its writer up in this module when it runs, so a writer
+    # patched on the module (perfbench's spans, the tests) is the one
+    # called.
+    sinks = [
+        lambda: write_obograph_json(result.triples, out("omim.json")),
+        *(
+            lambda df=df, path=out(f"{name}.tsv"): write_tsv(
+                df, path, order_by=df.columns[:1]
+            )
+            for name, df in result.reports.items()
+        ),
+        lambda: write_ttl(result.triples, out("omim.ttl")),
+        lambda: write_sssom_tsv(result.triples, out("omim.sssom.tsv")),
+        lambda: write_tsv(
+            result.review_cases, out("review.tsv"), order_by=["classCode", "value"]
+        ),
+        lambda: write_tsv(
+            susc,
+            out("mondo-omim-susceptibility-subset.robot.tsv"),
+            order_by=["mondo_id", "omim_id"],
+            subheader=SUSCEPTIBILITY_SUBHEADER,
+        ),
+    ]
+    _run_sinks(spark, sinks)
     print(f"Build complete → {args.out_dir}")
 
 

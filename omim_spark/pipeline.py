@@ -14,7 +14,8 @@ The build's barriers, in order:
 - the ``all_triples`` cut: the distinct union, materialized eagerly,
   which every sink reads;
 - the reports: self-joins over ``all_triples`` plus the SSSOM
-  mappings, planned lazily and run by whoever writes them.
+  mappings, planned lazily and run when written — by the CLI's sink
+  pool (``cli._run_sinks``), concurrently with the other artifacts.
 """
 
 from __future__ import annotations

@@ -5,7 +5,10 @@ pipeline tests bypass."""
 
 from __future__ import annotations
 
+import threading
 from pathlib import Path
+
+import pytest
 
 from omim_spark import cli
 
@@ -47,10 +50,69 @@ def test_cli_builds_all_artifacts(spark, omim_data_dir, tmp_path):
 
 
 def test_cli_deterministic_ttl(spark, omim_data_dir, tmp_path):
+    """Two builds write the same bytes to every artifact, so sinks that
+    run concurrently do not interfere."""
     a, b = tmp_path / "a", tmp_path / "b"
     for d in (a, b):
         cli.main(["--data-dir", str(omim_data_dir), "--out-dir", str(d), "-c"])
-    assert (a / "omim.ttl").read_bytes() == (b / "omim.ttl").read_bytes()
+    names = sorted(p.name for p in a.iterdir())
+    assert len(names) == 8
+    assert sorted(p.name for p in b.iterdir()) == names
+    for name in names:
+        assert (a / name).read_bytes() == (b / name).read_bytes(), name
+
+
+def test_cli_first_sink_failure_fails_the_build(
+    spark, omim_data_dir, tmp_path, monkeypatch
+):
+    """A sink that raises fails the build with its own exception, and
+    the build leaves no temporary file, shard directory, running job or
+    pool thread behind."""
+    write_tsv = cli.write_tsv
+
+    def failing(df, path, *args, **kwargs):
+        if Path(path).name == "review.tsv":
+            raise RuntimeError("review sink failed")
+        write_tsv(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(cli, "write_tsv", failing)
+    threads = threading.active_count()
+    out = tmp_path / "out"
+    with pytest.raises(RuntimeError, match="review sink failed"):
+        cli.main(["--data-dir", str(omim_data_dir), "--out-dir", str(out), "-c"])
+    assert not list(out.glob("*.tmp")) and not list(out.glob("*.shards"))
+    assert not (out / "review.tsv").exists()
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert threading.active_count() == threads
+
+
+def test_cli_sink_jobs_keep_the_callers_job_group(spark, omim_data_dir, tmp_path):
+    """Every job of the build, the sinks' on their pool threads
+    included, runs in the caller's job group."""
+    sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("cli-build", "cli.main under a job group")
+    try:
+        cli.main(
+            ["--data-dir", str(omim_data_dir), "--out-dir", str(tmp_path / "o"), "-c"]
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("cli-build")
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+
+
+def test_cli_builds_without_pinned_threads(
+    spark, omim_data_dir, tmp_path, monkeypatch
+):
+    """With PYSPARK_PIN_THREAD=false, ``inheritable_thread_target``
+    returns the session it is given instead of a wrapper; the sinks
+    then run unwrapped and the build still writes all eight files."""
+    monkeypatch.setattr(cli, "inheritable_thread_target", lambda f=None: f)
+    out = tmp_path / "out"
+    cli.main(["--data-dir", str(omim_data_dir), "--out-dir", str(out), "-c"])
+    assert len(list(out.iterdir())) == 8
 
 
 class TestCacheVsFetch:
